@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -266,8 +267,7 @@ def fn_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BIGINT and the SUM is order-independent (registry rule)
     sd_units = F.when(
         (k % 7) != 0,
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("value") * 100).cast("long")
+        half_away_long(F.col("value") * 100)
         * (F.lit(60) / (k % 7)).cast("long"),
     ).otherwise(F.lit(0))
     return (
@@ -387,8 +387,7 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct(F.collate("styled", "UTF8_BINARY")).alias("n_spellings"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+            F.sum(half_away_long(F.col("value") * 100)).alias("sum_cents"),
         )
         .select(
             F.lower(F.col("k").cast("string")).alias("event_type_ci"),

@@ -28,6 +28,35 @@ from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
 
+def half_away_long(x: Column) -> Column:
+    """round(x) to a long, half away from zero: the value of
+    `F.round(x).cast("long")` for every double, without its cost.
+
+    Spark compiles a double round() to `BigDecimal.valueOf(x).setScale(0,
+    HALF_UP)` — one Double.toString and one BigDecimal per row, ~0.6 s of
+    an 8M-row flagship scan. rint/abs/signum are inline JVM math instead.
+    rint rounds half to even, so exact .5 ties are re-rounded away from
+    zero; every k.5 below 2^52 is an exact double, so the tie test is exact
+    and x ± 0.5 lands exactly on the integer. At |x| >= 2^52 every double
+    is an integer and rint is the identity. NULL stays NULL; NaN and ±Inf
+    still raise CAST_OVERFLOW at the ANSI cast. DuckDB's
+    CAST(round(x) AS BIGINT) rounds half away too, so oracles keep that
+    spelling. Pinned against F.round by
+    tests/test_boundary_properties.py::test_half_away_long_matches_round.
+    """
+    r = F.rint(x)
+    return (
+        F.when(F.abs(x - r) == 0.5, x + F.signum(x) * 0.5).otherwise(r).cast("long")
+    )
+
+
+def onebrc_mean(s: Column, n: Column) -> Column:
+    """1-dp mean of an exact integer-cents sum `s` over `n` rows, rounded
+    half away from zero in integer arithmetic; `+ 0.0` folds -0.0."""
+    tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
+    return F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0
+
+
 def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
     """The flagship logical plan over any (key, value) frame.
 
@@ -43,20 +72,17 @@ def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
     plan is unchanged: same partial→final hash aggregate, the sum is just
     a long instead of a double.
     """
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    cents = F.round(F.col(value) * 100).cast("long")
-    s, n = F.col("_s"), F.col("_n")
-    tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
-    mean = (F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0).alias("mean")
     return (
         df.groupBy(F.col(key).alias("station"))
         .agg(
             F.min(value).alias("min"),
-            F.sum(cents).alias("_s"),
+            F.sum(half_away_long(F.col(value) * 100)).alias("_s"),
             F.count(value).alias("_n"),
             F.max(value).alias("max"),
         )
-        .select("station", "min", mean, "max")
+        .select(
+            "station", "min", onebrc_mean(F.col("_s"), F.col("_n")).alias("mean"), "max"
+        )
         .orderBy("station")
     )
 
@@ -194,8 +220,7 @@ def agg_sum_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits depend on partition merge order (registry rule; the
     ml_temperature_mix ±1 flip was this class)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    price_cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_cents = half_away_long(F.col("l_extendedprice") * 100)
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -251,10 +276,9 @@ def agg_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~7e7 rows per group at max values; past that widen the SUM to
     DECIMAL(38,0) on both engines (same plan shape)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    pc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    tc = F.round(F.col("l_tax") * 100).cast("long")
+    pc = half_away_long(F.col("l_extendedprice") * 100)
+    dc = half_away_long(F.col("l_discount") * 100)
+    tc = half_away_long(F.col("l_tax") * 100)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -400,8 +424,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.cube("l_returnflag", "l_linestatus")
         # unrounded exact-integer quotient (see agg_tpch_q1's avg note)
         .agg((
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(half_away_long(F.col("l_extendedprice") * 100))
             / F.count(F.lit(1))
             / F.lit(100.0)
         ).alias("avg_price"))
@@ -466,8 +489,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines for identical sorted input (sanctioned exception,
     registry rules)."""
     ev = load_table(spark, sf_dir, "events")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    qv = F.round(F.col("value") * 100).cast("long")
+    qv = half_away_long(F.col("value") * 100)
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(qv).alias("s1"),
@@ -648,11 +670,10 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     covar(points, points)/1e4, slope(cents per unit)/1e2; corr is
     scale-invariant so the quantization cancels exactly."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    x = F.round(F.col("l_quantity")).cast("long")
-    y = F.round(F.col("l_extendedprice") * 100).cast("long")
-    d = F.round(F.col("l_discount") * 100).cast("long")
-    t = F.round(F.col("l_tax") * 100).cast("long")
+    x = half_away_long(F.col("l_quantity"))
+    y = half_away_long(F.col("l_extendedprice") * 100)
+    d = half_away_long(F.col("l_discount") * 100)
+    t = half_away_long(F.col("l_tax") * 100)
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -713,8 +734,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin_lo")
         # unrounded exact-integer quotient (see agg_tpch_q1's avg note)
         .agg(F.count(F.lit(1)).alias("n"), (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("value") * 100).cast("long"))
+                F.sum(half_away_long(F.col("value") * 100))
                 / F.count(F.lit(1))
                 / F.lit(100.0)
             ).alias("bin_avg"))
@@ -761,8 +781,7 @@ def agg_partial_reaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.to_date("ts").alias("day")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_vc"),
+        F.sum(half_away_long(F.col("value") * 100)).alias("sum_vc"),
         F.min("value").alias("min_v"),
         F.max("value").alias("max_v"),
     )
@@ -894,8 +913,7 @@ def agg_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # quantities canonicalize as exact CENTS: cast('long') truncates in
         # Spark while DuckDB CAST(AS BIGINT) rounds — round(*100) is the
         # one definition both engines (and storage_compaction) share
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("l_quantity") * 100).cast("long"),
+        half_away_long(F.col("l_quantity") * 100),
         F.col("l_returnflag"),
     )
     return li.agg(

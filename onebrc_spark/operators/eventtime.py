@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -28,8 +29,7 @@ def _sum_value_exact():
     the cents sum is order-independent where round(sum(double), 4) carries
     partition-merge-order low bits (registry rule; shared with the
     streaming twins so stream-vs-batch comparisons are bit-exact)."""
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    return (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
+    return (F.sum(half_away_long(F.col("value") * 100)) / F.lit(100.0)).alias(
         "sum_value"
     )
 
@@ -313,8 +313,7 @@ def _daily_scaffold(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         (
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
+                F.sum(half_away_long(F.col("value") * 100)).cast("double")
                 / F.count("value").cast("double")
             )
             / 100.0
@@ -580,8 +579,7 @@ def evt_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_anomalies"),
             F.coalesce(
                 F.sum(
-                    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                    F.when(is_anom, F.round(F.col("value") * 100).cast("long"))
+                    F.when(is_anom, half_away_long(F.col("value") * 100))
                 ),
                 F.lit(0),
             )

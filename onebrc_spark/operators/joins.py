@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -54,8 +55,7 @@ def join_inner_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / F.lit(100.0)).alias("sum_price"),
+            (F.sum(half_away_long(F.col("l_extendedprice") * 100)) / F.lit(100.0)).alias("sum_price"),
         )
         .orderBy("o_orderpriority")
     )
@@ -85,8 +85,7 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("c_acctbal") * 100).cast("long")) / F.lit(100.0)).alias("sum_bal"),
+            (F.sum(half_away_long(F.col("c_acctbal") * 100)) / F.lit(100.0)).alias("sum_bal"),
         )
         .orderBy("r_name")
     )
@@ -123,8 +122,7 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             # a raw double sum's low bits follow partition merge order
             (
                 F.coalesce(
-                    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                    F.sum(F.round(F.col("o_totalprice") * 100).cast("long")),
+                    F.sum(half_away_long(F.col("o_totalprice") * 100)),
                     F.lit(0),
                 )
                 / F.lit(100.0)

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.schemas import EMBEDDING_DIM
 from onebrc_spark.sources.catalog import (
@@ -1473,8 +1474,7 @@ def sim_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding", F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x_d(x)))
     )
     scale = F.lit(127.0) / F.col("maxabs")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    q_of = lambda x: F.round(x_d(x) * scale)  # noqa: E731
+    q_of = lambda x: half_away_long(x_d(x) * scale)  # noqa: E731
     per_vec = (
         e.withColumn("maxabs", maxabs)
         .filter(F.col("maxabs") > 0)
@@ -1488,7 +1488,7 @@ def sim_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 "embedding",
                 F.lit(0).cast("long"),
-                lambda a, x: a + q_of(x).cast("long") * q_of(x).cast("long"),
+                lambda a, x: a + q_of(x) * q_of(x),
             ).alias("sum_qsq"),
         )
     )
@@ -1591,8 +1591,7 @@ def sim_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform(
             F.col("embedding"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            lambda x: F.round(x.cast("double") * _SEMPRUNE_SCALE).cast("long"),
+            lambda x: half_away_long(x.cast("double") * _SEMPRUNE_SCALE),
         ).alias("q"),
     )
     exploded = quant.select(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -60,9 +61,8 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial = salted.groupBy("l_returnflag", "salt").agg(
         F.sum("l_quantity").alias("p_qty"),
         F.sum(
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (100 - F.round(F.col("l_discount") * 100).cast("long"))
+            half_away_long(F.col("l_extendedprice") * 100)
+            * (100 - half_away_long(F.col("l_discount") * 100))
         ).alias("p_rev"),
         F.count(F.lit(1)).alias("p_n"),
     )
@@ -113,8 +113,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+                F.sum(half_away_long(F.col("o_totalprice") * 100))
                 / F.lit(100.0)
             ).alias("total_price"),
         )

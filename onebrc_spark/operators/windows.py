@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -133,8 +134,7 @@ def window_running_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate", "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
     frame = w.rowsBetween(-4, 0)
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    cents = half_away_long(F.col("l_extendedprice") * 100)
     return (
         li.select(
             "l_suppkey",
@@ -292,8 +292,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "o_orderkey",
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).over(w)
+                F.sum(half_away_long(F.col("o_totalprice") * 100)).over(w)
                 / F.lit(100.0)
             ).alias("spend_30d"),
         )

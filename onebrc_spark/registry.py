@@ -78,13 +78,18 @@ Registration rules (SURVEY §7.4 definition-of-done):
     tests/test_boundary_properties.py::test_cosine_round_tie_divergence;
   - r13 round() sweep adjudication (VERDICT r12 #6) — every F.round site
     in the engine now carries either the floor quantizer or a grid-safety
-    tag referencing one of three arguments: (a) INT-ROUND — round(x) to an
+    tag referencing one of three arguments: (a) INT-ROUND — rounding to an
     integer is engine-safe for ANY input, because every .5 tie is an
     exactly-representable dyadic double (k.5 is always a double), so the
     decimal shortest-repr view and the binary value COINCIDE at ties, and
-    Spark's BigDecimal HALF_UP and DuckDB's C round() both take exact
-    halves away from zero — this covers the whole cents-quantization idiom
-    round(x·100)::long regardless of grid; (b) GRID-IDENTITY — the input
+    both engines take exact halves away from zero — this covers the whole
+    cents-quantization idiom round(x·100)::long regardless of grid. On the
+    Spark side it is spelled aggregates.half_away_long(x·100), never
+    F.round(x).cast(long/bigint): a double round() is a per-row
+    Double.toString + BigDecimal (~0.6 s of the 8M-row flagship scan), the
+    helper is inline rint math with identical values
+    (tests/test_determinism_lint.py rejects the old spelling; oracles keep
+    DuckDB's CAST(round(x) AS BIGINT)); (b) GRID-IDENTITY — the input
     sits on a decimal grid at least as coarse as 10^-d with ≥half-grid
     margin to any (d+1)-digit tie (2-dp prices under round(·,2); integer
     sums; percentile midpoints on the 5e-3 grid under round(·,4)), so the

@@ -46,10 +46,16 @@ def read_measurements_fast(spark: SparkSession, path: str) -> DataFrame:
     machinery a 2-column semicolon format never uses; this path reads raw
     lines and splits once — measured 18 → 25 M rows/s on 50M rows. It is
     the semantic twin of the reference's no-validation byte scanners
-    (`thebracket.rs:80-107`, `rangnargrootkeorkamp.rs:137-181`): malformed
-    lines yield NULL measure instead of an error, so use read_measurements
-    (FAILFAST) when the input is untrusted. Everything stays in whole-stage
-    codegen — substring_index + cast are JVM expressions on the scan.
+    (`thebracket.rs:80-107`, `rangnargrootkeorkamp.rs:137-181`). Malformed
+    lines are not validated here: a temperature field that is not a number
+    (`b;xyz`, or a line without `;`, whose whole text becomes the field)
+    fails the query with CAST_INVALID_INPUT when the lazy frame executes,
+    under Spark's default ANSI mode (pinned by
+    tests/test_flagship.py::test_fast_readers_on_malformed). Use
+    read_measurements(mode="DROPMALFORMED") to skip such lines, or the
+    PERMISSIVE twin onebrc_permissive_quarantine to count them. Everything
+    stays in whole-stage codegen — substring_index + cast are JVM
+    expressions on the scan.
     """
     return spark.read.text(path).select(
         F.substring_index("value", ";", 1).alias("station"),
@@ -85,14 +91,19 @@ def onebrc_scan_agg_arrow(spark: SparkSession, path: str) -> DataFrame:
     is exact-integer (1-dp temps → measure·100 is exactly integral, so
     rint == java-round == identity), count is exact. Pinned by
     tests/test_flagship.py::test_arrow_scan_agg_matches_jvm_path.
-    Trusted-input semantics like read_measurements_fast: malformed lines
-    are a parse error here (pyarrow raises), not a NULL row — use
-    read_measurements (FAILFAST) / the PERMISSIVE twin for untrusted data.
+    Malformed lines are not validated here either: a line without `;` or
+    with a non-numeric temperature fails the query with a pyarrow CSV error
+    (ArrowInvalid) instead of CAST_INVALID_INPUT, while an empty
+    temperature (`b;`) becomes a NULL measure where the JVM path raises
+    (pinned by tests/test_flagship.py::test_fast_readers_on_malformed) —
+    use read_measurements / the PERMISSIVE twin for untrusted data.
     """
     import glob as _glob
     import os as _os
 
     from pyspark.sql import types as T
+
+    from onebrc_spark.operators.aggregates import onebrc_mean
 
     # match Spark's text-source file enumeration (read_measurements_fast
     # reads everything except _-/.-prefixed hidden files), so the two
@@ -222,9 +233,6 @@ def onebrc_scan_agg_arrow(spark: SparkSession, path: str) -> DataFrame:
                 )
 
     partials = cdf.mapInArrow(scan_chunks, partial_schema)
-    s, n = F.col("_s"), F.col("_n")
-    tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
-    mean = (F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0).alias("mean")
     return (
         partials.groupBy("station")
         .agg(
@@ -233,7 +241,9 @@ def onebrc_scan_agg_arrow(spark: SparkSession, path: str) -> DataFrame:
             F.sum("n").alias("_n"),
             F.max("mx").alias("max"),
         )
-        .select("station", "min", mean, "max")
+        .select(
+            "station", "min", onebrc_mean(F.col("_s"), F.col("_n")).alias("mean"), "max"
+        )
         .orderBy("station")
     )
 
@@ -243,9 +253,9 @@ def write_measurements(df: DataFrame, path: str) -> None:
 
     format_string, NOT format_number: format_number inserts
     thousands-grouping commas ('1,234.5'), which silently corrupts the
-    `station;temp` line format for any |measure| >= 1000 — FAILFAST would
-    abort on the extra field and the fast reader would NULL the value
-    (round-5 review; latent while generator temps stay within ±150)."""
+    `station;temp` line format for any |measure| >= 1000 — both readers
+    would fail on the unparseable number (round-5 review; latent while
+    generator temps stay within ±150)."""
     (
         df.select(
             F.format_string("%s;%.1f", F.col("station"), F.col("measure"))
@@ -359,11 +369,10 @@ def onebrc_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the next an empty key), and values ride as integer cents so no float
     text formatting crosses the engine boundary. Narrow one-pass plan: a
     projection + single aggregation, no shuffle beyond the 4-group merge."""
+    from onebrc_spark.operators.aggregates import half_away_long
+
     s = load_table(spark, sf_dir, "supplier")
-    cents_str = (
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("s_acctbal") * 100).cast("bigint").cast("string")
-    )
+    cents_str = half_away_long(F.col("s_acctbal") * 100).cast("string")
     line = (
         F.when(F.col("s_suppkey") % 7 == 0, F.concat(F.col("s_name"), cents_str))
         .when(

@@ -37,6 +37,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from onebrc_spark.operators.aggregates import half_away_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.generator import (
     MEAN_HI,
@@ -170,8 +171,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.min("measure").alias("min_measure"),
             F.max("measure").alias("max_measure"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.sum(F.round(F.col("measure") * 10).cast("long")).alias("sum_dm"),
+            F.sum(half_away_long(F.col("measure") * 10)).alias("sum_dm"),
         )
         .orderBy("station")
     )

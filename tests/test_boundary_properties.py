@@ -890,3 +890,67 @@ def test_report_round1_grid_tie_rescale_property(spark):
         # half away from zero on the exact dyadic tie, in BOTH engines
         want = _m.floor(abs(p) * 10 + 0.5) / 10 * (1 if p > 0 else -1)
         assert srow[f"r{i}"] == duck == want, (p, srow[f"r{i}"], duck, want)
+
+
+def _half_away_ref(x: float) -> int:
+    """Half away from zero on the exact binary value of x."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return int(Decimal(x).to_integral_value(rounding=ROUND_HALF_UP))
+
+
+def test_half_away_long_matches_round(spark):
+    """Rule (a) INT-ROUND: aggregates.half_away_long(x) is the rint-based
+    spelling of F.round(x).cast("long") that skips the per-row BigDecimal.
+    Four ways must agree on an edge corpus — the helper, Spark's round,
+    DuckDB's CAST(round(x) AS BIGINT) (the oracles' spelling) and an exact
+    Decimal reference: ±k.5 ties up to 2^52, the largest double below 0.5,
+    ±0.0, |x| >= 2^52, 2-dp and 3-dp values scaled by 100, and random bit
+    patterns. NULL stays NULL; NaN, ±Inf and 2^64 raise in both spellings."""
+    import math
+    import struct
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from onebrc_spark.operators.aggregates import half_away_long
+
+    two52 = 2.0**52
+    corpus = [0.0, -0.0, 0.49999999999999994, 0.5000000000000001, 1.4999999999999998]
+    corpus += [k + 0.5 for k in range(0, 2000)]
+    corpus += [two52 / 2**j - 0.5 for j in range(1, 30)]  # ties up to 2^51 - 0.5
+    corpus += [two52 - 0.5, two52 - 1.5, math.nextafter(two52 - 0.5, 0.0)]
+    corpus += [two52, two52 + 1, 2.0**53 + 2, 2.0**62, 1e18, math.nextafter(2.0**63, 0.0)]
+    corpus += [(m / 100) * 100 for m in range(-20_000, 20_001, 7)]
+    corpus += [(m / 1000) * 100 for m in range(-20_000, 20_001, 5)]
+    rng = random.Random(20261017)
+    while len(corpus) < 30_000:
+        (x,) = struct.unpack("<d", rng.getrandbits(64).to_bytes(8, "little"))
+        if math.isfinite(x) and abs(x) < 2.0**62:
+            corpus.append(x)
+    corpus += [-x for x in corpus]
+
+    df = spark.createDataFrame(
+        [(i, x) for i, x in enumerate(corpus)] + [(len(corpus), None)],
+        "i long, x double",
+    )
+    x = F.col("x")
+    rows = df.select("i", half_away_long(x).alias("h"), F.round(x).cast("long").alias("r"))
+    got = {r["i"]: (r["h"], r["r"]) for r in rows.collect()}
+    vals = pa.table({"i": list(range(len(corpus))), "x": corpus})
+    duck = dict(
+        duckdb.sql("select i, CAST(round(x) AS BIGINT) from vals").fetchall()
+    )
+    bad = [
+        (x, got[i], duck[i], _half_away_ref(x))
+        for i, x in enumerate(corpus)
+        if not got[i][0] == got[i][1] == duck[i] == _half_away_ref(x)
+    ]
+    assert not bad, bad[:10]
+    assert got[len(corpus)] == (None, None)
+
+    for v in [float("nan"), float("inf"), float("-inf"), 2.0**64]:
+        one = spark.createDataFrame([(v,)], "x double")
+        for col in (half_away_long(x), F.round(x).cast("long")):
+            with pytest.raises(Exception, match="CAST_OVERFLOW"):
+                one.select(col).collect()

@@ -177,3 +177,51 @@ def test_no_round_on_cosine_or_tie_reachable_outputs():
     # helper and 'simplifying' back to round in one sweep)
     assert sim.count("cos_round6(") >= 9, "cos_round6 call sites vanished"
     assert sim.count("_cos6_sql(") >= 9, "_cos6_sql oracle sites vanished"
+
+
+_ROUND_OPEN = re.compile(r"\bF\.round\(")
+_LONG_CAST = re.compile(r"""\s*\.cast\(\s*["'](?:long|bigint)["']\s*\)""")
+
+
+def _round_to_long_sites(text: str) -> list[int]:
+    """Offsets of every `F.round(<expr>).cast("long"|"bigint")`: the
+    round's closing paren is found by depth counting, so nested calls and
+    line breaks inside <expr> do not hide a site."""
+    sites = []
+    for m in _ROUND_OPEN.finditer(text):
+        depth, i = 1, m.end()
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        if _LONG_CAST.match(text, i):
+            sites.append(m.start())
+    return sites
+
+
+def test_no_bigdecimal_round_to_long():
+    """Rule (a) INT-ROUND (registry.py): Spark compiles a double round() to
+    a per-row Double.toString + BigDecimal, so the exact-integer idiom is
+    spelled aggregates.half_away_long(x), which returns the same long from
+    inline rint math. A new F.round(x).cast("long"|"bigint") fails here."""
+    violations = []
+    for path in sorted(SRC.rglob("*.py")):
+        text = _scan_text(path)
+        for pos in _round_to_long_sites(text):
+            lineno = text[:pos].count("\n") + 1
+            violations.append(f"{path.relative_to(SRC.parent)}:{lineno}")
+    assert not violations, (
+        "F.round(x).cast(long/bigint) costs a BigDecimal per row — use "
+        "onebrc_spark.operators.aggregates.half_away_long(x):\n"
+        + "\n".join(violations)
+    )
+
+
+def test_round_to_long_lint_shapes():
+    """The scanner must see nested and line-split sites, and must not flag
+    a scale-d round or a round whose result is not cast to an integer."""
+    assert _round_to_long_sites('F.round(F.col("v") * 100).cast("long")')
+    assert _round_to_long_sites("F.sum(F.round(F.col('v') * 100).cast('bigint'))")
+    assert _round_to_long_sites('F.round(\n    F.sqrt(F.col("n")) * 1000\n)\n.cast("long")')
+    assert not _round_to_long_sites('F.round(F.col("v"), 1).alias("v")')
+    assert not _round_to_long_sites('F.round(F.col("v")).cast("double")')
+    assert not _round_to_long_sites('half_away_long(F.col("v") * 100)')

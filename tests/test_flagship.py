@@ -12,7 +12,11 @@ import pytest
 
 from onebrc_spark.operators.aggregates import onebrc_aggregate
 from onebrc_spark.sources.generator import NUM_STATIONS, generate_measurements
-from onebrc_spark.sources.onebrc import format_report, read_measurements
+from onebrc_spark.sources.onebrc import (
+    format_report,
+    read_measurements,
+    read_measurements_fast,
+)
 
 GOLDEN = """\
 Hamburg;12.0
@@ -60,6 +64,29 @@ def test_failfast_on_malformed(spark, tmp_path):
     df = read_measurements(spark, str(bad))
     with pytest.raises(Exception, match="(?i)malformed|failfast"):
         df.collect()
+
+
+@pytest.mark.parametrize(
+    "line, arrow_error",
+    [("Bulawayo;xyz", "ArrowInvalid"), ("no-separator-here", "ArrowInvalid"), ("Bulawayo;", None)],
+)
+def test_fast_readers_on_malformed(spark, tmp_path, line, arrow_error):
+    """Neither trusted-input path validates, and the JVM reader does not
+    NULL a malformed line either: under ANSI its temperature cast fails the
+    query. The Arrow twin fails with a pyarrow CSV error instead, except
+    that it reads an empty temperature as NULL (both docstrings)."""
+    from onebrc_spark.sources.onebrc import onebrc_scan_agg_arrow
+
+    bad = tmp_path / "bad.txt"
+    bad.write_text(f"Hamburg;12.0\n{line}\n")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        read_measurements_fast(spark, str(bad)).collect()
+    arrow = onebrc_scan_agg_arrow(spark, str(bad))
+    if arrow_error:
+        with pytest.raises(Exception, match=arrow_error):
+            arrow.collect()
+    else:
+        assert arrow.collect()[0] == ("Bulawayo", None, None, None)
 
 
 def test_generator_shape_and_invariants(spark):

@@ -29,6 +29,9 @@ def test_flagship_is_partial_final_hashagg_one_exchange(spark):
     # exchange for the global sort.
     assert txt.count("HashAggregate") >= 2
     assert num_exchanges(df) == 2
+    # the cents sum uses half_away_long's inline rint, not the per-row
+    # BigDecimal that Spark compiles a double round() to
+    assert "rint(" in txt and "round(" not in txt
 
 
 def test_filter_pushdown_reaches_parquet(spark):
