@@ -23,7 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from onebrc_spark import registry
 from onebrc_spark.operators.clustering import clear_components_cache
 from onebrc_spark.operators.dedup import clear_pair_cache
-from onebrc_spark.session import get_spark
+from onebrc_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
@@ -618,6 +618,9 @@ def main() -> None:
 
     times: dict[str, float] = {}
     query_probes: dict[str, dict] = {}
+    # Janino compilations during each entry's timed runs (kept attempt): a
+    # warm plan whose generated classes stay cached compiles nothing.
+    compiles: dict[str, int] = {}
     band = _probe_band(Path(__file__).resolve().parent)
     budget = {"left": CALM_WAIT_BUDGET}
 
@@ -627,10 +630,12 @@ def main() -> None:
     best_text = None
     for attempt in range(1, 3):
         pre = _wait_for_calm(spark, band, budget)
+        c0 = codegen_compiles(spark)
         warm, cold = _onebrc_text_seconds(spark)
+        n_compiled = codegen_compiles(spark) - c0
         post, text_gc = _gc_adjudicated_post_probe(spark, band)
         if best_text is None or warm < best_text[0]:
-            best_text = (warm, cold, pre, post, text_gc)
+            best_text = (warm, cold, pre, post, text_gc, n_compiled)
         if (pre <= band and post <= band) or budget["left"] <= 0:
             break
         print(
@@ -638,7 +643,7 @@ def main() -> None:
             f"(pre {pre:.3f} post {post:.3f}) — retry {attempt}",
             file=sys.stderr, flush=True,
         )
-    warm, cold, pre, post, text_gc = best_text
+    warm, cold, pre, post, text_gc, compiles["onebrc_text_scan_agg"] = best_text
     times["onebrc_text_scan_agg"] = warm
     times["onebrc_text_scan_agg_cold"] = cold
     # BOTH text-scan keys get the window's stamp (ADVICE r11): the cold
@@ -659,12 +664,12 @@ def main() -> None:
         best = None
         for attempt in range(1, _MAX_ATTEMPTS + 1):
             pre = _wait_for_calm(spark, band, budget)
-            # Re-warm THIS plan immediately before timing: the JVM codegen
-            # cache holds ~100 compiled classes, so the batch warmup above
-            # can be evicted by later plans before the timed loop reaches
-            # this query — r2's apparent 1.3-2x "regressions" on untouched
-            # queries were this recompilation cost, not execution drift. A
-            # tiny re-warm restores the steady-state the header promises.
+            # Re-warm THIS plan immediately before timing. This is
+            # measurement protocol, not a guard against recompiles (get_spark
+            # sizes the codegen cache to hold every headline class, and
+            # `codegen_compiles` in the output shows it): every entry is
+            # timed right after a run of its own plan, as in earlier
+            # artifacts, so their numbers stay comparable.
             fn(spark, WARMUP_SF_DIR).count()
             # Best of two timed runs: single-shot times on a shared box
             # showed 2-3x run-to-run swings on sub-second queries (GC
@@ -672,6 +677,7 @@ def main() -> None:
             # regressions across rounds; the minimum is the steady-state
             # cost of the PLAN, which is what this bench certifies.
             runs = []
+            c0 = codegen_compiles(spark)
             for _ in range(2):
                 # ONLY the build entry clears the pair-set memo (each of
                 # its runs measures the cold build). Every other query
@@ -692,13 +698,14 @@ def main() -> None:
                 df = fn(spark, SF_DIR)
                 n = df.count()
                 runs.append(time.time() - t0)
+            n_compiled = codegen_compiles(spark) - c0
             post, gc_flush = _gc_adjudicated_post_probe(spark, band)
             sec = min(runs)
             # keep the MINIMUM over attempts: contention only inflates, so
             # the fastest attempt is the closest to the plan's true cost —
             # and its window stamps are the ones the artifact reports
             if best is None or sec < best[0]:
-                best = (sec, pre, post, n, runs, attempt, gc_flush)
+                best = (sec, pre, post, n, runs, attempt, gc_flush, n_compiled)
             if (pre <= band and post <= band) or budget["left"] <= 0:
                 break
             print(
@@ -706,7 +713,7 @@ def main() -> None:
                 f"{post:.3f}) — retry {attempt}/{_MAX_ATTEMPTS}",
                 file=sys.stderr, flush=True,
             )
-        sec, pre, post, n, runs, kept_attempt, gc_flush = best
+        sec, pre, post, n, runs, kept_attempt, gc_flush, compiles[name] = best
         times[name] = round(sec, 3)
         query_probes[name] = {
             "pre": round(pre, 3), "post": round(post, 3),
@@ -733,6 +740,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": times,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "codegen_compiles": compiles,
                 **noise_block,
             }
         )

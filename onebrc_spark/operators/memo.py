@@ -15,7 +15,10 @@ maxsize defaults to 2 because that is the legitimate working set: bench.py
 re-warms every plan at the warmup SF immediately before timing it at the
 measured SF, so the pair set for BOTH directories must stay live within
 one timed query (a 1-entry LRU would thrash exactly there — the warmup
-build would evict the measured asset the build entry just paid for).
+build would evict the measured asset the build entry just paid for). The
+re-warm is measurement protocol kept for comparability with earlier bench
+artifacts, not a guard against codegen-cache eviction: get_spark sizes
+Spark's generated-code cache to hold every headline class.
 """
 
 from __future__ import annotations

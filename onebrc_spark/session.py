@@ -35,6 +35,13 @@ def get_spark(app_name: str = "onebrc_spark", master: str | None = None) -> Spar
       - session timezone UTC: required for DuckDB-oracle timestamp parity
         (DuckDB timestamps are UTC-naive).
       - Arrow on: pandas_udf / applyInPandas paths transfer columnar batches.
+      - codegen.cache.maxEntries 4096: the LRU of Janino-compiled
+        whole-stage classes must hold the engine's working set, or every
+        pass recompiles it and its code starts cold in the JIT again. The
+        24-entry bench headline compiles ~450 distinct classes and the
+        197-query registry ~2,140; at Spark's default of 100 entries a warm
+        headline pass recompiled ~490 of them and a warm registry pass
+        ~2,800.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     # Optional-dependency setup MUST precede JVM launch: executor Python
@@ -64,6 +71,8 @@ def get_spark(app_name: str = "onebrc_spark", master: str | None = None) -> Spar
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Static conf, ~2x the registry's measured codegen working set.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
@@ -91,3 +100,11 @@ def get_spark(app_name: str = "onebrc_spark", master: str | None = None) -> Spar
     spark.sparkContext.setLogLevel("WARN")
     mark_session_created()
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (whole-stage and expression
+    classes; a codegen cache hit does not count). Diff it around a run to see
+    how many classes that run compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
