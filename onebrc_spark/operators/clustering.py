@@ -464,7 +464,7 @@ def ml_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped = d.join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("gk")
     )
-    bucket = _hash_bucket(F.col("gk"))
+    bucket = _hash_bucket("gk")
     assigned = grouped.select(
         "doc_id",
         "gk",

@@ -191,7 +191,7 @@ def ml_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     b = docs.select(
         "doc_id",
-        _hash_bucket(F.col("doc_id")).alias("bucket"),
+        _hash_bucket("doc_id").alias("bucket"),
         word_ngrams(F.col("text"), _CONTAM_N).alias("gset"),
     )
     grams = b.select("doc_id", "bucket", F.explode("gset").alias("g"))
@@ -1052,77 +1052,23 @@ _BOILER_W = 4
 _BOILER_TAU = 5
 
 
-def _boiler_tokens(text_col) -> "Column":
-    """Whitespace tokens of a document, empty tokens dropped, NULL-safe."""
-    return F.filter(
-        F.split(F.coalesce(text_col, F.lit("")), " "), lambda x: x != ""
-    )
-
-
-def _boiler_seg_array(t) -> "Column":
-    """Non-overlapping _BOILER_W-token spans of token array `t` — the ONE
-    segmenter shared by the ledger/clean twins (drift here would make the
-    ledger audit a different cleaning than the one shipped). The
-    size()==0 branch dodges Spark's DESCENDING sequence(1, 0) trap on
-    empty documents."""
-    W = _BOILER_W
-    n_segs = F.floor((F.size(t) + F.lit(W - 1)) / W).cast("int")
-    return F.when(F.size(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_segs),
-            lambda i: F.array_join(F.slice(t, (i - F.lit(1)) * W + F.lit(1), W), " "),
-        )
-    )
-
-
-def _boiler_hot_hashes(segged) -> "DataFrame":
-    """Document-frequency census over a (…, segs array<string>) frame:
-    hashes are deduped WITHIN each doc by a narrow array_distinct, so df
-    is a plain map-side-combined count — ONE 8-byte-key exchange, never
-    an (h, doc_id) distinct shuffle. Returns hashes with df >= tau."""
-    return (
-        segged.select(
-            F.explode(
-                F.array_distinct(F.transform("segs", lambda s: F.xxhash64(s)))
-            ).alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= _BOILER_TAU)
-    )
-
-
-def _boiler_occurrences(toked) -> "DataFrame":
-    """Per-occurrence (…, seg) stream from a frame carrying token column
-    `t`: the segmenter explodes DIRECTLY over the tokens, never through an
-    intermediate when()-wrapped array column — exploding that column
-    defeats Catalyst's size(transform(x)) = size(x) simplification, and
-    the inferred size(segs) > 0 generate-filter then pushes below the
-    project and re-inlines the WHOLE segmenter per row (measured 2.8× on
-    the ledger at sf0.1). The explicit size(t) > 0 filter keeps the
-    sequence bound ascending (sequence(1, 0) runs DESCENDING)."""
-    W = _BOILER_W
-    keep = [c for c in toked.columns if c != "t"]
-    return toked.filter(F.size("t") > 0).select(
-        *keep,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.expr(f"(size(t) + {W - 1}) div {W}").cast("int")),
-                lambda i: F.array_join(F.slice("t", (i - F.lit(1)) * W + F.lit(1), W), " "),
-            )
-        ).alias("seg"),
-    )
-
-
 def _boiler_toks_sql(text: str) -> str:
-    """Spark-SQL text of _boiler_tokens over a column reference."""
+    """Spark-SQL text of a document's whitespace tokens, empty tokens
+    dropped, NULL-safe."""
     return f"filter(split(coalesce({text}, ''), ' '), x -> x != '')"
 
 
 def _boiler_occurrence_sql(docs_view: str) -> str:
     """Spark-SQL text of the per-occurrence (doc_id, source, h, seg_chars)
-    stream — _boiler_occurrences plus the hash/length projection, as one
-    statement (see text_boilerplate_segments for why)."""
+    stream: non-overlapping _BOILER_W-token spans, one row per span.
+
+    The segmenter explodes DIRECTLY over the tokens, never through an
+    intermediate CASE-wrapped array column — exploding that column defeats
+    Catalyst's size(transform(x)) = size(x) simplification, and the
+    inferred size(segs) > 0 generate-filter then pushes below the project
+    and re-inlines the WHOLE segmenter per row (measured 2.8× on the
+    ledger at sf0.1). The explicit size(t) > 0 filter keeps the sequence
+    bound ascending (sequence(1, 0) runs DESCENDING)."""
     W = _BOILER_W
     seg_fold = (
         f"transform(sequence(1, CAST((size(t) + {W - 1}) div {W} AS INT)), "
@@ -1256,13 +1202,9 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     d.createOrReplaceTempView(docs_view)
     # TWO spark.sql statements around the lazy checkpoint (r14, guide §1.2
     # step 2 — the one-parse technique of dedup._pairs_sql_from_collapsed):
-    # the Column composition created ~15 eagerly-analyzed Datasets, each
+    # a Column composition created ~15 eagerly-analyzed Datasets, each
     # re-walking the segmenter forest — ~0.56 s of pure driver-side
-    # construction per build at sf0.1, the bulk of this entry. Each SQL
-    # fragment mirrors its helper expression-for-expression (the explicit
-    # size(t) > 0 occurrence filter, the div-based segment count, count(1)
-    # census over within-doc-distinct hashes); row-identity vs the helper
-    # composition is pinned in tests/test_sqlx_twins.py.
+    # construction per build at sf0.1, the bulk of this entry.
     segs = spark.sql(_boiler_occurrence_sql(docs_view))
     # ONE traversal for both consumers: the lazy localCheckpoint truncates
     # lineage at the exploded narrow stream, so the census (hot-set
@@ -1271,19 +1213,23 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query construction job-free (the driver contract builds plans before
     # acting); the checkpointed RDD is unpersisted by the ContextCleaner
     # when the result DataFrame is garbage-collected. The census derives
-    # from the SAME occurrence stream the mark pass consumes (the twins'
-    # A/B test measured 0.76 s vs 2.11 s for an array-column census at
-    # sf0.1); the checkpoint upgrades "one shape" to "one execution".
+    # from the SAME occurrence stream the mark pass consumes (an A/B test
+    # measured 0.76 s vs 2.11 s for an array-column census at sf0.1); the
+    # checkpoint upgrades "one shape" to "one execution".
     segs_view = "_onebrc_boiler_segs"
     segs.localCheckpoint(eager=False).createOrReplaceTempView(segs_view)
     return spark.sql(_boiler_ledger_sql(docs_view, segs_view))
 
 
 def _boiler_clean_sql(docs_view: str) -> str:
-    """The per-document cleaned-corpus reconstruction as one statement —
-    the SQL twin of text_boilerplate_clean's helper composition
-    (_boiler_tokens → _boiler_seg_array → _boiler_hot_hashes → the narrow
-    keep-filter); see that query for why."""
+    """The per-document cleaned-corpus reconstruction as one statement
+    (see text_boilerplate_clean for why). Segments are built in a
+    two-step token/segment projection so the segmenter never re-evaluates
+    per reference; the size(t) = 0 branch dodges Spark's DESCENDING
+    sequence(1, 0) trap on empty documents. The df census counts hashes
+    deduped WITHIN each doc by a narrow array_distinct, so df is a plain
+    map-side-combined count — ONE 8-byte-key exchange, never an
+    (h, doc_id) distinct shuffle."""
     W = _BOILER_W
     seg_arr = (
         f"CASE WHEN size(t) = 0 THEN CAST(array() AS ARRAY<STRING>) "
@@ -1379,14 +1325,10 @@ def text_boilerplate_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters 64-bit hashes — identical results absent an xxhash64
     collision (none at test SFs; at corpus scale a collision drops one
     innocent segment — the standard hashed-vocabulary trade, documented
-    in the ledger twin)."""
+    in the ledger query)."""
     d = load_table(spark, sf_dir, "documents")
-    # ONE spark.sql (r14, same rationale as the ledger twin): the Column
-    # composition was ~0.30 s of driver-side construction per build. The
-    # statement mirrors the helpers expression-for-expression (two-step
-    # token/segment projection so the segmenter never re-evaluates per
-    # reference, the size()==0 empty-array branch, the within-doc-distinct
-    # hash census); pinned row-identical in tests/test_sqlx_twins.py.
+    # ONE spark.sql (r14, same rationale as the ledger): a Column
+    # composition was ~0.30 s of driver-side construction per build.
     view = "_onebrc_boiler_docs"
     d.createOrReplaceTempView(view)
     return spark.sql(_boiler_clean_sql(view))

@@ -9,7 +9,7 @@ Five dedup families over `documents`, each designed for the 100 TB path:
   - minhash_lsh  : MinHash signatures + banded LSH bucketing — the sub-
                    quadratic near-dup path; candidate pairs verified with
                    exact Jaccard so LSH is pruning, not semantics.
-  - simhash      : 64-bit SimHash signatures + hamming-distance pairing.
+  - simhash      : 60-bit SimHash signatures + hamming-distance pairing.
   - embedding    : cosine near-dup over `embeddings` (see similarity.py for
                    the general ANN operators).
 
@@ -112,7 +112,7 @@ def _word_3grams_sqlx(col: str) -> str:
     )
 
 
-def word_3grams(text_col: Column | str) -> Column:
+def word_3grams(text_col: str) -> Column:
     """Distinct word-3-gram shingles of a text column (shared by the
     Jaccard and MinHash dedup operators; DuckDB twin is the range/
     list_transform expression in their oracles).
@@ -124,19 +124,9 @@ def word_3grams(text_col: Column | str) -> Column:
     vs ~0.3 s for this form, identical output (asserted cell-by-cell
     before the switch) and equal steady-state throughput.
 
-    Accepts a plain column NAME (preferred: one F.expr / one JVM parse —
-    the py4j-built Column form costs ~40 driver round trips per call and
-    dominated build time at r13) or an arbitrary Column (legacy path,
-    byte-identical output — pinned in tests/test_dedup_units.py)."""
-    if isinstance(text_col, str):
-        return F.expr(_word_3grams_sqlx(text_col))
-    words = _WORDS(text_col)
-    n2 = F.greatest(F.size(words) - 2, F.lit(0))
-    a = F.slice(words, 1, n2)
-    b = F.slice(words, 2, n2)
-    c = F.slice(words, 3, n2)
-    ab = F.zip_with(a, b, lambda x, y: F.concat_ws(" ", x, y))
-    return F.array_distinct(F.zip_with(ab, c, lambda x, y: F.concat_ws(" ", x, y)))
+    Takes a column or field NAME: one F.expr, one JVM parse (see
+    _word_3grams_sqlx)."""
+    return F.expr(_word_3grams_sqlx(text_col))
 
 
 @query(
@@ -395,7 +385,7 @@ def _minhash_signature_sqlx(ws: str) -> str:
     )
 
 
-def minhash_signature(shingles_col: Column | str) -> Column:
+def minhash_signature(shingles_col: str) -> Column:
     """12-element MinHash signature over a distinct-shingle array: one md5
     base hash per shingle, then 12 affine transforms.
 
@@ -406,20 +396,9 @@ def minhash_signature(shingles_col: Column | str) -> Column:
     per seed instead of once per shingle (measured 199 s → this form at
     sf0.1). Empty shingle lists yield the sentinel (= _HASH_P) signature.
 
-    Accepts a plain column NAME (preferred — one F.expr, see
-    _word_3grams_sqlx) or an arbitrary Column (legacy py4j-built path,
-    identical integers — pinned in tests/test_dedup_units.py).
+    Takes a column or field NAME: one F.expr (see _word_3grams_sqlx).
     """
-    if isinstance(shingles_col, str):
-        return F.expr(_minhash_signature_sqlx(shingles_col))
-    bases = F.transform(shingles_col, _base_digits)
-    init = F.array_repeat(F.lit(_HASH_P).cast("long"), _MINHASH_N)
-
-    def step(acc: Column, h: Column) -> Column:
-        hashes = F.array(*[_affine(h, s) for s in range(_MINHASH_N)])
-        return F.zip_with(acc, hashes, lambda a, b: F.least(a, b))
-
-    return F.aggregate(bases, init, step)
+    return F.expr(_minhash_signature_sqlx(shingles_col))
 
 
 def minhash_candidates_ctes() -> str:
@@ -624,20 +603,40 @@ def _dup_census(slim: DataFrame) -> DataFrame:
 
 
 def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
-    """Collapsed (doc_id, ws, grp_n, ids) rows from the slim scan and the
-    duplicate census. On a duplicate-free corpus the census broadcast is
-    EMPTY and AQE's empty-relation propagation rewrites this to a pure
-    narrow map over the scan (anti join → pass-through, member branch →
-    empty) — no probe job needed to get the degenerate plan.
+    """Exact-digest pre-collapse: one row per distinct text — (doc_id, ws,
+    grp_n, ids) where doc_id is the group's min (the representative), ws
+    its shingles, grp_n the group size and ids EVERY member's doc_id.
+    Web-scale exact duplication is clique-shaped (millions of byte-
+    identical copies of one page); byte-identical docs have identical
+    shingles, hence identical signatures, hence collide in EVERY band —
+    C(k, 2) candidate rows × 4 bands before the verify step. Collapsing to
+    representatives makes the banded bucketing see each distinct text
+    once; _pairs_sql_from_collapsed reconstructs the cliques' pairs
+    arithmetically from `ids`.
+
+    Shuffle shape (r9 — the BENCH_r8-flagged regression fix): the r8 form
+    was ONE groupBy(digest) carrying min(text) + collect_list(ids) for
+    EVERY distinct digest — the whole corpus's text shuffled through the
+    agg even on duplicate-free data. Now a 40-byte-row census
+    (_dup_census) finds the duplicated digests first; unique docs — the
+    overwhelming mass — pass through as a broadcast ANTI join against that
+    (normally tiny) census, and only dup-group members pay the
+    member-collection agg. Text never shuffles: when the census outgrows
+    the broadcast threshold (pathological dup mass), AQE falls back to a
+    shuffled join — the r8 cost shape — rather than failing. On a
+    duplicate-free corpus the census broadcast is EMPTY and AQE's
+    empty-relation propagation rewrites this to a pure narrow map over the
+    scan (anti join → pass-through, member branch → empty) — no probe job
+    needed to get the degenerate plan.
 
     Empty-shingle reps are NOT filtered here: a filter on size(ws) gets
     predicate-pushed through the union and the round-robin repartition all
     the way to the scan — re-evaluating the whole shingle expression
     SERIALLY on the pre-spread file partition (measured: the single worst
     cost in the r9 plan). Consumers apply their own guard where it is
-    semantically needed: pair emission drops shingle-less groups
-    (minhash_expand_pairs), banding self-bounds them via the occupancy cap
-    and the 0/0→NULL verify guard."""
+    semantically needed: pair emission drops shingle-less groups (the
+    `dup` CTE of _pairs_sql_from_collapsed), banding self-bounds them via
+    the occupancy cap and the 0/0→NULL verify guard."""
     uniq_cols = [
         F.col("doc_id"),
         word_3grams("text").alias("ws"),
@@ -668,43 +667,6 @@ def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
         )
     )
     return uniq.unionByName(dup)
-
-
-def minhash_collapse(d: DataFrame) -> DataFrame:
-    """Exact-digest pre-collapse: one row per distinct text with a
-    non-empty shingle set — (doc_id, ws, grp_n, ids) where doc_id is the
-    group's min (the representative), ws its shingles, grp_n the group
-    size and ids EVERY member's doc_id. Web-scale exact duplication is
-    clique-shaped (millions of byte-identical copies of one page);
-    byte-identical docs have identical shingles, hence identical
-    signatures, hence collide in EVERY band — C(k, 2) candidate rows × 4
-    bands before the verify step. Collapsing to representatives makes the
-    banded bucketing see each distinct text once; the cliques' pairs are
-    reconstructed arithmetically by minhash_expand_pairs from `ids`.
-
-    Shuffle shape (r9 — the BENCH_r8-flagged regression fix): the r8 form
-    was ONE groupBy(digest) carrying min(text) + collect_list(ids) for
-    EVERY distinct digest — the whole corpus's text shuffled through the
-    agg even on duplicate-free data. Now a 40-byte-row census
-    (_dup_census) finds the duplicated digests first; unique docs — the
-    overwhelming mass — pass through as a broadcast ANTI join against that
-    (normally tiny) census, and only dup-group members pay the
-    member-collection agg. Text never shuffles: when the census outgrows
-    the broadcast threshold (pathological dup mass), AQE falls back to a
-    shuffled join — the r8 cost shape — rather than failing.
-
-    Empty-shingle groups (text shorter than the 3-gram window): their
-    reps SURVIVE collapse (r9 — an eager size(ws) filter here predicate-
-    pushes below the spread repartition and serializes the shingle
-    expression on the raw scan, see _collapsed_rows). They are harmless
-    downstream: banding bounds their shared-sentinel cliques with the
-    occupancy cap exactly like the oracle's plain banded LSH bounds
-    nothing (the oracle bands them too), verification drops every pair at
-    0/0 → NULL, and pair EMISSION for shingle-less dup groups is guarded
-    in minhash_expand_pairs — so the emitted pair set still matches plain
-    banded LSH exactly."""
-    slim = _minhash_slim(d)
-    return _collapsed_rows(slim, _dup_census(slim))
 
 
 def _explode_id_pairs(df: DataFrame, carry: list[str]) -> DataFrame:
@@ -787,100 +749,49 @@ def minhash_band_candidates(
     return _explode_id_pairs(buckets, carry=[]).distinct()
 
 
-def minhash_verify_pairs(ws: DataFrame, candidates: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard verification of candidate pairs: joins the
-    shingle sets back on both sides and keeps pairs at jaccard ≥ τ."""
-    wa = ws.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
-    wb = ws.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
-    inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
-    union = F.size("ws_a") + F.size("ws_b") - F.size(F.array_intersect("ws_a", "ws_b"))
-    # 0/0 Jaccard THROWS under ANSI while DuckDB's x/0 is NULL (dropped by
-    # the threshold). NULL the denominator so both engines drop the
-    # undefined pair. (With the empty-shingle routing upstream this branch
-    # is unreachable in the registered plan, but the helper keeps the guard
-    # so it is safe on arbitrary inputs.)
-    jac = inter / F.when(union == 0, F.lit(None)).otherwise(union)
-    return (
-        candidates.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .filter(jac >= _MINHASH_THRESHOLD)
-        .select("doc_a", "doc_b", jac_round4(jac).alias("jaccard"))
-    )
+def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
+    """The band→gate→bucket→candidate→verify→expand plan as ONE Spark-SQL
+    statement over the materialized collapsed view (r14, guide §1.2 step 2
+    — the r13 one-parse technique applied to the whole post-checkpoint
+    build). A Column-API composition created ~15 eagerly-analyzed
+    Datasets, each re-walking the signature/shingle expression forest —
+    measured ~0.5 s of driver-side construction per cold build at sf0.1
+    (phase split in OPTIMIZATION_r14.md); this is one parse + one
+    analysis. The banding CTEs (sigs → gated → buckets → cand) compute
+    the same candidates as minhash_band_candidates; the pair set is pinned
+    end-to-end by the DuckDB oracle.
 
+    Verify: exact shingle Jaccard of each candidate, both sides' shingles
+    joined back from the view. A 0/0 Jaccard THROWS under ANSI while
+    DuckDB's x/0 is NULL (dropped by the threshold), so the denominator is
+    NULLed and both engines drop the undefined pair.
 
-def minhash_expand_pairs(rep_pairs: DataFrame, collapsed: DataFrame) -> DataFrame:
-    """Expand representative-level verified pairs back to document pairs —
-    the exact inverse of minhash_collapse, emitting precisely the pair set
-    plain (uncollapsed) banded LSH would:
+    Expand (`dup`, `expanded` and the two emitting branches): the exact
+    inverse of the collapse, emitting precisely the pair set plain
+    (uncollapsed) banded LSH would:
 
       - cross-group: a verified rep pair (ra, rb, j) expands to every
         (a ∈ group(ra), b ∈ group(rb)) with the SAME jaccard j — identical
         texts have identical shingle sets, so jaccard(a, b) = jaccard(ra,
         rb), and identical signatures mean (a, b) band-collides iff
-        (ra, rb) does. members(r) = {r} ∪ dup-extras(r), encoded as a
-        union (the identity branch) plus a join against the NON-rep dup
-        members only — singleton docs never join anything. Groups are
-        disjoint and the two branches are too (extras exclude the rep),
-        so each pair appears exactly once.
+        (ra, rb) does. A singleton rep carries no `dup` row, so the
+        coalesce falls back to array(rep); groups are disjoint, so each
+        pair appears exactly once.
       - within-group: every pair inside a dup group is byte-identical →
         jaccard exactly 1.0 ≥ τ, and always band-collides — UNLESS the
         text has no shingles, where plain LSH computes 0/0 → NULL →
-        dropped; the size(ws) guard below excludes exactly those groups
-        (collapse keeps them as rows — see minhash_collapse — so the
-        guard lives here, at the only consumer where they would change
-        the pair set). The pairs STREAM narrowly from `ids`
-        (_explode_id_pairs) — no join, no shuffle. (The output IS
-        quadratic in the clique — that is the pair-set contract; the win
-        is that nothing upstream of the final emit is, in shuffle bytes
-        OR in any single row buffer.)
+        dropped. The size(ws) > 0 guard in `dup` excludes exactly those
+        groups (the collapse keeps them as rows — see _collapsed_rows —
+        so the guard lives here, the only place where they would change
+        the pair set). The pairs STREAM from `ids` through posexplode +
+        slice (_explode_id_pairs' shape): no join, no shuffle, and peak
+        memory O(k) per row. The output IS quadratic in the clique — that
+        is the pair-set contract — but nothing upstream of the final emit
+        is, in shuffle bytes or in any single row buffer.
 
-    rep_pairs is tiny (verified near-dups) and the dup-group member table
-    is bounded by the corpus's dup mass — AQE broadcasts whichever side is
-    small; the member×member combination STREAMS through two chained
-    explodes (peak memory O(k) per row — an in-row array product would
-    materialize k_a·k_b structs in one row buffer before exploding,
-    re-creating the quadratic blowup as memory; see _explode_id_pairs)."""
-    dup = collapsed.filter((F.col("grp_n") > 1) & (F.size("ws") > 0))
-    mem_a = dup.select(F.col("doc_id").alias("doc_a"), F.col("ids").alias("ids_a"))
-    mem_b = dup.select(F.col("doc_id").alias("doc_b"), F.col("ids").alias("ids_b"))
-    exp = (
-        rep_pairs.join(mem_a, "doc_a", "left")
-        .join(mem_b, "doc_b", "left")
-        .select(
-            F.coalesce("ids_a", F.array("doc_a")).alias("ids_a"),
-            F.coalesce("ids_b", F.array("doc_b")).alias("ids_b"),
-            "jaccard",
-        )
-    )
-    cross = (
-        exp.select(F.explode("ids_a").alias("_a"), "ids_b", "jaccard")
-        .select("_a", F.explode("ids_b").alias("_b"), "jaccard")
-        .select(
-            F.least("_a", "_b").alias("doc_a"),
-            F.greatest("_a", "_b").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    within = _explode_id_pairs(dup, carry=[]).select(
-        "doc_a", "doc_b", F.lit(1.0).alias("jaccard")
-    )
-    return cross.unionByName(within)
-
-
-def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
-    """The band→gate→bucket→candidate→verify→expand plan as ONE Spark-SQL
-    statement over the materialized collapsed view (r14, guide §1.2 step 2
-    — the r13 one-parse technique applied to the whole post-checkpoint
-    build). The Column-API composition created ~15 eagerly-analyzed
-    Datasets, each re-walking the signature/shingle expression forest —
-    measured ~0.5 s of driver-side construction per cold build at sf0.1
-    (phase split in OPTIMIZATION_r14.md); this is one parse + one
-    analysis. Every CTE mirrors its Column-built helper expression for
-    expression (element_at-1-based indexing, raw-jaccard threshold before
-    the floor quantizer, posexplode+slice pair streaming, the ids_a/ids_b
-    coalesce encoding) — the SQL path is pinned row-identical to the
-    helper composition in tests/test_sqlx_twins.py and end-to-end by the
-    DuckDB oracle."""
+    The verified rep pairs are tiny and the dup-group member table is
+    bounded by the corpus's dup mass — AQE broadcasts whichever side is
+    small."""
     sig = _minhash_signature_sqlx("ws")
     band_terms = ", ".join(
         "xxhash64({b}, {els})".format(
@@ -966,8 +877,8 @@ def _minhash_pairs_plan(
     Equivalence to the uncollapsed oracle: empty-shingle docs only ever
     produce NULL-jaccard pairs (always dropped), so routing them out
     changes nothing; collapse/expand is a bijection on the remaining pair
-    set (see minhash_expand_pairs). Hence the DuckDB oracle — plain banded
-    LSH over all documents — hashes identically, while the Spark plan is
+    set (see _pairs_sql_from_collapsed). Hence the DuckDB oracle — plain
+    banded LSH over all documents — hashes identically, while the Spark plan is
     clique-proof: k byte-identical docs cost O(k) instead of O(k²) rows in
     the banded candidate join (pinned in tests/test_properties.py).
 
@@ -1034,12 +945,10 @@ def _minhash_pairs_plan(
     else:
         collapsed = base.persist()
         handles = [collapsed, dupc]
-    # ONE spark.sql for everything past the checkpoint (r14): the Column
-    # composition (minhash_band_candidates → minhash_verify_pairs →
-    # minhash_expand_pairs, kept as the reference twins) built ~15 eager-
-    # analyzed Datasets re-walking the signature forest per cold build.
-    # The temp view resolves at the sql() call, so the returned frame is
-    # immune to later re-registrations (bench alternates two sf_dirs).
+    # ONE spark.sql for everything past the checkpoint (r14, see
+    # _pairs_sql_from_collapsed). The temp view resolves at the sql() call,
+    # so the returned frame is immune to later re-registrations (bench
+    # alternates two sf_dirs).
     view = "_onebrc_mh_collapsed"
     collapsed.createOrReplaceTempView(view)
     out = spark.sql(_pairs_sql_from_collapsed(view, band_cap))
@@ -1239,14 +1148,19 @@ def minhash_recall_audit_frame(
     )
 
 
-def _simhash_sqlx(hs: str, bits: int) -> str:
-    """Spark-SQL text of simhash64 over a hash-array reference — the same
-    vote/pack fold, one JVM parse instead of ~200 py4j calls building the
-    `bits`-branch CASE tree (see _word_3grams_sqlx; r13 optimization
-    round). bits ≤ 63 only: the bit-63 mask is the signed min-long, whose
-    SQL literal needs special-casing the Column path already handles."""
-    if bits > 63:
-        raise ValueError("str fast path supports bits <= 63; pass a Column")
+# SimHash width: 60 bits pairs with md5-derived token hashes (the first 15
+# hex chars), which both engines compute identically, so the DuckDB oracle
+# replays the signature bit-for-bit. 60 ≤ 63 also keeps every bit mask a
+# positive BIGINT literal.
+_SIMHASH_BITS = 60
+
+
+def _simhash_sqlx(hs: str) -> str:
+    """Spark-SQL text of simhash64 over a hash-array reference — the
+    vote/pack fold as one JVM parse instead of ~200 py4j calls building
+    the per-bit CASE tree (see _word_3grams_sqlx; r13 optimization
+    round)."""
+    bits = _SIMHASH_BITS
     masks = [1 << b for b in range(bits)]
     votes_arr = ", ".join(
         f"(CASE WHEN (h & {m}L) != 0 THEN 1 ELSE -1 END)" for m in masks
@@ -1263,41 +1177,19 @@ def _simhash_sqlx(hs: str, bits: int) -> str:
     return f"aggregate({packed}, CAST(0 AS BIGINT), (acc, x) -> acc | x)"
 
 
-def simhash64(hashes_col: Column | str, bits: int = 64) -> Column:
-    """SimHash over a pre-hashed token array, packed into one long.
+def simhash64(hashes_col: str) -> Column:
+    """_SIMHASH_BITS-bit SimHash over a pre-hashed token array, packed into
+    one long.
 
     Per bit b: sign of Σ_tokens (bit b of token hash ? +1 : -1); the
-    signature packs the signs into one long. One fold with a `bits`-element
-    vote accumulator (same single-pass rationale as minhash_signature: N
-    separate aggregates would re-inline the token-hash transform N×). Bit
-    masks are Python-int constants (bit 63 as the signed min-long) so
-    everything stays in codegen'd higher-order functions. bits=60 pairs
-    with md5-derived token hashes (15 hex chars) for cross-engine oracles;
-    bits=64 pairs with xxhash64 (Spark-only, unit-tested).
+    signature packs the signs into one long. One fold with a per-bit vote
+    accumulator (same single-pass rationale as minhash_signature: N
+    separate aggregates would re-inline the token-hash transform N×), so
+    everything stays in codegen'd higher-order functions.
 
-    Accepts a plain column/field reference STRING (preferred for bits ≤ 63:
-    one F.expr — see _word_3grams_sqlx) or an arbitrary Column (legacy
-    py4j-built path, identical longs — pinned in tests/test_sqlx_twins.py).
+    Takes a column or field NAME: one F.expr (see _word_3grams_sqlx).
     """
-    if isinstance(hashes_col, str):
-        return F.expr(_simhash_sqlx(hashes_col, bits))
-    masks = [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)]
-    init = F.array_repeat(F.lit(0), bits)
-
-    def step(acc: Column, h: Column) -> Column:
-        bit_votes = F.array(
-            *[F.when(h.bitwiseAND(F.lit(m)) != 0, 1).otherwise(-1) for m in masks]
-        )
-        return F.zip_with(acc, bit_votes, lambda a, b: a + b)
-
-    votes = F.aggregate(hashes_col, init, step)
-    mask_arr = F.array(*[F.lit(m) for m in masks])
-    packed = F.zip_with(
-        votes, mask_arr, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(
-        packed, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x)
-    )
+    return F.expr(_simhash_sqlx(hashes_col))
 
 
 @query(
@@ -1344,9 +1236,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Token hashes are the first 15 md5 hex chars as a 60-bit integer — md5 is
     identical across engines, so the DuckDB oracle replays the whole
     signature computation bit-for-bit (the previous xxhash64 form was
-    Spark-only and could only be rows-count-checked). The 64-bit xxhash64
-    variant of simhash64 stays unit-tested for production use where oracle
-    twinning doesn't constrain the hash."""
+    Spark-only and could only be rows-count-checked)."""
     d = spread(load_table(spark, sf_dir, "documents"), spark, dense=True)
     hashed = d.select(
         "doc_id",
@@ -1355,7 +1245,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
         ).alias("hs"),
     )
-    sigs = hashed.select("doc_id", simhash64("hs", bits=60).alias("sig"))
+    sigs = hashed.select("doc_id", simhash64("hs").alias("sig"))
     chunks = sigs.select(
         "doc_id",
         "sig",

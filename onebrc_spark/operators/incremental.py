@@ -58,15 +58,22 @@ from onebrc_spark.sources.catalog import load_table, spread
 _NEW_BUCKET_MAX = 3
 
 
-def is_new_batch(doc_id: Column) -> Column:
-    """Content-addressed batch membership (deterministic, source-agnostic) —
-    built on mlprep's ONE md5-bucket idiom (round-5 dedup of 4 copies)."""
-    from onebrc_spark.operators.mlprep import _hash_bucket
+def _is_new_sqlx(expr: str) -> str:
+    """Spark-SQL text of batch membership: mlprep's ONE md5-bucket idiom
+    below _NEW_BUCKET_MAX."""
+    from onebrc_spark.operators.mlprep import _hash_bucket_sqlx
 
-    return _hash_bucket(doc_id) < _NEW_BUCKET_MAX
+    return f"{_hash_bucket_sqlx(expr)} < {_NEW_BUCKET_MAX}"
+
+
+def is_new_batch(doc_id: str) -> Column:
+    """Content-addressed batch membership (deterministic, source-agnostic)
+    of the doc_id column NAMED `doc_id`."""
+    return F.expr(_is_new_sqlx(doc_id))
 
 
 def _is_new_sql(expr: str) -> str:
+    """DuckDB twin of _is_new_sqlx."""
     from onebrc_spark.operators.mlprep import hash_bucket_sql
 
     return f"({hash_bucket_sql(expr)}) < {_NEW_BUCKET_MAX}"
@@ -76,8 +83,8 @@ def _band_table(docs_ws: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig) from (doc_id, ws) — the ARRAY-keyed band
     form, kept for the BUCKETED corpus asset (corpus_band_table), where
     the (band, band_sig) columns are the bucket keys themselves. The
-    in-flight batch×corpus join uses _band_key_table's hashed 64-bit keys
-    instead (see there for why)."""
+    in-flight batch×corpus join uses hashed 64-bit keys instead (see
+    _admission_sql for why)."""
     sigs = docs_ws.select(
         "doc_id", minhash_signature("ws").alias("sig")
     )
@@ -99,147 +106,36 @@ def _band_table(docs_ws: DataFrame) -> DataFrame:
     ).select("doc_id", "b.band", "b.band_sig")
 
 
-def _split_batch_corpus(
-    docs: DataFrame, new_col: Column
-) -> tuple[DataFrame, DataFrame]:
-    """The ONE derivation of the is_new split — every consumer (both
-    rejection gates AND the admission manifest) must see the identical
-    membership, so batch/corpus frames come from here only. All input
-    columns are carried (Catalyst prunes the unused ones), so manifest
-    consumers can keep e.g. `source` without a second derivation."""
-    tagged = docs.withColumn("is_new", new_col)
-    return (
-        tagged.filter(F.col("is_new")).drop("is_new"),
-        tagged.filter(~F.col("is_new")).drop("is_new"),
-    )
-
-
-def _band_key_table(docs_ws: DataFrame) -> DataFrame:
-    """(doc_id, band_key): one xxhash64 long per band over the signature
-    slice — the in-flight join form, mirroring dedup.py's round-5 band-key
-    change (8-byte shuffle keys + primitive codegen compares, measured
-    ~25% off the array-keyed join there). Equal slices always hash equal,
-    so no true candidate is lost; a collision only ADDS a candidate, which
-    the exact-Jaccard verification downstream rejects."""
-    sigs = docs_ws.select("doc_id", minhash_signature("ws").alias("sig"))
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(band),
-                        *[
-                            F.element_at(F.col("sig"), band * _LSH_ROWS + j + 1)
-                            for j in range(_LSH_ROWS)
-                        ],
-                    )
-                    for band in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
-
-
-def _candidates_from_split(batch: DataFrame, corpus: DataFrame) -> DataFrame:
-    bb = _band_key_table(
-        batch.select("doc_id", word_3grams("text").alias("ws"))
-    ).alias("bb")
-    cb = _band_key_table(
-        corpus.select("doc_id", word_3grams("text").alias("ws"))
-    ).alias("cb")
-    return (
-        bb.join(cb, F.col("bb.band_key") == F.col("cb.band_key"))
-        .select(
-            F.col("bb.doc_id").alias("new_id"), F.col("cb.doc_id").alias("corpus_id")
-        )
-        .distinct()
-    )
-
-
-def lsh_candidates(docs: DataFrame, new_col: Column) -> DataFrame:
-    """(new_id, corpus_id) LSH band-collision candidates of the new batch
-    against the corpus — batch×corpus ONLY; the corpus never self-joins
-    (pinned structurally in tests/test_plans.py)."""
-    return _candidates_from_split(*_split_batch_corpus(docs, new_col))
-
-
-def incremental_rejections(
-    docs: DataFrame, new_col: Column, threshold: float = _MINHASH_THRESHOLD
-) -> DataFrame:
-    """doc_ids of NEW documents rejected against the existing corpus, with
-    the gate that caught them: (doc_id, reason ∈ {'exact', 'near'}).
-
-    `docs` needs (doc_id, text); `new_col` is the batch-membership boolean.
-    Exact rejections are decided first; the near gate only ever adds docs
-    the exact gate admitted (a doc is counted once, by its cheapest gate).
-    """
-    batch, corpus = _split_batch_corpus(docs, new_col)
-
-    # Gate 1 — exact: digests only cross the wire, never text.
-    corpus_digests = corpus.select(F.md5("text").alias("digest")).distinct()
-    exact_rej = (
-        batch.select("doc_id", F.md5("text").alias("digest"))
-        .join(corpus_digests, "digest", "left_semi")
-        .select("doc_id", F.lit("exact").alias("reason"))
-    )
-
-    # Gate 2 — near-dup: batch bands × corpus bands ONLY (the corpus never
-    # self-joins), then exact-Jaccard verification of the candidates. The
-    # candidate set (not the corpus) drives the verify joins: texts are
-    # attached per candidate pair and shingled THERE, so the full corpus
-    # is shingled exactly once (for banding) — verification work is
-    # O(candidates), and the small candidate side broadcasts, leaving the
-    # corpus text scan exchange-free.
-    candidates = _candidates_from_split(batch, corpus)
-    inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
-    union = (
-        F.size("ws_a") + F.size("ws_b") - F.size(F.array_intersect("ws_a", "ws_b"))
-    )
-    near_rej = (
-        candidates.join(
-            batch.select(
-                F.col("doc_id").alias("new_id"), F.col("text").alias("text_a")
-            ),
-            "new_id",
-        )
-        .join(
-            corpus.select(
-                F.col("doc_id").alias("corpus_id"), F.col("text").alias("text_b")
-            ),
-            "corpus_id",
-        )
-        .withColumn("ws_a", word_3grams("text_a"))
-        .withColumn("ws_b", word_3grams("text_b"))
-        # ANSI-0/0 guard (edge-fixture class): two sub-3-gram docs always
-        # band-collide (empty sets share a signature) and their undefined
-        # Jaccard must DROP — DuckDB's x/0 is NULL, Spark would throw.
-        .filter(
-            inter / F.when(union == 0, F.lit(None)).otherwise(union) >= threshold
-        )
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-        .join(exact_rej.select("doc_id"), "doc_id", "left_anti")
-        .select("doc_id", F.lit("near").alias("reason"))
-    )
-    return exact_rej.unionByName(near_rej)
-
-
 def _admission_sql(view: str) -> str:
     """The full admission query as ONE Spark-SQL statement over the spread
     documents view (r14, guide §1.2 step 2 — the one-parse technique the
-    minhash build uses, see dedup._pairs_sql_from_collapsed). The Column
-    composition built ~1,700 py4j round trips per query build, re-analyzing
-    the shingle/signature forests at every Dataset creation; this is one
-    parse + one analysis. Each CTE mirrors its helper (the helpers stay —
-    incremental_rejections/lsh_candidates are the reference twins and the
-    streaming gate's building blocks); the SQL path is pinned row-identical
-    in tests/test_sqlx_twins.py and end-to-end by the DuckDB oracle."""
-    h = f"ascii(substring(md5(CAST(doc_id AS STRING)), 1, 1))"
-    is_new = (
-        f"(CASE WHEN {h} <= 57 THEN {h} - 48 ELSE {h} - 87 END) "
-        f"< {_NEW_BUCKET_MAX}"
-    )
+    minhash build uses, see dedup._pairs_sql_from_collapsed). A Column
+    composition built ~1,700 py4j round trips per query build,
+    re-analyzing the shingle/signature forests at every Dataset creation;
+    this is one parse + one analysis.
+
+    The is_new split is derived exactly once (the `tagged` CTE), so both
+    gates and the manifest see the identical membership.
+
+      - Exact gate: digests only cross the wire, never text. Exact
+        rejections are decided first; the near gate only ever adds docs
+        the exact gate admitted (a doc is counted once, by its cheapest
+        gate).
+      - Near gate: batch bands × corpus bands ONLY (the corpus never
+        self-joins), then exact-Jaccard verification of the candidates.
+        Band keys are one xxhash64 long per band over the signature slice
+        (dedup.py's round-5 band-key change: 8-byte shuffle keys +
+        primitive codegen compares, measured ~25% off the array-keyed
+        join). Equal slices always hash equal, so no true candidate is
+        lost; a collision only ADDS a candidate, which the verification
+        rejects. The candidate set (not the corpus) drives the verify
+        joins: texts are attached per candidate pair and shingled THERE,
+        so the full corpus is shingled exactly once (for banding) —
+        verification work is O(candidates), and the small candidate side
+        broadcasts, leaving the corpus text scan exchange-free.
+      - ANSI-0/0 guard (edge-fixture class): two sub-3-gram docs always
+        band-collide (empty sets share a signature) and their undefined
+        Jaccard must DROP — DuckDB's x/0 is NULL, Spark would throw."""
     sig = _minhash_signature_sqlx("ws")
     band_terms = ", ".join(
         "xxhash64({b}, {els})".format(
@@ -261,7 +157,8 @@ def _admission_sql(view: str) -> str:
     )
     return f"""
     WITH tagged AS (
-      SELECT doc_id, source, text, {is_new} AS is_new FROM {view}
+      SELECT doc_id, source, text, {_is_new_sqlx('doc_id')} AS is_new
+      FROM {view}
     ),
     batch AS (SELECT doc_id, source, text FROM tagged WHERE is_new),
     corpus AS (SELECT doc_id, text FROM tagged WHERE NOT is_new),
@@ -383,11 +280,9 @@ def dedup_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     all, in DuckDB; the per-source admitted/rejected counts hash-verify the
     full pipeline."""
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    # ONE spark.sql for the whole pipeline (r14, see _admission_sql): the
-    # is_new split is derived exactly once inside the statement (the
-    # tagged CTE), preserving the one-derivation invariant the helper API
-    # enforces structurally. The view resolves at the sql() call, so the
-    # returned frame is immune to later re-registrations.
+    # ONE spark.sql for the whole pipeline (see _admission_sql). The view
+    # resolves at the sql() call, so the returned frame is immune to later
+    # re-registrations.
     view = "_onebrc_adm_docs"
     docs.createOrReplaceTempView(view)
     return spark.sql(_admission_sql(view))

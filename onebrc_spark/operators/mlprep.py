@@ -31,22 +31,28 @@ from onebrc_spark.sources.catalog import load_table
 _MIX_QUOTA = 12
 
 
-def _hash_bucket(key: Column) -> Column:
-    """Deterministic bucket in [0, 16) from the first hex digit of md5(key).
+def _hash_bucket_sqlx(expr: str) -> str:
+    """Deterministic bucket in [0, 16) from the first hex digit of md5(key),
+    as Spark-SQL text over a column reference.
 
     '0'-'9' → 0-9 (ascii 48-57), 'a'-'f' → 10-15 (ascii 97-102); expressed
-    with ascii() arithmetic so the identical expression runs in DuckDB.
-    THE one definition of the idiom — incremental batch membership and the
-    cluster-safe split build on this pair, so a change to the bucketing
-    applies everywhere at once instead of silently desynchronizing an
-    oracle from its Spark plan.
+    with ascii() arithmetic so the identical expression runs in DuckDB
+    (hash_bucket_sql). THE one Spark definition of the idiom — incremental
+    batch membership, the cluster-safe split and the mixture weights build
+    on it, so a change to the bucketing applies everywhere at once instead
+    of silently desynchronizing an oracle from its Spark plan.
     """
-    a = F.ascii(F.substring(F.md5(key.cast("string")), 1, 1))
-    return F.when(a <= 57, a - 48).otherwise(a - 87)
+    h = f"ascii(substring(md5(CAST({expr} AS STRING)), 1, 1))"
+    return f"(CASE WHEN {h} <= 57 THEN {h} - 48 ELSE {h} - 87 END)"
+
+
+def _hash_bucket(key: str) -> Column:
+    """_hash_bucket_sqlx over the column NAMED `key`."""
+    return F.expr(_hash_bucket_sqlx(key))
 
 
 def hash_bucket_sql(expr: str) -> str:
-    """DuckDB twin of _hash_bucket over an arbitrary SQL expression."""
+    """DuckDB twin of _hash_bucket_sqlx over an arbitrary SQL expression."""
     h = f"ascii(substr(md5(CAST({expr} AS VARCHAR)), 1, 1))"
     return f"""
     CASE WHEN {h} <= 57
@@ -81,7 +87,7 @@ def ml_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     char counts — the reproducible-split primitive every training pipeline
     needs (see module docstring for why hash, not rand)."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = _hash_bucket(F.col("doc_id"))
+    bucket = _hash_bucket("doc_id")
     split = (
         F.when(bucket < 12, "train").when(bucket < 14, "val").otherwise("test")
     )
@@ -627,7 +633,7 @@ def ml_quality_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     its exact size forecast, so the op doubles as the pre-write cost
     estimate."""
     d = load_table(spark, sf_dir, "documents")
-    w_tenths = (F.lit(10) + _hash_bucket(F.col("source")) * 2).alias("w_tenths")
+    w_tenths = (F.lit(10) + _hash_bucket("source") * 2).alias("w_tenths")
     digits = F.translate(
         F.md5(F.concat(F.lit("ups:"), F.col("doc_id").cast("string"))),
         "abcdef",

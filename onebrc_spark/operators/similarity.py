@@ -24,7 +24,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -112,7 +111,7 @@ def sql_double_array(vals) -> str:
     return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vals) + ")"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     """Exact cosine similarity of two float-array columns, double math.
 
     A zero-norm vector makes the denominator 0.0: ANSI Spark 4 throws
@@ -123,18 +122,9 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     edge-fixture hardening class; the driver's random embeddings never
     contain a zero vector, so this was latent.
 
-    Accepts SQL reference STRINGS (preferred: one F.expr — see
-    _cosine_sqlx) or Columns (legacy py4j-built path, identical doubles —
-    pinned in tests/test_properties.py)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cosine_sqlx(a, b))
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.transform(da, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform(db, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    den = na * nb
-    return dot / F.when(den == 0.0, F.lit(None)).otherwise(den)
+    Takes SQL reference or literal STRINGS: one F.expr (see _cosine_sqlx;
+    sql_double_array spells a constant vector)."""
+    return F.expr(_cosine_sqlx(a, b))
 
 
 _COS_SQL = """
@@ -231,8 +221,8 @@ def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucket_sqlx_for(emb: str, planes: list[list[int]]) -> str:
-    """Spark-SQL text of _bucket_for over an embedding reference — the same
-    sign-pattern sum (same fold order, same cast-to-double multiply), built
+    """Sign-pattern bucket id (0..2^len(planes)-1) for one plane set, as
+    Spark-SQL text over an embedding reference: the sign-pattern sum built
     by ONE JVM parse instead of ~3,500 py4j round trips for the 8×dim
     literal planes (r13 optimization round; the bucket builder dominated
     the build phase of sim_ann_lsh and dedup_embedding_neardup)."""
@@ -247,27 +237,9 @@ def _bucket_sqlx_for(emb: str, planes: list[list[int]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _bucket_for(emb: Column | str, planes: list[list[int]]) -> Column:
-    """Sign-pattern bucket id (0..2^len(planes)-1) for one plane set.
-    Pass a SQL reference string for the one-parse fast path (see
-    _bucket_sqlx_for; pinned in tests/test_sqlx_twins.py)."""
-    if isinstance(emb, str):
-        return F.expr(_bucket_sqlx_for(emb, planes))
-    bucket = F.lit(0)
-    for j, plane in enumerate(planes):
-        pv = F.array(*[F.lit(float(v)) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(emb, pv, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << j)).otherwise(0)
-    return bucket
-
-
-def lsh_bucket(emb: Column | str) -> Column:
+def lsh_bucket(emb: str) -> Column:
     """Sign-pattern LSH bucket id (0..2^H-1) from the fixed hyperplanes."""
-    return _bucket_for(emb, _hyperplanes())
+    return F.expr(_bucket_sqlx_for(emb, _hyperplanes()))
 
 
 def _bucket_sql_for(emb: str, planes: list[list[int]]) -> str:
@@ -648,20 +620,16 @@ def _centroids() -> list[list[int]]:
     return cents
 
 
-def _cell_scores(emb: Column | str) -> Column:
-    """Array of cosine(emb, centroid_j) for all K centroids. Pass a SQL
-    reference string for the one-parse fast path (see _cosine_sqlx)."""
-    if isinstance(emb, str):
-        return F.expr(
-            "array("
-            + ", ".join(
-                _cosine_sqlx(emb, sql_double_array([float(v) for v in c]))
-                for c in _centroids()
-            )
-            + ")"
+def _cell_scores(emb: str) -> Column:
+    """Array of cosine(emb, centroid_j) for all K centroids over an
+    embedding reference, as one F.expr (see _cosine_sqlx)."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            _cosine_sqlx(emb, sql_double_array([float(v) for v in c]))
+            for c in _centroids()
         )
-    return F.array(
-        *[cosine(emb, F.lit([float(v) for v in c])) for c in _centroids()]
+        + ")"
     )
 
 
@@ -843,22 +811,12 @@ def kmeans_fit(
         # cosines are all NULL (cosine()'s ANSI guard), which would give it
         # a NULL cell here but cell 1 in the oracle's row_number replay —
         # the sentinel sends it to the first cell in BOTH engines.
-        # F.lit(ndarray) (r9, correcting r8's comment — ADVICE r8): in
-        # classic PySpark, lit(list) desugars to array(*[lit(v) ...]) — the
-        # same 64-node tree, only constant-folded AFTER analysis — whereas
-        # lit(1-D ndarray) builds ONE ArrayType Literal pre-analysis
-        # (verified on this install: the parsed plan shows `[v,...]`, not
-        # `array(v, ...)`). float64 round-trips the Python doubles exactly,
-        # so values are bit-identical.
+        # sql_double_array spells each centroid as ONE constant array
+        # (constant-folded from exact repr() doubles), bit-identical to the
+        # Python doubles.
         cs = F.array(
             *[
-                F.coalesce(
-                    cosine(
-                        F.col("embedding"),
-                        F.lit(np.asarray(c, dtype=np.float64)),
-                    ),
-                    F.lit(-2.0),
-                )
+                F.coalesce(cosine("embedding", sql_double_array(c)), F.lit(-2.0))
                 for c in cents
             ]
         )

@@ -474,9 +474,7 @@ def main() -> None:
             .select(
                 F.col("a.vec_id").alias("id_a"),
                 F.col("b.vec_id").alias("id_b"),
-                cos_round6(
-                    cosine(F.col("a.embedding"), F.col("b.embedding"))
-                ).alias("cos_sim"),
+                cos_round6(cosine("a.embedding", "b.embedding")).alias("cos_sim"),
             )
             .filter(F.col("cos_sim") >= _ANN_COS_MIN)
             .distinct()
@@ -928,7 +926,7 @@ def main() -> None:
         truth = (
             e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
             .withColumn(
-                "cos_sim", cos_round6(cosine(F.col("qv"), F.col("embedding")))
+                "cos_sim", cos_round6(cosine("qv", "embedding"))
             )
             .filter(F.col("cos_sim") >= _ANN_COS_MIN)
             .select("qid", "vec_id", "cos_sim")

@@ -954,3 +954,21 @@ def test_half_away_long_matches_round(spark):
         for col in (half_away_long(x), F.round(x).cast("long")):
             with pytest.raises(Exception, match="CAST_OVERFLOW"):
                 one.select(col).collect()
+
+
+def test_sql_double_array_roundtrips_exactly(spark):
+    """similarity.sql_double_array spells a constant vector as Spark-SQL
+    text (kmeans_fit's centroids, _cell_scores): each element must come
+    back bit-identical to the Python double and to the ArrayType literal
+    F.lit(ndarray) builds."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from onebrc_spark.operators import similarity
+
+    vals = [0.1, -2.5e-17, 1234567.875, float(np.float64(1) / 3)]
+    row = spark.range(1).select(
+        F.expr(similarity.sql_double_array(vals)).alias("a"),
+        F.lit(np.asarray(vals, dtype=np.float64)).alias("b"),
+    ).collect()[0]
+    assert row["a"] == row["b"] == vals

@@ -13,12 +13,15 @@ from tests.conftest import SMOKE_SF_DIR
 
 
 def _sig_of(spark, text: str) -> int:
+    """simhash64 over the token hashes dedup_simhash uses: the first 15 md5
+    hex chars of each token as a 60-bit integer."""
     df = spark.createDataFrame([(text,)], "text string").select(
-        simhash64(
-            F.transform(F.split(F.col("text"), " "), lambda w: F.xxhash64(w))
-        ).alias("sig")
+        F.transform(
+            F.split(F.col("text"), " "),
+            lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
+        ).alias("hs")
     )
-    return df.collect()[0]["sig"]
+    return df.select(simhash64("hs").alias("sig")).collect()[0]["sig"]
 
 
 def test_simhash_identical_texts_equal(spark):
@@ -39,7 +42,7 @@ def test_simhash_near_texts_close_far_texts_far(spark):
 
 def test_word_3grams(spark):
     df = spark.createDataFrame([("a b c d",)], "text string").select(
-        word_3grams(F.col("text")).alias("g")
+        word_3grams("text").alias("g")
     )
     assert sorted(df.collect()[0]["g"]) == ["a b c", "b c d"]
 
@@ -68,7 +71,7 @@ def test_ngram_jaccard_block_budget_enforced(spark):
     d = spark.createDataFrame(rows, "doc_id long, lang string, len_bucket long, text string")
     docs = d.select(
         "doc_id", "lang", "len_bucket",
-        F.array_sort(word_3grams(F.col("text"))).alias("gset"),
+        F.array_sort(word_3grams("text")).alias("gset"),
     )
 
     fits, oversized = split_by_block_budget(docs, ["lang", "len_bucket"], 50)
@@ -193,32 +196,53 @@ def test_minhash_pairs_memoized_without_persist_leak(spark):
 
 
 def test_incremental_rejections_gates_and_asymmetry(spark):
-    """Incremental admission: a byte-identical new doc is caught by the
-    EXACT gate, a shingled near-dup by the NEAR gate, a novel doc passes,
-    and duplicates *within the corpus side* are never reported (the
-    corpus×corpus quadrant must not be joined)."""
-    from onebrc_spark.operators.incremental import incremental_rejections
+    """Incremental admission (the registered _admission_sql statement): a
+    byte-identical new doc is caught by the EXACT gate, a shingled near-dup
+    by the NEAR gate, a novel doc passes, and duplicates *within the
+    corpus side* are never reported (the corpus×corpus quadrant must not
+    be joined). Each batch doc gets its own source, so the per-source
+    manifest is a per-doc verdict; doc_ids are picked by their md5 bucket
+    (first hex digit of md5(doc_id) < 3 = new batch)."""
+    from onebrc_spark.operators.incremental import _admission_sql, is_new_batch
 
     base = " ".join(f"tok{i % 7} word{i % 11}" for i in range(40))
     near = base.replace("tok1", "tokX", 2)  # high-Jaccard variant
     novel = " ".join(f"zz{i} qq{i}" for i in range(40))
     rows = [
-        # corpus (is_new = False): includes an internal exact-dup pair that
-        # must NOT appear in the output.
-        (0, base, False),
-        (1, base, False),
-        (2, novel, False),
-        # batch (is_new = True)
-        (10, base, True),   # exact dup of corpus doc 0/1
-        (11, near, True),   # near dup of corpus doc 0
-        (12, "totally fresh content unlike anything else here", True),
+        # corpus: includes an internal exact-dup pair (1, 2) that must NOT
+        # appear in the output, and a shingle-less two-token doc.
+        (1, "corpus", base),
+        (2, "corpus", base),
+        (3, "corpus", novel),
+        (4, "corpus", "ab cd"),
+        # batch
+        (6, "exact", base),  # exact dup of corpus doc 1/2 (and Jaccard 1.0)
+        (19, "near", near),  # near dup of corpus doc 1
+        (24, "novel", "totally fresh content unlike anything else here"),
+        # exact dup of corpus doc 4: no shingles, so its near-gate Jaccard
+        # is 0/0 → NULL → dropped; only the exact gate can reject it
+        (27, "exact_short", "ab cd"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, is_new boolean")
-    out = {
-        r["doc_id"]: r["reason"]
-        for r in incremental_rejections(docs, F.col("is_new")).collect()
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    batch_ids = {r["doc_id"] for r in docs.filter(is_new_batch("doc_id")).collect()}
+    assert batch_ids == {6, 19, 24, 27}
+
+    view = "_test_adm_docs"
+    docs.createOrReplaceTempView(view)
+    try:
+        out = {
+            r["source"]: (r["n_new"], r["n_admitted"], r["n_rejected"])
+            for r in spark.sql(_admission_sql(view)).collect()
+        }
+    finally:
+        spark.catalog.dropTempView(view)
+    # n_new == 1 for "exact": a doc both gates would catch is counted once
+    assert out == {
+        "exact": (1, 0, 1),
+        "exact_short": (1, 0, 1),
+        "near": (1, 0, 1),
+        "novel": (1, 1, 0),
     }
-    assert out == {10: "exact", 11: "near"}
 
 
 def test_incremental_candidate_load_grows_slower_than_global_dedup(spark):
@@ -238,7 +262,7 @@ def test_incremental_candidate_load_grows_slower_than_global_dedup(spark):
 
     def band_occupancy(df):
         return _band_table(
-            df.select("doc_id", word_3grams(F.col("text")).alias("ws"))
+            df.select("doc_id", word_3grams("text").alias("ws"))
         ).groupBy("band", "band_sig")
 
     loads = {}

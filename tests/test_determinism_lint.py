@@ -225,3 +225,75 @@ def test_round_to_long_lint_shapes():
     assert not _round_to_long_sites('F.round(F.col("v"), 1).alias("v")')
     assert not _round_to_long_sites('F.round(F.col("v")).cast("double")')
     assert not _round_to_long_sites('half_away_long(F.col("v") * 100)')
+
+
+def _dual_form_sites(source: str) -> list[str]:
+    """Functions that keep a second spelling of one computation: a
+    parameter annotated with both Column and str (a `|` union in either
+    order, Union[...], string annotations), or an `if isinstance(<param>, str)`
+    branch that returns early or has an else — the string fast path with
+    a Column-built fallback behind it."""
+    sites = []
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        args = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+        for a in args:
+            ann = ast.unparse(a.annotation) if a.annotation else ""
+            if re.search(r"\bColumn\b", ann) and re.search(r"\bstr\b", ann):
+                sites.append(f"{fn.name}:{fn.lineno} ({a.arg}: {ann})")
+        dispatch = re.compile(
+            r"\bisinstance\((%s), str\)" % "|".join(re.escape(a.arg) for a in args)
+        )
+        for node in ast.walk(fn):
+            if not (isinstance(node, ast.If) and args):
+                continue
+            early = any(isinstance(n, ast.Return) for b in node.body for n in ast.walk(b))
+            if (early or node.orelse) and dispatch.search(ast.unparse(node.test)):
+                sites.append(f"{fn.name}:{node.lineno} ({ast.unparse(node.test)})")
+    return sites
+
+
+def test_one_spark_spelling_per_helper():
+    """Each expression helper has ONE Spark spelling: it takes a column
+    NAME and builds one F.expr. A helper that also accepts a Column and
+    keeps a py4j-built fallback branch is an undeclared twin — only the
+    DuckDB oracle is an independent check, so a second Spark spelling
+    costs code and review without checking anything."""
+    violations = [
+        f"{path.relative_to(SRC.parent)}: {site}"
+        for path in sorted(SRC.rglob("*.py"))
+        for site in _dual_form_sites(path.read_text())
+    ]
+    assert not violations, (
+        "dual-form (Column or str) helpers — keep the name form only:\n"
+        + "\n".join(violations)
+    )
+
+
+def test_dual_form_lint_shapes():
+    """The scanner flags both regrowth shapes and passes name-only helpers."""
+    assert _dual_form_sites("def f(c: str | Column) -> Column:\n    return c\n")
+    assert _dual_form_sites("def f(c: 'Column|str'):\n    return c\n")
+    assert _dual_form_sites("def f(c: Union[Column, str]):\n    return c\n")
+    assert _dual_form_sites(
+        "def f(c):\n"
+        "    if isinstance(c, str):\n"
+        "        return F.expr(c)\n"
+        "    return F.upper(c)\n"
+    )
+    assert _dual_form_sites(
+        "def f(a, b):\n"
+        "    if isinstance(a, str) and isinstance(b, str):\n"
+        "        out = F.expr(a + b)\n"
+        "    else:\n"
+        "        out = a + b\n"
+        "    return out\n"
+    )
+    assert not _dual_form_sites("def f(c: str) -> Column:\n    return F.expr(c)\n")
+    assert not _dual_form_sites(
+        "def f(cols):\n"
+        "    if isinstance(cols, str):\n"
+        "        cols = [cols]\n"
+        "    return cols\n"
+    )

@@ -214,7 +214,7 @@ def test_corpus_semantic_contracts(spark) -> None:
         # non-vacuity at sf0.01). Pin the property where it holds so a
         # regeneration that drops sf0.1's exact dups is named here.
         if sf_dir == _SF01_DIR:
-            tagged = docs.select("text", is_new_batch(F.col("doc_id")).alias("nw"))
+            tagged = docs.select("text", is_new_batch("doc_id").alias("nw"))
             cross = (
                 tagged.filter(F.col("nw"))
                 .select("text")

@@ -400,10 +400,7 @@ def test_incremental_admission_never_joins_corpus_with_itself(spark):
     only. Pin it structurally — the near-dup candidate join's two sides
     must carry opposite is_new filters, so the corpus side never self-joins
     (that quadrant is what makes re-running global dedup unaffordable)."""
-    from onebrc_spark.operators.incremental import (
-        dedup_incremental_admission,
-        is_new_batch,
-    )
+    from onebrc_spark.operators.incremental import dedup_incremental_admission
 
     df = dedup_incremental_admission(spark, SMOKE_SF_DIR)
     txt = explain_str(df)
@@ -414,16 +411,34 @@ def test_incremental_admission_never_joins_corpus_with_itself(spark):
     # and the plan has no cartesian product anywhere
     assert "CartesianProduct" not in txt
 
-    # Structural pin on the candidate join itself: its plan carries the
-    # batch polarity EXACTLY once and the corpus polarity EXACTLY once —
-    # a corpus×corpus (or batch×batch) band join would double one of them.
-    from onebrc_spark.operators.incremental import lsh_candidates
-    from onebrc_spark.sources.catalog import load_table
+    # Structural pin on the candidate join itself (the band_key join in
+    # the optimized plan): following each side's row-source path (child 0)
+    # down to its first Filter must reach the batch polarity on one side
+    # and the corpus polarity on the other — a corpus×corpus (or
+    # batch×batch) band join would repeat one of them.
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
 
-    docs = load_table(spark, SMOKE_SF_DIR, "documents")
-    ctxt = explain_str(lsh_candidates(docs, is_new_batch(F.col("doc_id"))))
-    assert ctxt.count("< 3") == 1, ctxt
-    assert ctxt.count(">= 3") == 1, ctxt
+    def source_filter(node):
+        while node.nodeName() != "Filter":
+            node = node.children().apply(0)
+        return node.condition().sql()
+
+    band_joins = [
+        n
+        for n in walk(df._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "Join"
+        and n.condition().isDefined()
+        and "band_key" in n.condition().get().sql()
+    ]
+    assert len(band_joins) == 1, [n.simpleString(5) for n in band_joins]
+    sides = band_joins[0].children()
+    conds = [source_filter(sides.apply(i)) for i in range(sides.size())]
+    assert sorted(">= 3" in c for c in conds) == [False, True], conds
+    assert sorted("< 3" in c for c in conds) == [False, True], conds
 
 
 def test_semantic_prune_centroid_is_broadcast(spark):
@@ -468,14 +483,13 @@ def test_bucketed_corpus_band_join_has_no_corpus_side_exchange(spark, tmp_path):
     from onebrc_spark.operators.incremental import (
         bucketed_candidates,
         corpus_band_table,
-        incremental_rejections,
         is_new_batch,
     )
     from onebrc_spark.sources.catalog import load_table
 
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
-    corpus = docs.filter(~is_new_batch(F.col("doc_id")))
-    batch = docs.filter(is_new_batch(F.col("doc_id")))
+    corpus = docs.filter(~is_new_batch("doc_id"))
+    batch = docs.filter(is_new_batch("doc_id"))
     cb = corpus_band_table(
         spark, corpus, "corpus_bands_smoke", str(tmp_path / "corpus_bands")
     )
@@ -494,8 +508,8 @@ def test_bucketed_corpus_band_join_has_no_corpus_side_exchange(spark, tmp_path):
     from onebrc_spark.operators.dedup import word_3grams
     from onebrc_spark.operators.incremental import _band_table
 
-    bb = _band_table(batch.select("doc_id", word_3grams(F.col("text")).alias("ws")))
-    cb0 = _band_table(corpus.select("doc_id", word_3grams(F.col("text")).alias("ws")))
+    bb = _band_table(batch.select("doc_id", word_3grams("text").alias("ws")))
+    cb0 = _band_table(corpus.select("doc_id", word_3grams("text").alias("ws")))
     inflight = (
         bb.alias("a")
         .hint("shuffle_merge")

@@ -178,7 +178,7 @@ def test_banded_lsh_candidates_bounded_as_corpus_grows(spark):
             banded_lsh_buckets(e, 4, rows_per_band).groupBy("band", "bucket").count()
         )
         fixed = pair_load(
-            e.select(lsh_bucket(F.col("embedding")).alias("b")).groupBy("b").count()
+            e.select(lsh_bucket("embedding").alias("b")).groupBy("b").count()
         )
         stats[n] = (banded, fixed)
 
@@ -288,6 +288,7 @@ def test_kmeans_deterministic_and_improves_assignment(spark):
         _centroids,
         cosine,
         kmeans_fit,
+        sql_double_array,
     )
     from onebrc_spark.sources.catalog import load_table
 
@@ -297,12 +298,7 @@ def test_kmeans_deterministic_and_improves_assignment(spark):
     assert fit1 == fit2
 
     def mean_best_cos(cents):
-        cs = F.array(
-            *[
-                cosine(F.col("embedding"), F.array(*[F.lit(float(v)) for v in c]))
-                for c in cents
-            ]
-        )
+        cs = F.array(*[cosine("embedding", sql_double_array(c)) for c in cents])
         return e.select(F.array_max(cs).alias("best")).agg(F.avg("best")).first()[0]
 
     before = mean_best_cos(_centroids())
@@ -349,7 +345,7 @@ def test_minhash_identical_inputs_identical_signatures(spark):
     )
     rows = {
         r["id"]: tuple(r["sig"])
-        for r in df.select("id", minhash_signature(F.col("shingles")).alias("sig")).collect()
+        for r in df.select("id", minhash_signature("shingles").alias("sig")).collect()
     }
     assert rows[1] == rows[2]
     assert rows[1] != rows[3]
@@ -955,7 +951,13 @@ def test_ivf_argmax_tie_margin_is_diagnosable(spark):
     where both engines break ties to the first cell by construction. A
     fixture regeneration that lands on a near-tie fails HERE, by name,
     instead of as a wholesale hash mismatch."""
-    from onebrc_spark.operators.similarity import _IVF_K, _centroids, cosine, kmeans_fit
+    from onebrc_spark.operators.similarity import (
+        _IVF_K,
+        _centroids,
+        cosine,
+        kmeans_fit,
+        sql_double_array,
+    )
     from onebrc_spark.sources.catalog import load_table
     from tests.conftest import SF_DIR
 
@@ -965,10 +967,7 @@ def test_ivf_argmax_tie_margin_is_diagnosable(spark):
     for it, cents in enumerate(trajectory):
         cs = F.array(
             *[
-                F.coalesce(
-                    cosine(F.col("embedding"), F.array(*[F.lit(v) for v in c])),
-                    F.lit(-2.0),
-                )
+                F.coalesce(cosine("embedding", sql_double_array(c)), F.lit(-2.0))
                 for c in cents
             ]
         )
@@ -1038,22 +1037,36 @@ def _docs_df(spark, rows):
     )
 
 
-def _minhash_compose(docs, band_cap=None):
-    """Run the collapse → route → band → verify → expand composition the
-    registered dedup_minhash_lsh plan uses, on an in-memory frame."""
+def _minhash_compose(spark, docs, band_cap=None):
+    """Run the composition the registered dedup_minhash_lsh plan uses
+    (_minhash_pairs_plan) on an in-memory frame: slim → duplicate census →
+    collapsed rows → the one-statement band/verify/expand SQL. Returns the
+    rep-level banded candidates (minhash_band_candidates over the same
+    collapsed rows, as the recall audit runs them) and the collected
+    (doc_a, doc_b) → jaccard pair map."""
     from onebrc_spark.operators.dedup import (
         _BAND_OCCUPANCY_CAP,
+        _collapsed_rows,
+        _dup_census,
+        _minhash_slim,
+        _pairs_sql_from_collapsed,
         minhash_band_candidates,
-        minhash_collapse,
-        minhash_expand_pairs,
-        minhash_verify_pairs,
     )
 
-    collapsed = minhash_collapse(docs)
-    ws = collapsed.select("doc_id", "ws")
-    cands = minhash_band_candidates(ws, band_cap or _BAND_OCCUPANCY_CAP)
-    rep_pairs = minhash_verify_pairs(ws, cands)
-    return cands, minhash_expand_pairs(rep_pairs, collapsed)
+    cap = band_cap or _BAND_OCCUPANCY_CAP
+    slim = _minhash_slim(docs)
+    collapsed = _collapsed_rows(slim, _dup_census(slim))
+    view = "_test_mh_collapsed"
+    collapsed.createOrReplaceTempView(view)
+    try:
+        pairs = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in spark.sql(_pairs_sql_from_collapsed(view, cap)).collect()
+        }
+    finally:
+        spark.catalog.dropTempView(view)
+    cands = minhash_band_candidates(collapsed.select("doc_id", "ws"), cap)
+    return cands, pairs
 
 
 def _true_jaccard(ta: str, tb: str) -> float | None:
@@ -1087,15 +1100,14 @@ def test_minhash_clique_precollapse_linear_candidates(spark):
     rows += [(300, "a b"), (301, "a b"), (302, "")]
     docs = _docs_df(spark, rows)
 
-    cands, pairs = _minhash_compose(docs)
+    cands, got = _minhash_compose(spark, docs)
     n_cands = cands.count()
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
 
     # (a) collapsed candidate join sees no clique-internal pair: candidates
     # are rep-level, and there are only 8 reps with shingles
     assert n_cands <= 8 * 7 / 2, n_cands
     # uncollapsed banding on the same corpus would carry the full clique
-    ws_all = docs.select("doc_id", word_3grams(F.col("text")).alias("ws")).filter(
+    ws_all = docs.select("doc_id", word_3grams("text").alias("ws")).filter(
         F.size("ws") > 0
     )
     assert minhash_band_candidates(ws_all).count() >= 40 * 39 / 2
@@ -1127,9 +1139,9 @@ def test_minhash_hot_band_cap_diverts(spark):
              (101, "alpha beta gamma delta epsilon zeta eta theta iota lambda")]
     docs = _docs_df(spark, rows)
 
-    cands, pairs = _minhash_compose(docs, band_cap=1)
+    cands, pairs = _minhash_compose(spark, docs, band_cap=1)
     assert cands.count() == 0
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+    got = set(pairs)
     assert got == {(i, j) for i in range(10) for j in range(i + 1, 10)}
 
 

@@ -152,9 +152,9 @@ def test_stream_incremental_admission_matches_batch_gate(spark):
     )
 
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
-    corpus = docs.filter(~is_new_batch(F.col("doc_id")))
+    corpus = docs.filter(~is_new_batch("doc_id"))
     new_stream = read_documents_stream(spark, SMOKE_SF_DIR).filter(
-        is_new_batch(F.col("doc_id"))
+        is_new_batch("doc_id")
     )
     out = run_to_completion(
         stream_incremental_admission(new_stream, corpus),
@@ -164,7 +164,7 @@ def test_stream_incremental_admission_matches_batch_gate(spark):
     )
     got = {r["doc_id"] for r in out.collect()}
 
-    batch_new = docs.filter(is_new_batch(F.col("doc_id")))
+    batch_new = docs.filter(is_new_batch("doc_id"))
     corpus_digests = corpus.select(F.md5("text").alias("digest")).distinct()
     want = {
         r["doc_id"]
