@@ -1198,14 +1198,12 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     rulebook note on engine-internal keys).
     """
     d = load_table(spark, sf_dir, "documents")
-    docs_view = "_onebrc_boiler_docs"
-    d.createOrReplaceTempView(docs_view)
     # TWO spark.sql statements around the lazy checkpoint (r14, guide §1.2
     # step 2 — the one-parse technique of dedup._pairs_sql_from_collapsed):
     # a Column composition created ~15 eagerly-analyzed Datasets, each
     # re-walking the segmenter forest — ~0.56 s of pure driver-side
     # construction per build at sf0.1, the bulk of this entry.
-    segs = spark.sql(_boiler_occurrence_sql(docs_view))
+    segs = spark.sql(_boiler_occurrence_sql("{docs}"), docs=d)
     # ONE traversal for both consumers: the lazy localCheckpoint truncates
     # lineage at the exploded narrow stream, so the census (hot-set
     # broadcast job) materializes it and the mark probe reads the stored
@@ -1216,9 +1214,11 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the SAME occurrence stream the mark pass consumes (an A/B test
     # measured 0.76 s vs 2.11 s for an array-column census at sf0.1); the
     # checkpoint upgrades "one shape" to "one execution".
-    segs_view = "_onebrc_boiler_segs"
-    segs.localCheckpoint(eager=False).createOrReplaceTempView(segs_view)
-    return spark.sql(_boiler_ledger_sql(docs_view, segs_view))
+    return spark.sql(
+        _boiler_ledger_sql("{docs}", "{segs}"),
+        docs=d,
+        segs=segs.localCheckpoint(eager=False),
+    )
 
 
 def _boiler_clean_sql(docs_view: str) -> str:
@@ -1329,6 +1329,4 @@ def text_boilerplate_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # ONE spark.sql (r14, same rationale as the ledger): a Column
     # composition was ~0.30 s of driver-side construction per build.
-    view = "_onebrc_boiler_docs"
-    d.createOrReplaceTempView(view)
-    return spark.sql(_boiler_clean_sql(view))
+    return spark.sql(_boiler_clean_sql("{docs}"), docs=d)

@@ -620,8 +620,13 @@ def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
     agg even on duplicate-free data. Now a 40-byte-row census
     (_dup_census) finds the duplicated digests first; unique docs — the
     overwhelming mass — pass through as a broadcast ANTI join against that
-    (normally tiny) census, and only dup-group members pay the
-    member-collection agg. Text never shuffles: when the census outgrows
+    (normally tiny) digest set, and only dup-group members, kept by a SEMI
+    join against the same set, pay the member-collection agg, which
+    recomputes rep_id and grp_n from the members it collects. Both joins
+    broadcast the identical digest set, so ReuseExchange builds that
+    broadcast — and computes the census — once; a join on the whole
+    census row would broadcast a second projection and compute the census
+    again. Text never shuffles: when the census outgrows
     the broadcast threshold (pathological dup mass), AQE falls back to a
     shuffled join — the r8 cost shape — rather than failing. On a
     duplicate-free corpus the census broadcast is EMPTY and AQE's
@@ -643,7 +648,8 @@ def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
         F.lit(1).cast("long").alias("grp_n"),
         F.array("doc_id").alias("ids"),
     ]
-    uniq = slim.join(dupc.select("digest"), "digest", "left_anti").select(*uniq_cols)
+    digests = dupc.select("digest")
+    uniq = slim.join(digests, "digest", "left_anti").select(*uniq_cols)
     # member collection happens ONLY for dup groups (post broadcast-join
     # filter), so the collect_list buffer and the shuffled `ids` arrays are
     # bounded by the corpus's duplicate mass, not its size. The O(k)-per-
@@ -651,9 +657,11 @@ def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
     # 8-byte-per-member array is far too big to enumerate C(k, 2) pairs
     # for, and belongs to dedup_exact's group-report instead.
     dup = (
-        slim.join(dupc, "digest")
-        .groupBy("digest", "rep_id", "grp_n")
+        slim.join(digests, "digest", "left_semi")
+        .groupBy("digest")
         .agg(
+            F.min("doc_id").alias("rep_id"),
+            F.count(F.lit(1)).alias("grp_n"),
             F.collect_list("doc_id").alias("ids"),
             # all group texts are byte-identical, so min(text) IS the
             # representative text — and only dup-group text reaches this agg
@@ -669,84 +677,81 @@ def _collapsed_rows(slim: DataFrame, dupc: DataFrame) -> DataFrame:
     return uniq.unionByName(dup)
 
 
-def _explode_id_pairs(df: DataFrame, carry: list[str]) -> DataFrame:
-    """All i<j pairs of each row's `ids` array as STREAMED rows (doc_a <
-    doc_b), keeping the `carry` columns. Two chained generators —
-    posexplode(ids), then explode of the positional tail slice — so peak
-    memory per input row is O(k), never the O(k²) a flatten/transform
-    in-row product would materialize before its explode (a 10⁵-member
-    clique's C(k, 2) structs are ~80 GB as ONE array value — the quadratic
-    blowup would just have moved from the shuffle into a row buffer).
-    collect_list order is nondeterministic, so the least/greatest
-    normalization keeps the emitted set order-independent."""
-    step1 = df.select(
-        *carry, F.col("ids"), F.posexplode("ids").alias("_i", "_x")
-    )
-    step2 = step1.select(
-        *carry,
-        "_x",
-        F.explode(F.slice("ids", F.col("_i") + F.lit(2), F.size("ids"))).alias("_y"),
-    )
-    return step2.select(
-        *carry,
-        F.least("_x", "_y").alias("doc_a"),
-        F.greatest("_x", "_y").alias("doc_b"),
+def _band_keys_sqlx(sig: str) -> str:
+    """Spark-SQL text of the LSH band keys of a MinHash signature
+    reference: array(xxhash64(band, sig slice), ...), one 64-bit key per
+    band instead of an array-typed (band, band_sig) key. Equal band slices
+    always hash equal, so no true candidate is ever lost; a hash collision
+    can only ADD a candidate, and every candidate is decided by the exact
+    Jaccard later (a collision changing the RESULT needs a colliding pair
+    that also passes jaccard ≥ τ: ~2^-64, far below the md5
+    content-addressing risk already accepted repo-wide). At scale this is
+    the difference between shuffling 8-byte keys and shuffling 3-element
+    long arrays (round 5: ~25% off the array-keyed join). The ONE Spark
+    band-key generator: the pair build, the recall audit and incremental
+    admission all band through it."""
+    return "array({})".format(
+        ", ".join(
+            "xxhash64({b}, {els})".format(
+                b=band,
+                els=", ".join(
+                    f"element_at({sig}, {band * _LSH_ROWS + j + 1})"
+                    for j in range(_LSH_ROWS)
+                ),
+            )
+            for band in range(_LSH_BANDS)
+        )
     )
 
 
-def minhash_band_candidates(
-    ws: DataFrame, band_cap: int = _BAND_OCCUPANCY_CAP
-) -> DataFrame:
-    """Banded LSH candidate pairs (doc_a < doc_b) over (doc_id, ws) rows.
-
-    One 64-bit key per band — xxhash64(band, sig-slice) — instead of an
-    array-typed (band, band_sig) key. Equal band slices always hash
-    equal, so no true candidate is ever lost; a hash collision can only ADD
-    a candidate, and every candidate is decided by the exact Jaccard later
-    (a collision changing the RESULT needs a colliding pair that also
-    passes jaccard ≥ τ: ~2^-64, far below the md5 content-addressing risk
-    already accepted repo-wide). At scale this is the difference between
-    shuffling 8-byte keys and shuffling 3-element long arrays.
+def _band_candidates_ctes(src: str, band_cap: int) -> str:
+    """The CTE chain sigs → bands → gated → buckets → cand: banded LSH
+    candidate pairs (doc_a < doc_b) over a relation `src` of (doc_id, ws)
+    rows, as Spark-SQL text. The one candidate definition: the pair build
+    (_pairs_sql_from_collapsed) and the recall audit both run it.
 
     Bucket-aggregate instead of self-join (r8): ONE shuffle on band_key
-    collects each bucket's ids and the pairs STREAM out of chained
-    generators (_explode_id_pairs) — the self-join form shuffled the band
-    table twice. Occupancy gating BEFORE collection (r9, ADVICE r8): the
-    r8 form filtered size(ids) AFTER collect_list, so the aggregation
-    buffer was O(bucket occupancy) — a pathological hot band of
-    distinct-digest near-dups could OOM an executor on one key. Now a
-    window count over the same band_key clustering (spill-backed
-    WindowExec, never an agg buffer) drops over-cap keys AND singleton
-    keys before any array is built: the collect_list buffer is bounded by
-    the cap it enforces (8 KB of longs at the default 1024), and the
-    window's sort output already satisfies the groupBy's clustering, so
-    the gate costs a per-partition sort, not a second shuffle. Keys above
-    `band_cap` are dropped — see _BAND_OCCUPANCY_CAP for the recall
-    contract."""
-    sigs = ws.select("doc_id", minhash_signature("ws").alias("sig"))
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(band),
-                        *[
-                            F.element_at(F.col("sig"), band * _LSH_ROWS + j + 1)
-                            for j in range(_LSH_ROWS)
-                        ],
-                    )
-                    for band in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
-    occ = Window.partitionBy("band_key")
-    gated = bands.withColumn("occ_n", F.count(F.lit(1)).over(occ)).filter(
-        (F.col("occ_n") >= 2) & (F.col("occ_n") <= F.lit(band_cap))
-    )
-    buckets = gated.groupBy("band_key").agg(F.collect_list("doc_id").alias("ids"))
-    return _explode_id_pairs(buckets, carry=[]).distinct()
+    collects each bucket's ids and the pairs STREAM out of two chained
+    generators — posexplode(ids), then explode of the positional tail
+    slice — so peak memory per bucket is O(k), never the O(k²) an in-row
+    product would materialize before its explode. collect_list order is
+    nondeterministic, so the least/greatest normalization keeps the
+    emitted set order-independent.
+
+    Occupancy gating BEFORE collection (r9): a window count over the same
+    band_key clustering (spill-backed WindowExec, never an agg buffer)
+    drops over-cap keys AND singleton keys before any array is built, so
+    the collect_list buffer is bounded by the cap it enforces (8 KB of
+    longs at the default 1024) — a pathological hot band of distinct-
+    digest near-dups cannot OOM an executor on one key. The window's sort
+    output already satisfies the GROUP BY's clustering, so the gate costs
+    a per-partition sort, not a second shuffle. Keys above `band_cap` are
+    dropped — see _BAND_OCCUPANCY_CAP for the recall contract."""
+    return f"""
+    sigs AS (
+      SELECT doc_id, {_minhash_signature_sqlx("ws")} AS sig
+      FROM (SELECT doc_id, ws FROM {src})
+    ),
+    bands AS (
+      SELECT doc_id, band_key FROM sigs
+      LATERAL VIEW explode({_band_keys_sqlx("sig")}) bt AS band_key
+    ),
+    gated AS (
+      SELECT doc_id, band_key FROM (
+        SELECT doc_id, band_key,
+               count(1) OVER (PARTITION BY band_key) AS occ_n
+        FROM bands
+      ) WHERE occ_n >= 2 AND occ_n <= {band_cap}
+    ),
+    buckets AS (
+      SELECT band_key, collect_list(doc_id) AS ids FROM gated GROUP BY band_key
+    ),
+    cand AS (
+      SELECT DISTINCT least(_x, _y) AS doc_a, greatest(_x, _y) AS doc_b
+      FROM buckets
+      LATERAL VIEW posexplode(ids) p AS _i, _x
+      LATERAL VIEW explode(slice(ids, _i + 2, size(ids))) q AS _y
+    )"""
 
 
 def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
@@ -757,9 +762,8 @@ def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
     Datasets, each re-walking the signature/shingle expression forest —
     measured ~0.5 s of driver-side construction per cold build at sf0.1
     (phase split in OPTIMIZATION_r14.md); this is one parse + one
-    analysis. The banding CTEs (sigs → gated → buckets → cand) compute
-    the same candidates as minhash_band_candidates; the pair set is pinned
-    end-to-end by the DuckDB oracle.
+    analysis. The candidates come from _band_candidates_ctes over the
+    same view; the pair set is pinned end-to-end by the DuckDB oracle.
 
     Verify: exact shingle Jaccard of each candidate, both sides' shingles
     joined back from the view. A 0/0 Jaccard THROWS under ANSI while
@@ -784,7 +788,7 @@ def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
         groups (the collapse keeps them as rows — see _collapsed_rows —
         so the guard lives here, the only place where they would change
         the pair set). The pairs STREAM from `ids` through posexplode +
-        slice (_explode_id_pairs' shape): no join, no shuffle, and peak
+        slice (the `cand` CTE's shape): no join, no shuffle, and peak
         memory O(k) per row. The output IS quadratic in the clique — that
         is the pair-set contract — but nothing upstream of the final emit
         is, in shuffle bytes or in any single row buffer.
@@ -792,43 +796,10 @@ def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
     The verified rep pairs are tiny and the dup-group member table is
     bounded by the corpus's dup mass — AQE broadcasts whichever side is
     small."""
-    sig = _minhash_signature_sqlx("ws")
-    band_terms = ", ".join(
-        "xxhash64({b}, {els})".format(
-            b=band,
-            els=", ".join(
-                f"element_at(sig, {band * _LSH_ROWS + j + 1})"
-                for j in range(_LSH_ROWS)
-            ),
-        )
-        for band in range(_LSH_BANDS)
-    )
     ai = "size(array_intersect(a.ws, b.ws))"
     un = f"(size(a.ws) + size(b.ws) - {ai})"
     return f"""
-    WITH sigs AS (
-      SELECT doc_id, {sig} AS sig FROM (SELECT doc_id, ws FROM {view})
-    ),
-    bands AS (
-      SELECT doc_id, band_key FROM sigs
-      LATERAL VIEW explode(array({band_terms})) bt AS band_key
-    ),
-    gated AS (
-      SELECT doc_id, band_key FROM (
-        SELECT doc_id, band_key,
-               count(1) OVER (PARTITION BY band_key) AS occ_n
-        FROM bands
-      ) WHERE occ_n >= 2 AND occ_n <= {band_cap}
-    ),
-    buckets AS (
-      SELECT band_key, collect_list(doc_id) AS ids FROM gated GROUP BY band_key
-    ),
-    cand AS (
-      SELECT DISTINCT least(_x, _y) AS doc_a, greatest(_x, _y) AS doc_b
-      FROM buckets
-      LATERAL VIEW posexplode(ids) p AS _i, _x
-      LATERAL VIEW explode(slice(ids, _i + 2, size(ids))) q AS _y
-    ),
+    WITH {_band_candidates_ctes(view, band_cap)},
     verified AS (
       SELECT doc_a, doc_b, floor(j * 10000.0D + 0.5D) / 10000.0D AS jaccard
       FROM (
@@ -869,10 +840,9 @@ def _minhash_pairs_plan(
 ) -> DataFrame:
     """Unordered verified near-dup pairs (doc_a, doc_b, jaccard) plan:
     collapse → route out empty shingle sets → band (capped) → verify →
-    expand. The transient persists (representative shingles + group
-    membership, each consumed by ≥2 downstream joins) are exposed as
-    `._onebrc_transient_handles` so the caller can release them after
-    materialization.
+    expand. The transient persist (the collapsed rows, above the
+    short-plan size gate) is exposed in `._onebrc_transient_handles` so
+    the caller can release it after materialization.
 
     Equivalence to the uncollapsed oracle: empty-shingle docs only ever
     produce NULL-jaccard pairs (always dropped), so routing them out
@@ -906,20 +876,6 @@ def _minhash_pairs_plan(
     small = small_for_twin(src_bytes_hint(src_tbl))
     d = spread(src_tbl, spark)
     slim = _minhash_slim(d)
-    # the census persist makes BOTH collapse joins read one tiny cached
-    # table (column pruning would otherwise specialize the two broadcast
-    # subtrees and compute the census twice); with it, the scan+spread
-    # exchange below is the plan's ONLY corpus-sized subtree and
-    # ReuseExchange shares it across the census, anti and member branches.
-    # coalesce(width): the census is duplicated-digest rows only (tiny on
-    # real corpora) but its groupBy shuffle leaves shuffle.partitions
-    # near-empty cached partitions that every census-reading stage pays
-    # task launches over — fold the cache to the input-derived width
-    # (cached plans are outside AQE coalescing; the global
-    # canChangeCachedPlanOutputPartitioning conf was measured 15-45%
-    # WORSE across the memo families — adaptive re-planning of every
-    # cached-plan read costs more than the task launches it saves).
-    dupc = _dup_census(slim).coalesce(width).persist()
     # ONE materialization point: the collapsed (doc_id, ws, grp_n, ids)
     # table feeds the signature path, both sides of the verification join
     # AND the expansion — without it the shingling+collapse recomputes 5×.
@@ -938,21 +894,18 @@ def _minhash_pairs_plan(
     # gaps and every consumer plan. Above the size gate the persist path
     # is unchanged — at scale lineage-free blocks and a second copy are
     # the wrong trade (see catalog.small_for_twin).
-    base = _collapsed_rows(slim, dupc).coalesce(width)
-    if small:
-        collapsed = base.localCheckpoint(eager=True)
-        handles = [dupc]
-    else:
-        collapsed = base.persist()
-        handles = [collapsed, dupc]
+    base = _collapsed_rows(slim, _dup_census(slim)).coalesce(width)
+    collapsed = base.localCheckpoint(eager=True) if small else base
     # ONE spark.sql for everything past the checkpoint (r14, see
-    # _pairs_sql_from_collapsed). The temp view resolves at the sql() call,
-    # so the returned frame is immune to later re-registrations (bench
-    # alternates two sf_dirs).
-    view = "_onebrc_mh_collapsed"
-    collapsed.createOrReplaceTempView(view)
-    out = spark.sql(_pairs_sql_from_collapsed(view, band_cap))
-    out._onebrc_transient_handles = handles
+    # _pairs_sql_from_collapsed).
+    out = spark.sql(
+        _pairs_sql_from_collapsed("{collapsed}", band_cap), collapsed=collapsed
+    )
+    # Persist only AFTER the call: spark.sql drops its argument's temp view
+    # on return, and dropping a view uncaches the cached plan equal to it.
+    # `out` still reads the cache — a plan is matched against cached plans
+    # when it first executes, not when it is built.
+    out._onebrc_transient_handles = [] if small else [base.persist()]
     out._onebrc_spread_width = width
     out._onebrc_twin_small = small
     return out
@@ -1089,10 +1042,10 @@ def minhash_recall_audit_frame(
     )
     slim = _minhash_slim(d)
     dupc = _dup_census(slim)
-    cands = minhash_band_candidates(
-        _collapsed_rows(slim, dupc).select("doc_id", "ws")
-    ).select(
-        F.col("doc_a").alias("ca"), F.col("doc_b").alias("cb"), F.lit(1).alias("hit")
+    ctes = _band_candidates_ctes("{collapsed}", _BAND_OCCUPANCY_CAP)
+    cands = d.sparkSession.sql(
+        f"WITH {ctes} SELECT doc_a AS ca, doc_b AS cb, 1 AS hit FROM cand",
+        collapsed=_collapsed_rows(slim, dupc),
     )
     # rep(doc) = its dup-group representative, or itself (singletons carry
     # no mapping row). Built straight from the census join, NOT from the

@@ -21,11 +21,11 @@ Two admission gates, cheapest first:
      decides, same as the batch operator.
 
 Why this scales where re-running global dedup doesn't: the corpus×corpus
-quadrant — overwhelmingly the largest — is never joined. Band signatures
-for the corpus are computed once per ingest epoch (in production they live
-as a bucketed table keyed on (band, band_sig), paid at admission time, so
-each day's join touches only matching buckets); the batch side is small.
-Work per ingest ≈ O(|batch| + collisions), independent of corpus size.
+quadrant — overwhelmingly the largest — is never joined: only batch band
+keys meet corpus band keys, and the batch side is small. Here the corpus
+is banded in-flight on every run; a production deployment would keep its
+band keys as a table written once per admission epoch (see SCALING.md).
+Work per ingest beyond that banding ≈ O(|batch| + collisions).
 
 The "new batch" predicate here is a content-addressed ~19% sample
 (first md5 hex digit of doc_id < 3, same bucketing idiom as
@@ -44,11 +44,10 @@ from onebrc_spark.operators.dedup import (
     _MINHASH_N,
     _MINHASH_THRESHOLD,
     _affine_sql,
+    _band_keys_sqlx,
     _base_digits_sql,
     _minhash_signature_sqlx,
     _word_3grams_sqlx,
-    minhash_signature,
-    word_3grams,
 )
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table, spread
@@ -79,33 +78,6 @@ def _is_new_sql(expr: str) -> str:
     return f"({hash_bucket_sql(expr)}) < {_NEW_BUCKET_MAX}"
 
 
-def _band_table(docs_ws: DataFrame) -> DataFrame:
-    """(doc_id, band, band_sig) from (doc_id, ws) — the ARRAY-keyed band
-    form, kept for the BUCKETED corpus asset (corpus_band_table), where
-    the (band, band_sig) columns are the bucket keys themselves. The
-    in-flight batch×corpus join uses hashed 64-bit keys instead (see
-    _admission_sql for why)."""
-    sigs = docs_ws.select(
-        "doc_id", minhash_signature("ws").alias("sig")
-    )
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.slice(F.col("sig"), band * _LSH_ROWS + 1, _LSH_ROWS).alias(
-                            "band_sig"
-                        ),
-                    )
-                    for band in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.band_sig")
-
-
 def _admission_sql(view: str) -> str:
     """The full admission query as ONE Spark-SQL statement over the spread
     documents view (r14, guide §1.2 step 2 — the one-parse technique the
@@ -123,38 +95,27 @@ def _admission_sql(view: str) -> str:
         gate).
       - Near gate: batch bands × corpus bands ONLY (the corpus never
         self-joins), then exact-Jaccard verification of the candidates.
-        Band keys are one xxhash64 long per band over the signature slice
-        (dedup.py's round-5 band-key change: 8-byte shuffle keys +
-        primitive codegen compares, measured ~25% off the array-keyed
-        join). Equal slices always hash equal, so no true candidate is
-        lost; a collision only ADDS a candidate, which the verification
-        rejects. The candidate set (not the corpus) drives the verify
-        joins: texts are attached per candidate pair and shingled THERE,
-        so the full corpus is shingled exactly once (for banding) —
-        verification work is O(candidates), and the small candidate side
-        broadcasts, leaving the corpus text scan exchange-free.
+        Band keys are dedup._band_keys_sqlx's hashed keys, the ones the
+        pair build bands on. The candidate set (not the corpus) drives
+        the verify joins: texts are attached per candidate pair and
+        shingled THERE, so the full corpus is shingled exactly once (for
+        banding) — verification work is O(candidates), and the small
+        candidate side broadcasts, leaving the corpus text scan
+        exchange-free.
       - ANSI-0/0 guard (edge-fixture class): two sub-3-gram docs always
         band-collide (empty sets share a signature) and their undefined
         Jaccard must DROP — DuckDB's x/0 is NULL, Spark would throw."""
-    sig = _minhash_signature_sqlx("ws")
-    band_terms = ", ".join(
-        "xxhash64({b}, {els})".format(
-            b=band,
-            els=", ".join(
-                f"element_at(sig, {band * _LSH_ROWS + j + 1})"
-                for j in range(_LSH_ROWS)
-            ),
-        )
-        for band in range(_LSH_BANDS)
-    )
     ai = "size(array_intersect(ws_a, ws_b))"
     un = f"(size(ws_a) + size(ws_b) - {ai})"
-    bkeys = (
-        "SELECT doc_id, band_key FROM ("
-        f"  SELECT doc_id, {sig} AS sig FROM ("
-        f"    SELECT doc_id, {_word_3grams_sqlx('text')} AS ws FROM {{side}})) s"
-        f" LATERAL VIEW explode(array({band_terms})) t AS band_key"
-    )
+
+    def bkeys(side: str) -> str:
+        return (
+            "SELECT doc_id, band_key FROM ("
+            f"  SELECT doc_id, {_minhash_signature_sqlx('ws')} AS sig FROM ("
+            f"    SELECT doc_id, {_word_3grams_sqlx('text')} AS ws FROM {side})) s"
+            f" LATERAL VIEW explode({_band_keys_sqlx('sig')}) t AS band_key"
+        )
+
     return f"""
     WITH tagged AS (
       SELECT doc_id, source, text, {_is_new_sqlx('doc_id')} AS is_new
@@ -169,8 +130,8 @@ def _admission_sql(view: str) -> str:
           ON b.digest = c.digest
       )
     ),
-    bb AS ({bkeys.format(side="batch")}),
-    cb AS ({bkeys.format(side="corpus")}),
+    bb AS ({bkeys("batch")}),
+    cb AS ({bkeys("corpus")}),
     cand AS (
       SELECT DISTINCT bb.doc_id AS new_id, cb.doc_id AS corpus_id
       FROM bb JOIN cb ON bb.band_key = cb.band_key
@@ -280,61 +241,6 @@ def dedup_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     all, in DuckDB; the per-source admitted/rejected counts hash-verify the
     full pipeline."""
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    # ONE spark.sql for the whole pipeline (see _admission_sql). The view
-    # resolves at the sql() call, so the returned frame is immune to later
-    # re-registrations.
-    view = "_onebrc_adm_docs"
-    docs.createOrReplaceTempView(view)
-    return spark.sql(_admission_sql(view))
+    # ONE spark.sql for the whole pipeline (see _admission_sql)
+    return spark.sql(_admission_sql("{docs}"), docs=docs)
 
-
-# --- Production shape: the corpus band table as a bucketed asset ------------
-
-_BAND_BUCKETS = 8
-
-
-def corpus_band_table(
-    spark: SparkSession, corpus: DataFrame, table_name: str, path: str
-) -> DataFrame:
-    """Materialize the standing corpus's LSH band table as a BUCKETED table
-    on (band, band_sig) — the asset the docstring above says production
-    pays for once per admission epoch. Each ingest's candidate join then
-    reads it with NO corpus-side exchange (pinned in tests/test_plans.py):
-    the shuffle that positions corpus signatures by band collision
-    happened at write time, amortized over every subsequent ingest.
-    Spark's bucket hash supports the array-typed band_sig directly, so
-    the bucket keys ARE the join keys — no surrogate key needed."""
-    ws = corpus.select("doc_id", word_3grams("text").alias("ws"))
-    bands = _band_table(ws)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    (
-        bands.write.bucketBy(_BAND_BUCKETS, "band", "band_sig")
-        .sortBy("band")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table_name)
-    )
-    return spark.table(table_name)
-
-
-def bucketed_candidates(batch: DataFrame, corpus_bands: DataFrame) -> DataFrame:
-    """(new_id, corpus_id) LSH candidates of a new batch against a
-    pre-bucketed corpus band table (see corpus_band_table). The batch side
-    is banded in-flight and shuffled to the bucket layout (or broadcast
-    when small); the corpus side is read in place."""
-    ws_batch = batch.select("doc_id", word_3grams("text").alias("ws"))
-    bb = _band_table(ws_batch)
-    cb = corpus_bands
-    return (
-        bb.alias("bb")
-        .hint("shuffle_merge")
-        .join(
-            cb.alias("cb"),
-            (F.col("bb.band") == F.col("cb.band"))
-            & (F.col("bb.band_sig") == F.col("cb.band_sig")),
-        )
-        .select(
-            F.col("bb.doc_id").alias("new_id"), F.col("cb.doc_id").alias("corpus_id")
-        )
-        .distinct()
-    )

@@ -187,11 +187,11 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("chunk_doc", ChunkDoc)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    docs.createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT c.doc_id, c.chunk_idx, c.n_words, c.first_word
-        FROM _udtf_docs d, LATERAL chunk_doc(d.doc_id, d.text) c
+        FROM {docs} d, LATERAL chunk_doc(d.doc_id, d.text) c
         ORDER BY c.doc_id, c.chunk_idx
-        """
+        """,
+        docs=docs,
     )

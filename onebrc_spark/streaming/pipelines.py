@@ -273,9 +273,9 @@ def stream_incremental_admission(
     The static side is a digest-only projection — text never crosses the
     stream-static join, and the join is stateless (no watermark needed:
     stream-static joins keep no stream-side state), so state size is zero
-    regardless of how long the ingest runs. The near-dup LSH gate composes
-    the same way (static band table keyed on (band, band_sig)); in
-    production both static sides are bucketed tables refreshed per epoch.
+    regardless of how long the ingest runs. The near-dup LSH gate would
+    compose the same way, against a static table of the corpus's band keys
+    (dedup._band_keys_sqlx) refreshed per epoch; it is not built here.
     """
     corpus_digests = corpus.select(F.md5("text").alias("digest")).distinct()
     return (

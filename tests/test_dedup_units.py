@@ -195,6 +195,29 @@ def test_minhash_pairs_memoized_without_persist_leak(spark):
     assert len(sc._jsc.sc().getRDDStorageInfo()) == n_after_first
 
 
+def test_large_input_pair_build_reads_its_collapsed_persist(spark, monkeypatch):
+    """Above the short-plan size gate the pair build persists the collapsed
+    rows and hands them to spark.sql as an argument. spark.sql drops that
+    argument's temp view after the call, and dropping a view uncaches a
+    cached plan equal to it; the persist must survive the call, and the
+    pair plan must read it instead of recomputing the collapse."""
+    from pyspark import StorageLevel
+
+    from onebrc_spark.operators import dedup
+    from onebrc_spark.plans import explain_str
+    from tests.conftest import SMOKE_SF_DIR
+
+    monkeypatch.setattr(dedup, "small_for_twin", lambda _: False)
+    out = dedup._minhash_pairs_plan(spark, SMOKE_SF_DIR)
+    (collapsed,) = out._onebrc_transient_handles
+    try:
+        assert collapsed.storageLevel != StorageLevel.NONE
+        assert "InMemoryTableScan" in explain_str(out)
+        assert out.count() > 0
+    finally:
+        collapsed.unpersist()
+
+
 def test_incremental_rejections_gates_and_asymmetry(spark):
     """Incremental admission (the registered _admission_sql statement): a
     byte-identical new doc is caught by the EXACT gate, a shingled near-dup
@@ -227,15 +250,10 @@ def test_incremental_rejections_gates_and_asymmetry(spark):
     batch_ids = {r["doc_id"] for r in docs.filter(is_new_batch("doc_id")).collect()}
     assert batch_ids == {6, 19, 24, 27}
 
-    view = "_test_adm_docs"
-    docs.createOrReplaceTempView(view)
-    try:
-        out = {
-            r["source"]: (r["n_new"], r["n_admitted"], r["n_rejected"])
-            for r in spark.sql(_admission_sql(view)).collect()
-        }
-    finally:
-        spark.catalog.dropTempView(view)
+    out = {
+        r["source"]: (r["n_new"], r["n_admitted"], r["n_rejected"])
+        for r in spark.sql(_admission_sql("{docs}"), docs=docs).collect()
+    }
     # n_new == 1 for "exact": a doc both gates would catch is counted once
     assert out == {
         "exact": (1, 0, 1),
@@ -252,7 +270,7 @@ def test_incremental_candidate_load_grows_slower_than_global_dedup(spark):
     candidate load (all band collisions among corpus ∪ batch) grows
     strictly faster — the quadrant difference that makes per-ingest dedup
     affordable at 100 TB where global re-dedup is not."""
-    from onebrc_spark.operators.incremental import _band_table
+    from onebrc_spark.operators.dedup import _band_keys_sqlx, minhash_signature
     from onebrc_spark.sources.catalog import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.1", "documents").select(
@@ -261,9 +279,12 @@ def test_incremental_candidate_load_grows_slower_than_global_dedup(spark):
     batch = docs.filter(F.col("doc_id") % 50 == 0)  # fixed ~2% ingest
 
     def band_occupancy(df):
-        return _band_table(
-            df.select("doc_id", word_3grams("text").alias("ws"))
-        ).groupBy("band", "band_sig")
+        return (
+            df.select(word_3grams("text").alias("ws"))
+            .select(minhash_signature("ws").alias("sig"))
+            .select(F.explode(F.expr(_band_keys_sqlx("sig"))).alias("band_key"))
+            .groupBy("band_key")
+        )
 
     loads = {}
     for n in (1250, 5000):
@@ -272,7 +293,7 @@ def test_incremental_candidate_load_grows_slower_than_global_dedup(spark):
         bb = band_occupancy(batch).count().withColumnRenamed("count", "nb")
         # incremental: batch×corpus collisions only
         inc = (
-            bb.join(cb, ["band", "band_sig"])
+            bb.join(cb, "band_key")
             .agg(F.sum(F.col("nb") * F.col("nc")))
             .first()[0]
             or 0

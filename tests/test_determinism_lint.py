@@ -297,3 +297,84 @@ def test_dual_form_lint_shapes():
         "        cols = [cols]\n"
         "    return cols\n"
     )
+
+
+_TEMP_VIEW = re.compile(r"\bcreate(?:OrReplace)?(?:Global)?TempView\(")
+
+
+def _temp_view_sites(source: str) -> list[int]:
+    """Line numbers of every temp-view registration in `source`."""
+    return [source.count("\n", 0, m.start()) + 1 for m in _TEMP_VIEW.finditer(source)]
+
+
+def test_no_fixed_temp_view_names_in_operators():
+    """Operators hand DataFrames to spark.sql as arguments
+    (`spark.sql(text, docs=df)`), which registers a uniquely named view for
+    the one call and drops it afterwards. A fixed view name is shared by
+    every build on the session, so two concurrent builds can read each
+    other's input, and the view keeps its plan (and any checkpoint blocks
+    under it) alive after the query is built."""
+    violations = [
+        f"{path.relative_to(SRC.parent)}:{line}"
+        for path in sorted((SRC / "operators").rglob("*.py"))
+        for line in _temp_view_sites(path.read_text())
+    ]
+    assert not violations, (
+        "temp view registered by an operator — pass the DataFrame to "
+        "spark.sql as a named argument instead:\n" + "\n".join(violations)
+    )
+
+
+# A Spark band-key generator indexes or slices the MinHash signature `sig`.
+# The DuckDB oracles spell their banding with sig[...] list slices, which
+# this does not match: they are the independent check. Allowed sites:
+#  - _band_keys_sqlx: THE 4×3 band keys;
+#  - _jaccard_pairs_lsh_fallback: dedup_ngram_jaccard's blocked 6×2
+#    fallback, a different split of a different signature column.
+_BAND_KEY_FUNCS = {"_band_keys_sqlx", "_jaccard_pairs_lsh_fallback"}
+_BAND_KEY = re.compile(
+    r"""\b(?:element_at|slice)\(\s*(?:\{\s*sig\b|sig\b|F\.col\(\s*["']sig["']|["']sig["'])"""
+)
+
+
+def _band_key_sites(source: str) -> list[int]:
+    """Line numbers of band-key generators outside the allowed functions."""
+    allowed: set[int] = set()
+    for fn in ast.walk(ast.parse(source)):
+        if isinstance(fn, ast.FunctionDef) and fn.name in _BAND_KEY_FUNCS:
+            allowed.update(range(fn.lineno, fn.end_lineno + 1))
+    lines = (source.count("\n", 0, m.start()) + 1 for m in _BAND_KEY.finditer(source))
+    return [line for line in lines if line not in allowed]
+
+
+def test_one_spark_band_key_generator():
+    """MinHash band keys have one Spark spelling, dedup._band_keys_sqlx:
+    the pair build, the recall audit and incremental admission all band
+    through it. A second generator would let the consumers' keys drift
+    apart with only each query's oracle to notice."""
+    dedup = (SRC / "operators" / "dedup.py").read_text()
+    assert "def _band_keys_sqlx(" in dedup and _BAND_KEY.search(dedup)
+    violations = [
+        f"{path.relative_to(SRC.parent)}:{line}"
+        for path in sorted(SRC.rglob("*.py"))
+        for line in _band_key_sites(path.read_text())
+    ]
+    assert not violations, (
+        "MinHash band keys built outside dedup._band_keys_sqlx:\n"
+        + "\n".join(violations)
+    )
+
+
+def test_temp_view_and_band_key_lint_shapes():
+    """Both scanners flag their regrowth shapes and pass the allowed ones."""
+    assert _temp_view_sites('docs.createOrReplaceTempView("_v")\n') == [1]
+    assert _temp_view_sites("x = 1\nd.createTempView(name)\n") == [2]
+    assert not _temp_view_sites('spark.sql("SELECT * FROM {d}", d=d)\n')
+    assert _band_key_sites('k = f"xxhash64(0, element_at(sig, 1))"\n') == [1]
+    assert _band_key_sites('k = F.element_at(F.col("sig"), 2)\n') == [1]
+    assert _band_key_sites('b = F.slice(F.col("sig"), 1, 3)\n') == [1]
+    assert _band_key_sites('def f(sig):\n    return f"element_at({sig}, 1)"\n') == [2]
+    assert not _band_key_sites(
+        'def _band_keys_sqlx(sig):\n    return f"element_at({sig}, 1)"\n'
+    )
+    assert not _band_key_sites("b = 'sig[band*3+1:band*3+3] AS band_sig'\n")

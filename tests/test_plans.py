@@ -474,59 +474,6 @@ def test_cms_sketch_and_topk_are_broadcast(spark):
     assert "CartesianProduct" not in txt
 
 
-def test_bucketed_corpus_band_join_has_no_corpus_side_exchange(spark, tmp_path):
-    """The incremental gate's amortization claim: with the corpus band
-    table bucketed on band_key (paid once per admission epoch), an
-    ingest's candidate join shuffles ONLY the batch side — the plan has
-    exactly one Exchange, and candidates equal the in-flight
-    (unbucketed) construction's."""
-    from onebrc_spark.operators.incremental import (
-        bucketed_candidates,
-        corpus_band_table,
-        is_new_batch,
-    )
-    from onebrc_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SMOKE_SF_DIR, "documents")
-    corpus = docs.filter(~is_new_batch("doc_id"))
-    batch = docs.filter(is_new_batch("doc_id"))
-    cb = corpus_band_table(
-        spark, corpus, "corpus_bands_smoke", str(tmp_path / "corpus_bands")
-    )
-    cand = bucketed_candidates(batch, cb)
-    txt = explain_str(cand)
-    # The bucketed layout is actually used (no exchange above the corpus
-    # scan): the plan reads the table's buckets directly...
-    assert "SelectedBucketsCount" in txt, txt
-    # ...and carries exactly 2 exchanges: batch-side banding + the final
-    # distinct. The in-flight construction below needs 3 (corpus banding
-    # pays the third, per-ingest — that is the shuffle the bucketed asset
-    # amortizes to write time).
-    assert num_exchanges(cand) == 2, txt
-
-    # Semantics unchanged: same candidate pairs as the in-flight banding.
-    from onebrc_spark.operators.dedup import word_3grams
-    from onebrc_spark.operators.incremental import _band_table
-
-    bb = _band_table(batch.select("doc_id", word_3grams("text").alias("ws")))
-    cb0 = _band_table(corpus.select("doc_id", word_3grams("text").alias("ws")))
-    inflight = (
-        bb.alias("a")
-        .hint("shuffle_merge")
-        .join(
-            cb0.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig")),
-        )
-        .select(F.col("a.doc_id").alias("new_id"), F.col("b.doc_id").alias("corpus_id"))
-        .distinct()
-    )
-    assert num_exchanges(inflight) == 3, explain_str(inflight)
-    want = {(r["new_id"], r["corpus_id"]) for r in inflight.collect()}
-    got = {(r["new_id"], r["corpus_id"]) for r in cand.collect()}
-    assert got == want and len(got) > 0
-
-
 def test_snapshot_drift_one_scan_two_histograms(spark):
     """dq_snapshot_drift's scale claim: ONE conditional-aggregation pass
     builds both snapshots' histograms (no per-snapshot rescan), the bounds

@@ -1037,11 +1037,20 @@ def _docs_df(spark, rows):
     )
 
 
+def _band_candidates(spark, ws, band_cap):
+    """Banded candidate pairs over (doc_id, ws) rows, from the shared
+    candidate CTEs the pair build and the recall audit run."""
+    from onebrc_spark.operators.dedup import _band_candidates_ctes
+
+    ctes = _band_candidates_ctes("{ws}", band_cap)
+    return spark.sql(f"WITH {ctes} SELECT doc_a, doc_b FROM cand", ws=ws)
+
+
 def _minhash_compose(spark, docs, band_cap=None):
     """Run the composition the registered dedup_minhash_lsh plan uses
     (_minhash_pairs_plan) on an in-memory frame: slim → duplicate census →
     collapsed rows → the one-statement band/verify/expand SQL. Returns the
-    rep-level banded candidates (minhash_band_candidates over the same
+    rep-level banded candidates (the shared candidate CTEs over the same
     collapsed rows, as the recall audit runs them) and the collected
     (doc_a, doc_b) → jaccard pair map."""
     from onebrc_spark.operators.dedup import (
@@ -1050,23 +1059,18 @@ def _minhash_compose(spark, docs, band_cap=None):
         _dup_census,
         _minhash_slim,
         _pairs_sql_from_collapsed,
-        minhash_band_candidates,
     )
 
     cap = band_cap or _BAND_OCCUPANCY_CAP
     slim = _minhash_slim(docs)
     collapsed = _collapsed_rows(slim, _dup_census(slim))
-    view = "_test_mh_collapsed"
-    collapsed.createOrReplaceTempView(view)
-    try:
-        pairs = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in spark.sql(_pairs_sql_from_collapsed(view, cap)).collect()
-        }
-    finally:
-        spark.catalog.dropTempView(view)
-    cands = minhash_band_candidates(collapsed.select("doc_id", "ws"), cap)
-    return cands, pairs
+    pairs = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in spark.sql(
+            _pairs_sql_from_collapsed("{collapsed}", cap), collapsed=collapsed
+        ).collect()
+    }
+    return _band_candidates(spark, collapsed, cap), pairs
 
 
 def _true_jaccard(ta: str, tb: str) -> float | None:
@@ -1087,7 +1091,7 @@ def test_minhash_clique_precollapse_linear_candidates(spark):
     arithmetically via expansion. Zero-shingle docs (shorter than the
     3-gram window) are routed out entirely: their Jaccard is 0/0 → dropped
     by plain LSH too, so the pair SET is unchanged (oracle-exact)."""
-    from onebrc_spark.operators.dedup import minhash_band_candidates, word_3grams
+    from onebrc_spark.operators.dedup import _BAND_OCCUPANCY_CAP, word_3grams
 
     clique_text = "the quick brown fox jumps over the lazy dog again and again"
     near_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1110,7 +1114,7 @@ def test_minhash_clique_precollapse_linear_candidates(spark):
     ws_all = docs.select("doc_id", word_3grams("text").alias("ws")).filter(
         F.size("ws") > 0
     )
-    assert minhash_band_candidates(ws_all).count() >= 40 * 39 / 2
+    assert _band_candidates(spark, ws_all, _BAND_OCCUPANCY_CAP).count() >= 40 * 39 / 2
     # (b) the clique's pairs are all present at exactly 1.0
     clique = {(i, j) for i in range(40) for j in range(i + 1, 40)}
     assert clique <= set(got), sorted(clique - set(got))[:5]
