@@ -50,13 +50,6 @@ def half_away_long(x: Column) -> Column:
     )
 
 
-def onebrc_mean(s: Column, n: Column) -> Column:
-    """1-dp mean of an exact integer-cents sum `s` over `n` rows, rounded
-    half away from zero in integer arithmetic; `+ 0.0` folds -0.0."""
-    tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
-    return F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0
-
-
 def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
     """The flagship logical plan over any (key, value) frame.
 
@@ -72,6 +65,11 @@ def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
     plan is unchanged: same partial→final hash aggregate, the sum is just
     a long instead of a double.
     """
+    # 1-dp mean of the exact integer-cents sum, rounded half away from zero
+    # in integer arithmetic; `+ 0.0` folds -0.0.
+    s, n = F.col("_s"), F.col("_n")
+    tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
+    mean = F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0
     return (
         df.groupBy(F.col(key).alias("station"))
         .agg(
@@ -80,9 +78,7 @@ def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
             F.count(value).alias("_n"),
             F.max(value).alias("max"),
         )
-        .select(
-            "station", "min", onebrc_mean(F.col("_s"), F.col("_n")).alias("mean"), "max"
-        )
+        .select("station", "min", mean.alias("mean"), "max")
         .orderBy("station")
     )
 

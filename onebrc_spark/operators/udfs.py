@@ -185,13 +185,13 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chunk = words[i * _CHUNK : (i + 1) * _CHUNK]
                 yield doc_id, i, len(chunk), chunk[0]
 
-    spark.udtf.register("chunk_doc", ChunkDoc)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return spark.sql(
-        """
-        SELECT c.doc_id, c.chunk_idx, c.n_words, c.first_word
-        FROM {docs} d, LATERAL chunk_doc(d.doc_id, d.text) c
-        ORDER BY c.doc_id, c.chunk_idx
-        """,
-        docs=docs,
+    # The UDTF is called, not registered: a session-global function name
+    # would be shared by every build on the session.
+    chunks = ChunkDoc(F.col("d.doc_id").outer(), F.col("d.text").outer())
+    return (
+        docs.alias("d")
+        .lateralJoin(chunks.alias("c"))
+        .select("c.doc_id", "c.chunk_idx", "c.n_words", "c.first_word")
+        .orderBy("doc_id", "chunk_idx")
     )

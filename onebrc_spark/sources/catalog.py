@@ -233,11 +233,8 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 
 # Per-task byte budget for the compute fan-out (r13 optimization round,
 # guide §2.2/§2.5): sizes the spread width from the INPUT, not from the
-# host. Estimated source bytes per spread partition; env-tunable so a
-# cluster profile can re-derive it without code changes.
-_SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", str(128 * 1024))
-)
+# host. Estimated source bytes per spread partition.
+_SPREAD_BYTES_PER_TASK = 128 * 1024
 # Byte budget for COMPUTE-DENSE pipelines (r14, guide §1.1/§2.6): the
 # MinHash signature fold (one md5 + 12 affine folds per shingle) and the
 # similarity bucket/cosine folds (10s of 64-dim interpreted dot products
@@ -250,10 +247,8 @@ _SPREAD_BYTES_PER_TASK = int(
 # budgets saturate to the same width and cluster behavior is identical —
 # this only moves the small-input trade between task-launch overhead and
 # idle cores. Chosen by ABBA measurement on the minhash build (see
-# OPTIMIZATION_r14.md); env-tunable like the generic budget.
-_SPREAD_DENSE_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_DENSE_BYTES_PER_TASK", str(32 * 1024))
-)
+# OPTIMIZATION_r14.md).
+_SPREAD_DENSE_BYTES_PER_TASK = 32 * 1024
 
 
 def spread(
@@ -273,7 +268,7 @@ def spread(
     Width is SCALE-ADAPTIVE (r13, guide §2.2 "fewer, larger map tasks" /
     §2.5 synthetic-partitioning note): the fan-out is derived from the
     plan's estimated input bytes (one partition per _SPREAD_BYTES_PER_TASK,
-    default 128 KiB of source bytes) and capped at cores×per_core — any
+    128 KiB of source bytes) and capped at cores×per_core — any
     real corpus saturates the cap immediately, so cluster behavior is
     byte-identical to the old constant, while tiny inputs stop paying
     cores×2 task launches + cores×2-way shuffle-file fan-out in EVERY
@@ -332,11 +327,8 @@ def src_bytes_hint(df: DataFrame) -> int:
 # threshold consumers get the persisted original, whose re-analysis cost is
 # fixed and amortized at scale. Core-count-independent on purpose — the
 # driver benches the same data at several SPARK_GRAFT_CPUS values, and the
-# twin decision must not flip between them. Env-tunable for cluster
-# profiles; 0 disables twins entirely.
-_TWIN_MAX_SRC_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TWIN_MAX_SRC_BYTES", str(32 * 1024 * 1024))
-)
+# twin decision must not flip between them.
+_TWIN_MAX_SRC_BYTES = 32 * 1024 * 1024
 
 
 def small_for_twin(src_bytes: int) -> bool:

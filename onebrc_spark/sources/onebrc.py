@@ -21,20 +21,18 @@ from pyspark.sql import functions as F
 from onebrc_spark.schemas import MEASUREMENTS
 
 
-def read_measurements(
-    spark: SparkSession, path: str, mode: str = "FAILFAST"
-) -> DataFrame:
+def read_measurements(spark: SparkSession, path: str) -> DataFrame:
     """Lazy, partitioned scan of `station;temp` text into (station, measure).
 
-    `mode="FAILFAST"` reproduces the reference's error-on-malformed-line
-    behavior (`main.rs:140-144`, `purple_mist.rs:37-38`); pass "DROPMALFORMED"
-    for the python impl's skip-empty-lines behavior (`main.rs:135`).
+    FAILFAST is the input check: it reproduces the reference's
+    error-on-malformed-line behavior (`main.rs:140-144`,
+    `purple_mist.rs:37-38`).
     """
     return (
         spark.read.schema(MEASUREMENTS)
         .option("sep", ";")
         .option("header", "false")
-        .option("mode", mode)
+        .option("mode", "FAILFAST")
         .csv(path)
     )
 
@@ -52,199 +50,14 @@ def read_measurements_fast(spark: SparkSession, path: str) -> DataFrame:
     fails the query with CAST_INVALID_INPUT when the lazy frame executes,
     under Spark's default ANSI mode (pinned by
     tests/test_flagship.py::test_fast_readers_on_malformed). Use
-    read_measurements(mode="DROPMALFORMED") to skip such lines, or the
-    PERMISSIVE twin onebrc_permissive_quarantine to count them. Everything
+    read_measurements to reject such lines, or the PERMISSIVE pattern of
+    onebrc_permissive_quarantine to classify and count them. Everything
     stays in whole-stage codegen — substring_index + cast are JVM
     expressions on the scan.
     """
     return spark.read.text(path).select(
         F.substring_index("value", ";", 1).alias("station"),
         F.substring_index("value", ";", -1).cast("double").alias("measure"),
-    )
-
-
-# Chunk granularity for the Arrow-native scan: the reference's own
-# CHUNK_SIZE (`rust_1brc/src/main.rs:21`).
-_ARROW_SCAN_CHUNK = 16 * 1024 * 1024
-
-
-def onebrc_scan_agg_arrow(spark: SparkSession, path: str) -> DataFrame:
-    """The flagship scan→aggregate fused as an Arrow-native stage — the
-    trusted-input fast path for the 1BRC `station;temp` text format
-    (r13 optimization round, guide §4.2/§8.3).
-
-    Why: the JVM row path (read_measurements_fast → partial hash agg) costs
-    ~25 ns/row/core in UTF8String scanning + double parse + per-row agg
-    updates. Here each task instead reads ITS OWN byte range of the input
-    (seek + newline snap — exactly the reference's chunked scan,
-    `main.rs:79-122`, expressed over Spark's task model), hands the whole
-    chunk to pyarrow.csv (vectorized C++ parse) and pre-aggregates to one
-    (station, min, max, sum_cents, count) partial per station per chunk
-    with pyarrow.compute group_by. Only ~413-row partials cross the
-    Python→JVM boundary and the exchange; the final merge + exact-integer
-    mean + sort reuse the flagship formula. Measured at 50M rows/815 MB:
-    1.30 s → ~0.52 s warm (see OPTIMIZATION_r13.md).
-
-    Output contract: IDENTICAL rows to
-    onebrc_aggregate(read_measurements_fast(spark, path)) on well-formed
-    1BRC text — min/max are order-free comparisons, the mean's cents sum
-    is exact-integer (1-dp temps → measure·100 is exactly integral, so
-    rint == java-round == identity), count is exact. Pinned by
-    tests/test_flagship.py::test_arrow_scan_agg_matches_jvm_path.
-    Malformed lines are not validated here either: a line without `;` or
-    with a non-numeric temperature fails the query with a pyarrow CSV error
-    (ArrowInvalid) instead of CAST_INVALID_INPUT, while an empty
-    temperature (`b;`) becomes a NULL measure where the JVM path raises
-    (pinned by tests/test_flagship.py::test_fast_readers_on_malformed) —
-    use read_measurements / the PERMISSIVE twin for untrusted data.
-    """
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from onebrc_spark.operators.aggregates import onebrc_mean
-
-    # match Spark's text-source file enumeration (read_measurements_fast
-    # reads everything except _-/.-prefixed hidden files), so the two
-    # paths see the same file set instead of silently diverging on
-    # unrecognized extensions
-    files = sorted(
-        f
-        for f in _glob.glob(_os.path.join(path, "*"))
-        if _os.path.isfile(f)
-        and not _os.path.basename(f).startswith(("_", "."))
-    ) or [path]
-    chunks = []
-    for f in files:
-        size = _os.path.getsize(f)
-        if size == 0:
-            continue
-        # whole-file chunk when splitting wouldn't produce a second full
-        # chunk; otherwise fixed 16 MiB ranges snapped in the task
-        n = max(1, size // _ARROW_SCAN_CHUNK)
-        step = -(-size // n)  # ceil
-        for start in range(0, size, step):
-            chunks.append((f, start, min(start + step, size)))
-    chunk_schema = T.StructType(
-        [
-            T.StructField("file", T.StringType()),
-            T.StructField("start", T.LongType()),
-            T.StructField("end", T.LongType()),
-        ]
-    )
-    if not chunks:
-        # all-empty input: the JVM path returns an empty aggregate frame,
-        # not a repartition(0) error
-        empty = spark.createDataFrame(
-            [], "station string, min double, mean double, max double"
-        )
-        return empty
-    # one chunk per task: compute parallelism == chunk count (the scan
-    # analogue of spread(); chunk count derives from input size by
-    # construction, so this is scale-adaptive for free)
-    cdf = spark.createDataFrame(chunks, chunk_schema).repartition(len(chunks))
-
-    partial_schema = (
-        "station string, mn double, mx double, s long, n long"
-    )
-
-    def scan_chunks(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.csv as pacsv
-
-        read_opts = pacsv.ReadOptions(
-            column_names=["station", "measure"], use_threads=False
-        )
-        parse_opts = pacsv.ParseOptions(delimiter=";", quote_char=False)
-        conv_opts = pacsv.ConvertOptions(
-            column_types={"station": pa.string(), "measure": pa.float64()}
-        )
-        for batch in batches:
-            for row in batch.to_pylist():
-                f, start, end = row["file"], row["start"], row["end"]
-                size = _os.path.getsize(f)
-                with open(f, "rb") as fh:
-                    fh.seek(start)
-                    # pad past `end` so the line straddling the boundary is
-                    # completed here (it STARTS before end, so it is ours);
-                    # 1 KiB is far beyond any `station;temp` line
-                    raw = fh.read((end - start) + (1024 if end < size else 0))
-                begin = 0
-                if start > 0:
-                    # the line crossing `start` belongs to the previous
-                    # chunk: skip to the first newline (reference snap,
-                    # main.rs:79-122)
-                    begin = raw.find(b"\n") + 1
-                cut = len(raw)
-                if end < size:
-                    # cut after the first newline AT OR PAST file byte `end`
-                    # (search from end-start, NOT end-start-1: when byte
-                    # end-1 is itself a newline, searching one early would
-                    # cut here at `end` while the next chunk skips through
-                    # its first newline — the line starting exactly at
-                    # `end` would be dropped by both chunks)
-                    nl = raw.find(b"\n", end - start)
-                    cut = len(raw) if nl < 0 else nl + 1
-                buf = raw[begin:cut]
-                if not buf:
-                    continue
-                tbl = pacsv.read_csv(
-                    pa.BufferReader(buf),
-                    read_options=read_opts,
-                    parse_options=parse_opts,
-                    convert_options=conv_opts,
-                )
-                # exact-integer cents: 1-dp temps make measure*100 exactly
-                # integral, so any round mode is the identity there; pin
-                # half_away_from_zero so the rounding CONTRACT matches the
-                # flagship's java round even off the 1-dp happy path
-                # (pc.round defaults to half-to-even, which would silently
-                # diverge on exact .5 cents ties in 2-dp inputs;
-                # half_towards_infinity IS pyarrow's half-away-from-zero)
-                cents = pc.round(
-                    pc.multiply(tbl["measure"], 100.0),
-                    round_mode="half_towards_infinity",
-                ).cast(pa.int64())
-                g = pa.table(
-                    {
-                        "station": tbl["station"],
-                        "measure": tbl["measure"],
-                        "cents": cents,
-                    }
-                ).group_by("station").aggregate(
-                    [
-                        ("measure", "min"),
-                        ("measure", "max"),
-                        ("cents", "sum"),
-                        ("cents", "count"),
-                    ]
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        g["station"].combine_chunks(),
-                        g["measure_min"].combine_chunks(),
-                        g["measure_max"].combine_chunks(),
-                        g["cents_sum"].combine_chunks(),
-                        g["cents_count"].cast(pa.int64()).combine_chunks(),
-                    ],
-                    names=["station", "mn", "mx", "s", "n"],
-                )
-
-    partials = cdf.mapInArrow(scan_chunks, partial_schema)
-    return (
-        partials.groupBy("station")
-        .agg(
-            F.min("mn").alias("min"),
-            F.sum("s").alias("_s"),
-            F.sum("n").alias("_n"),
-            F.max("mx").alias("max"),
-        )
-        .select(
-            "station", "min", onebrc_mean(F.col("_s"), F.col("_n")).alias("mean"), "max"
-        )
-        .orderBy("station")
     )
 
 

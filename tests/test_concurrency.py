@@ -1,10 +1,11 @@
 """Concurrent query builds on one session.
 
 The SQL-statement pipelines (MinHash pair build, incremental admission,
-boilerplate ledger and clean, the UDTF chunker) hand their input frames to
-`spark.sql` as named arguments. Each call registers a uniquely named view and
-drops it afterwards, so builds running at the same time on one session
-cannot read each other's input, and no view outlives its build.
+boilerplate ledger and clean) hand their input frames to `spark.sql` as named
+arguments. Each call registers a uniquely named view and drops it afterwards,
+so builds running at the same time on one session cannot read each other's
+input, and no view outlives its build. The UDTF chunker calls its table
+function through a lateral join instead of registering it under a name.
 """
 
 from __future__ import annotations
@@ -46,9 +47,11 @@ def test_concurrent_builds_match_serial_and_leave_no_views(spark):
     """Every build runs once serially, then all of them at once from a
     thread pool, interleaved over two sf_dirs; each concurrent result must
     equal the serial result of the same query on the same sf_dir. A fresh
-    session (sharing the test SparkContext) starts with no temp views, so
-    any view left in its catalog afterwards was left by a build."""
+    session (sharing the test SparkContext) starts with no temp views and
+    only the built-in functions, so any view or function left in its
+    catalog afterwards was left by a build."""
     session = spark.newSession()
+    builtins = {f.name for f in session.catalog.listFunctions()}
     # each query's two sf_dirs are adjacent, so the pool runs them at the
     # same time
     jobs = [(name, d) for name in BUILDS for d in (SMOKE_SF_DIR, SF_DIR)]
@@ -63,3 +66,5 @@ def test_concurrent_builds_match_serial_and_leave_no_views(spark):
     assert not wrong, wrong
     left = [t.name for t in session.catalog.listTables() if t.isTemporary]
     assert not left, left
+    functions = {f.name for f in session.catalog.listFunctions()} - builtins
+    assert not functions, functions

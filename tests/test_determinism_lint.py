@@ -365,11 +365,41 @@ def test_one_spark_band_key_generator():
     )
 
 
+_FUNCTION_REGISTRATION = re.compile(r"\.udt?f\.register\(")
+
+
+def _function_registration_sites(source: str) -> list[int]:
+    """Line numbers of every session function registration in `source`."""
+    return [
+        source.count("\n", 0, m.start()) + 1
+        for m in _FUNCTION_REGISTRATION.finditer(source)
+    ]
+
+
+def test_no_registered_functions_in_operators():
+    """Operators call their Python UDFs and UDTFs as objects (a UDTF
+    through `lateralJoin` with `.outer()` arguments). A registered function
+    name is session-global like a fixed temp view: every build re-registers
+    it, and concurrent builds race on the one name."""
+    violations = [
+        f"{path.relative_to(SRC.parent)}:{line}"
+        for path in sorted((SRC / "operators").rglob("*.py"))
+        for line in _function_registration_sites(path.read_text())
+    ]
+    assert not violations, (
+        "function registered by an operator — call the UDF/UDTF object "
+        "instead:\n" + "\n".join(violations)
+    )
+
+
 def test_temp_view_and_band_key_lint_shapes():
-    """Both scanners flag their regrowth shapes and pass the allowed ones."""
+    """The scanners flag their regrowth shapes and pass the allowed ones."""
     assert _temp_view_sites('docs.createOrReplaceTempView("_v")\n') == [1]
     assert _temp_view_sites("x = 1\nd.createTempView(name)\n") == [2]
     assert not _temp_view_sites('spark.sql("SELECT * FROM {d}", d=d)\n')
+    for kind in ("udf", "udtf"):
+        assert _function_registration_sites(f"x = 1\nspark.{kind}.register(n, f)\n") == [2]
+    assert not _function_registration_sites("d.lateralJoin(C(F.col('x').outer()))\n")
     assert _band_key_sites('k = f"xxhash64(0, element_at(sig, 1))"\n') == [1]
     assert _band_key_sites('k = F.element_at(F.col("sig"), 2)\n') == [1]
     assert _band_key_sites('b = F.slice(F.col("sig"), 1, 3)\n') == [1]
