@@ -283,21 +283,12 @@ _COMPONENTS_CACHE = PersistedLRU(maxsize=2)
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized resolved component labels (id, cluster_id) over the
     MinHash near-dup pair set."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COMPONENTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = None
-    try:
-        labels = connected_components(pairs).persist()
-        labels.count()
-    except BaseException:
-        if labels is not None:
-            labels.unpersist()
-        raise
-    _COMPONENTS_CACHE.put(key, labels)
-    return labels
+    return _COMPONENTS_CACHE.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: connected_components(
+            minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        ),
+    )
 
 
 def clear_components_cache() -> None:

@@ -92,11 +92,6 @@ def jac_round4(c: Column) -> Column:
     return F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
 
 
-def _jac4_sql(expr: str) -> str:
-    """DuckDB twin of jac_round4 — see jac_round4."""
-    return f"(floor(({expr}) * 10000 + 0.5) / 10000)"
-
-
 def _word_3grams_sqlx(col: str) -> str:
     """Spark-SQL text of word_3grams over a column/field reference — the
     same expression tree, built by ONE JVM parse instead of ~40 py4j
@@ -482,44 +477,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     these pairs (minhash itself, both cluster queries, the cluster-safe
     split), and round 3 showed each call pinning a fresh `ws` persist — a
     slow executor-memory leak across a 161-query drive. Now the shingle
-    and membership caches live only for the duration of this function
-    (unpersisted in a finally) and downstream consumers share one tiny
-    cached pair set. persist+count rather than eager localCheckpoint: the
-    .rdd materialization path cost ~0.8 s extra per build at sf0.1 (64
-    tasks × 3 stages outside the adaptive plan), while a persisted plan
-    stays in the AQE/codegen path and keeps lineage for eviction safety."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MINHASH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return _pairs_handout(cached).orderBy("doc_a", "doc_b")
-    handles: list[DataFrame] = []
-    materialized = None
-    try:
-        pairs = _minhash_pairs_plan(spark, sf_dir)
-        handles = pairs._onebrc_transient_handles  # set by the plan builder
-        # coalesce before persist: the expansion union leaves 2× spread
-        # width of mostly-empty partitions, and every WARM consumer of the
-        # memo would pay that task count on each read (r9 fullsweep: the
-        # warm presentation read was +60% from partition count alone).
-        # Target = the ADAPTIVE spread width of the source (r13): a
-        # host-constant 64 here made every pair consumer (bidir union =
-        # 2x memo width) pay 128 task launches per stage to read ~2k rows.
-        materialized = pairs.coalesce(
-            pairs._onebrc_spread_width
-        ).persist()
-        materialized._onebrc_twin_small = pairs._onebrc_twin_small
-        materialized.count()  # materialize while the transient persists are hot
-    except BaseException:
-        # a failed/cancelled materialization must not strand the fresh
-        # persist outside the cache where clear_pair_cache can't reach it
-        if materialized is not None:
-            materialized.unpersist()
-        raise
-    finally:
-        for h in handles:
-            h.unpersist()
-    _MINHASH_PAIRS_CACHE.put(key, materialized)
-    return _pairs_handout(materialized).orderBy("doc_a", "doc_b")
+    and membership caches live only for the duration of the build
+    (minhash_pairs unpersists them in a finally) and downstream consumers
+    share one tiny cached pair set. persist+count rather than eager
+    localCheckpoint: the .rdd materialization path cost ~0.8 s extra per
+    build at sf0.1 (64 tasks × 3 stages outside the adaptive plan), while
+    a persisted plan stays in the AQE/codegen path and keeps lineage for
+    eviction safety."""
+    return minhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
 def _pairs_handout(handle: DataFrame) -> DataFrame:
@@ -552,12 +517,32 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized verified near-dup pair set, UNORDERED — for consumers
     (cluster resolution, survivors, leakage-safe split) that don't need the
     presentation sort dedup_minhash_lsh's query contract adds."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MINHASH_PAIRS_CACHE.get(key)
-    if cached is None:
-        dedup_minhash_lsh(spark, sf_dir)  # populates the cache
-        cached = _MINHASH_PAIRS_CACHE.get(key)
-    return _pairs_handout(cached)
+    handles: list[DataFrame] = []
+
+    def build() -> DataFrame:
+        pairs = _minhash_pairs_plan(spark, sf_dir)
+        handles.extend(pairs._onebrc_transient_handles)  # set by the plan builder
+        # coalesce before persist: the expansion union leaves 2× spread
+        # width of mostly-empty partitions, and every WARM consumer of the
+        # memo would pay that task count on each read (r9 fullsweep: the
+        # warm presentation read was +60% from partition count alone).
+        # Target = the ADAPTIVE spread width of the source (r13): a
+        # host-constant 64 here made every pair consumer (bidir union =
+        # 2x memo width) pay 128 task launches per stage to read ~2k rows.
+        out = pairs.coalesce(pairs._onebrc_spread_width)
+        out._onebrc_twin_small = pairs._onebrc_twin_small
+        return out
+
+    try:
+        # the count inside get_or_build runs while the transient persists
+        # are hot; they are released whether it succeeds or not
+        memo = _MINHASH_PAIRS_CACHE.get_or_build(
+            (spark.sparkContext.applicationId, sf_dir), build
+        )
+    finally:
+        for h in handles:
+            h.unpersist()
+    return _pairs_handout(memo)
 
 
 # Hot-band occupancy cap (documents per band key, counted AFTER the exact-

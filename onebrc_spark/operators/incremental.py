@@ -35,8 +35,7 @@ and uncorrelated with source — the oracle reproduces it verbatim.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from onebrc_spark.operators.dedup import (
     _LSH_BANDS,
@@ -63,12 +62,6 @@ def _is_new_sqlx(expr: str) -> str:
     from onebrc_spark.operators.mlprep import _hash_bucket_sqlx
 
     return f"{_hash_bucket_sqlx(expr)} < {_NEW_BUCKET_MAX}"
-
-
-def is_new_batch(doc_id: str) -> Column:
-    """Content-addressed batch membership (deterministic, source-agnostic)
-    of the doc_id column NAMED `doc_id`."""
-    return F.expr(_is_new_sqlx(doc_id))
 
 
 def _is_new_sql(expr: str) -> str:

@@ -1,10 +1,12 @@
 """Bounded memo for persisted DataFrames (VERDICT r6 hygiene item #7).
 
-Two operator families memoize an expensive shared asset as a
+Three operator families memoize an expensive shared asset as a
 persisted-and-materialized DataFrame keyed by (applicationId, sf_dir):
-the verified MinHash near-dup pair set (dedup.py — four consumers) and
-the resolved connected-component labels (clustering.py — four consumers).
-An unbounded dict is correct for the single-sf_dir sessions the driver
+the verified MinHash near-dup pair set (dedup.py — four consumers), the
+resolved connected-component labels (clustering.py — four consumers) and
+the IVF cell assignments (similarity.py). All three go through
+PersistedLRU.get_or_build, the one owner of get → build → persist →
+count → unpersist-on-failure → put. An unbounded dict is correct for the single-sf_dir sessions the driver
 and tests run, but a session that walks many sf_dirs would accumulate one
 persisted DataFrame per directory for the application lifetime. This LRU
 makes the bound explicit: inserting a key beyond `maxsize` unpersists and
@@ -24,6 +26,7 @@ Spark's generated-code cache to hold every headline class.
 from __future__ import annotations
 
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -71,6 +74,23 @@ class PersistedLRU:
         df = self._data.get(key)
         if df is not None:
             self._data.move_to_end(key)
+        return df
+
+    def get_or_build(self, key: object, build: Callable[[], DataFrame]) -> DataFrame:
+        """The memo entry for `key`, or build(): persisted, materialized with
+        one count() and stored under `key`. A failed or cancelled count
+        unpersists the fresh frame instead of leaving it persisted where no
+        clear hook can reach it."""
+        df = self.get(key)
+        if df is not None:
+            return df
+        df = build().persist()
+        try:
+            df.count()
+        except BaseException:
+            df.unpersist()
+            raise
+        self.put(key, df)
         return df
 
     def put(self, key: object, df: DataFrame) -> None:

@@ -313,25 +313,6 @@ def banded_lsh_buckets(e: DataFrame, n_bands: int, rows_per_band: int) -> DataFr
     )
 
 
-def banded_lsh_pairs(e: DataFrame, n_bands: int, rows_per_band: int) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) that collide in ≥1 band."""
-    b = banded_lsh_buckets(e, n_bands, rows_per_band).select(
-        "vec_id", "band", "bucket"
-    )
-    a = b.alias("a")
-    bb = b.alias("b")
-    return (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
-
-
 # Banded-stats query parameters: 4 independent tables of 2^12 buckets.
 _STATS_BANDS = 4
 _STATS_ROWS = 12
@@ -416,7 +397,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN near-neighbor pairs: 8-hyperplane sign-LSH bucketing, exact cosine
     ≥ _ANN_COS_MIN within buckets only. The shuffle key is the bucket id —
     bucketed candidate generation vs the bruteforce O(N²); see
-    banded_lsh_pairs for the 100 TB-scalable banded construction.
+    sim_ann_lsh_banded for the 100 TB-scalable banded construction.
     Hash-verified: the oracle reproduces identical buckets and cosines from
     the same inlined hyperplane constants."""
     e = spread(load_table(spark, sf_dir, "embeddings"), spark, dense=True)
@@ -441,9 +422,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _banded_pairs_sql() -> str:
-    """DuckDB twin of banded_lsh_pairs(4, 12) + exact-cosine verification —
-    the sim_ann_lsh_banded oracle body. Same inlined hyperplane constants
-    as the Spark plan, so buckets and cosines are bit-equal."""
+    """DuckDB twin of sim_ann_lsh_banded: distinct pairs colliding in any
+    of the 4 × 12-plane bands, then exact-cosine verification. Same inlined
+    hyperplane constants as the Spark plan (banded_lsh_buckets), so buckets
+    and cosines are bit-equal."""
     planes = banded_hyperplanes(_STATS_BANDS, _STATS_ROWS)
     band_tables = " UNION ALL ".join(
         f"SELECT vec_id, {band} AS band, "
@@ -771,77 +753,6 @@ def _top2_cells(cs: Column) -> Column:
     return F.aggregate(pairs, init, step)
 
 
-def kmeans_fit(
-    e: DataFrame, k: int = _IVF_K, iters: int = 3
-) -> list[list[float]]:
-    """Lloyd's k-means over the embedding corpus — the trained coarse
-    quantizer the fixed md5 _centroids() stand in for (VERDICT r1 noted the
-    production gap; this closes it).
-
-    Deterministic: init = the md5-derived constants, assignment = argmax
-    cosine with a fixed tie-break (first maximal cell), update = per-cell
-    coordinate means computed on QUANTIZED integers (×1e9 per coordinate,
-    summed as exact longs, divided once on the driver) — a raw F.avg over
-    doubles would carry partition-merge-order low bits (the repo's lint
-    class), making "repeated fits agree bit-for-bit" hold only within one
-    session's partitioning. With integer sums the fit is a pure function
-    of the data under ANY parallelism (pinned in tests). Quantization
-    error 5e-10 per coordinate is noise against the corpus scale.
-
-    The quantizer is floor(x·1e9 + 0.5), NOT round(x·1e9): round() on
-    doubles is string-BigDecimal HALF_UP in Spark but binary in DuckDB
-    (the registry's cross-engine round class), while floor of the
-    identical IEEE product+sum is bit-equal in both engines — which is
-    what lets sim_ann_ivf_trained's oracle REPLAY this whole fit in SQL
-    and hash-verify the trained retrieval end-to-end.
-
-    Scale design: each iteration is ONE distributed pass — assign cells
-    row-locally against broadcast centroid literals, then posexplode the
-    vector and hash-aggregate (cell, dim) means. The driver only ever
-    collects k x dim floats per iteration (the model, never the data);
-    empty cells keep their previous centroid. This is the standard
-    iterative-refinement shape Spark runs fine at 100 TB: iterations are
-    few and each is embarrassingly parallel. In production the fit runs on
-    a sample (e.g. 1%) — pass e.sample(...) for that.
-    """
-    cents = [[float(v) for v in c] for c in _centroids()[:k]]
-    dim = EMBEDDING_DIM
-    for _ in range(iters):
-        # coalesce(cos, -2) totalizes the argmax: a zero-norm vector's
-        # cosines are all NULL (cosine()'s ANSI guard), which would give it
-        # a NULL cell here but cell 1 in the oracle's row_number replay —
-        # the sentinel sends it to the first cell in BOTH engines.
-        # sql_double_array spells each centroid as ONE constant array
-        # (constant-folded from exact repr() doubles), bit-identical to the
-        # Python doubles.
-        cs = F.array(
-            *[
-                F.coalesce(cosine("embedding", sql_double_array(c)), F.lit(-2.0))
-                for c in cents
-            ]
-        )
-        # single-fold argmax: array_position(cs, array_max(cs)) references
-        # the 8-cosine tree twice; the fold references it once (see
-        # _top2_cells — identical first-maximal tie semantics)
-        assigned = e.select("embedding", _top2_cells(cs)["b_i"].alias("cell"))
-        rows = (
-            assigned.select(
-                "cell", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "x")
-            )
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum(F.floor(F.col("x") * 1e9 + 0.5).cast("long")).alias("s"),
-                F.count("x").alias("n"),
-            )
-            .collect()
-        )
-        new = {(r["cell"], r["pos"]): r["s"] / r["n"] / 1e9 for r in rows}
-        cents = [
-            [new.get((c + 1, d), cents[c][d]) for d in range(dim)] for c in range(k)
-        ]
-    return cents
-
-
 def _cosine_local(a, b) -> float | None:
     """Driver-side replay of cosine(): identical operation order — left
     fold of x·y / (sqrt(left fold x²) · sqrt(left fold y²)) in doubles —
@@ -868,20 +779,28 @@ def _cosine_local(a, b) -> float | None:
 def _kmeans_fit_local(
     vecs: list, k: int = _IVF_K, iters: int = 3
 ) -> list[list[float]]:
-    """kmeans_fit replayed driver-locally over an ALREADY-COLLECTED sample
-    (r9): the sampled-fit query's input is a fixed m=128 rows at any
-    corpus size, and every fit step is exact integer math or a fixed-order
-    IEEE expression — the same property that lets the DuckDB oracle unroll
-    it — so running the Lloyd loop in Python is bit-identical to the
-    distributed version (pinned by execution in tests/test_properties.py)
-    while skipping 3 per-iteration Spark jobs whose data is 128 rows.
+    """Lloyd's k-means over an ALREADY-COLLECTED sample, run on the driver
+    — the trained coarse quantizer the fixed md5 _centroids() stand in for
+    (the sampled-fit query's input is a fixed m=128 rows at any corpus
+    size, so distributed Lloyd passes would be 3 Spark jobs over 128 rows).
 
-    Semantics mirrored exactly from kmeans_fit: NULL-cosine → -2.0
-    sentinel (zero-norm and NULL vectors land in cell 1), assignment =
-    FIRST maximal cell, update = per-(cell, 0-based pos) means over exact
-    floor(x·1e9+0.5) integer sums (order-independent), NULL vectors
-    contribute no coordinates (posexplode of NULL emits nothing), empty
-    cells keep their previous centroid."""
+    Deterministic: init = the md5-derived constants, assignment = argmax
+    cosine with a fixed tie-break (FIRST maximal cell; NULL cosine → -2.0
+    sentinel, so zero-norm and NULL vectors land in cell 1), update =
+    per-(cell, 0-based pos) coordinate means computed on QUANTIZED
+    integers (×1e9 per coordinate, summed as exact ints, divided once).
+    Integer sums make the fit a pure function of the sample's row SET: no
+    summation order can move a low bit, which is what lets the DuckDB
+    oracle's GROUP BY replay it (_kmeans_iter_sql). Quantization error
+    5e-10 per coordinate is noise against the corpus scale. NULL vectors
+    contribute no coordinates; empty cells keep their previous centroid.
+
+    The quantizer is floor(x·1e9 + 0.5), NOT round(x·1e9): round() on
+    doubles is string-BigDecimal HALF_UP in Spark but binary in DuckDB
+    (the registry's cross-engine round class), while floor of the
+    identical IEEE product+sum is bit-equal in every engine — so the
+    oracle can replay this whole fit in SQL and hash-verify the
+    trained-then-retrieved output end to end."""
     cents = [[float(v) for v in c] for c in _centroids()[:k]]
     dim = EMBEDDING_DIM
     for _ in range(iters):
@@ -911,14 +830,14 @@ def _kmeans_fit_local(
     return cents
 
 
-def _kmeans_iter_sql(prev: str, nxt: str, src: str = "embeddings") -> str:
+def _kmeans_iter_sql(prev: str, nxt: str, src: str) -> str:
     """One unrolled Lloyd iteration as DuckDB CTEs: assign every vector of
-    `src` to its argmax-cosine cell against the `prev` centroid table (tie →
-    first maximal cell, same as Spark's array_position-of-max), re-estimate
-    per-cell coordinate means on exact floor(x·1e9+0.5) integers, and keep
-    the previous centroid for empty cells — a literal SQL replay of
-    kmeans_fit's one distributed pass. `src` is the fit corpus: the full
-    embeddings table, or the hash-sample CTE of the sampled-fit twin."""
+    `src` (the fit-sample CTE) to its argmax-cosine cell against the `prev`
+    centroid table (tie → first maximal cell, the -2.0 sentinel for a NULL
+    cosine), re-estimate per-cell coordinate means on exact
+    floor(x·1e9+0.5) integer sums, and keep the previous centroid for
+    empty cells — a literal SQL replay of one _kmeans_fit_local iteration
+    (see its docstring for why integer sums and floor make it exact)."""
     return f"""
     {nxt}_assign AS (
       SELECT vec_id, embedding, cell FROM (
@@ -955,35 +874,28 @@ def _kmeans_iter_sql(prev: str, nxt: str, src: str = "embeddings") -> str:
     )"""
 
 
-def _ivf_trained_sql(fit_src: str | None = None) -> str:
-    """Full SQL twin of sim_ann_ivf_trained: replay the 3-iteration k-means
-    fit (possible because every fit step is either exact integer math or a
-    fixed-order IEEE expression — see kmeans_fit's determinism note), then
-    probe-2 retrieval, exact truth, and the per-query recall audit.
-    fit_src: None fits on the full embeddings table; "sample" fits on the
-    content-addressed top-{_IVF_FIT_SAMPLE} hash-sample (the sampled-fit
-    twin's oracle — retrieval/truth/audit still run on the full corpus)."""
+def _ivf_trained_sql() -> str:
+    """Full SQL twin of sim_ann_ivf_sampled: take the content-addressed
+    top-{_IVF_FIT_SAMPLE} hash-sample, replay the 3-iteration k-means fit on
+    it (possible because every fit step is either exact integer math or a
+    fixed-order IEEE expression — see _kmeans_fit_local), then probe-2
+    retrieval, exact truth, and the per-query recall audit over the full
+    corpus."""
     c0_rows = ",\n        ".join(
         "({cell}, list_transform([{vals}], v -> CAST(v AS DOUBLE)))".format(
             cell=j + 1, vals=", ".join(str(v) for v in c)
         )
         for j, c in enumerate(_centroids())
     )
-    src = "embeddings" if fit_src is None else "fitsample"
-    sample_cte = (
-        ""
-        if fit_src is None
-        else f"""fitsample AS (
+    iters = ",".join(
+        _kmeans_iter_sql(f"c{i}", f"c{i + 1}", "fitsample") for i in range(3)
+    )
+    return f"""
+    WITH fitsample AS (
       SELECT vec_id, embedding FROM embeddings
       ORDER BY md5('ivf:' || CAST(vec_id AS VARCHAR)), vec_id
       LIMIT {_IVF_FIT_SAMPLE}
-    ),"""
-    )
-    iters = ",".join(
-        _kmeans_iter_sql(f"c{i}", f"c{i + 1}", src=src) for i in range(3)
-    )
-    return f"""
-    WITH {sample_cte}c0 AS (
+    ),c0 AS (
       SELECT * FROM (VALUES
         {c0_rows}
       ) AS t(cell, cvec)
@@ -1061,11 +973,10 @@ def _ivf_trained_sql(fit_src: str | None = None) -> str:
 
 
 # Bounded memo for materialized IVF cell assignments (ADVICE r8): keys are
-# (applicationId, sf_dir, fit-kind). 6 = the legitimate working set — THREE
-# fit kinds share this LRU since late r9 (sampled + fixed from the registry
-# at bench warmup + measured dirs, plus the full-fit exactness pin's
-# fixture dirs in one pytest session); at 4, a sweep touching sampled and
-# fixed at two dirs already filled every slot and any extra dir evicted a
+# (applicationId, sf_dir, fit-kind). 6 = the legitimate working set — two
+# fit kinds (sampled, fixed) at the bench warmup + measured dirs, plus one
+# more fixture dir in a pytest session; at 4, a sweep touching both kinds
+# at two dirs already filled every slot and any extra dir evicted a
 # still-useful cell table.
 from onebrc_spark.operators.memo import PersistedLRU, short_plan_twin  # noqa: E402
 
@@ -1073,65 +984,43 @@ _IVF_CELLED_CACHE = PersistedLRU(maxsize=6)
 
 
 def clear_ivf_cache() -> None:
-    """Release every memoized cell assignment (bench/test hook)."""
+    """Release every memoized cell assignment (scripts/docs_scale_run.py
+    clears it so each timed sampled-fit run is cold)."""
     _IVF_CELLED_CACHE.clear()
 
 
-def _memoized_celled(
-    cache_key: tuple | None, build, small: bool = False
-) -> DataFrame:
+def _memoized_celled(cache_key: tuple, build, small: bool) -> DataFrame:
     """Materialize-and-memoize a cell-assignment frame: the persisted,
-    counted cell table IS the IVF index build. One shared error path for
-    every fit kind (fixed/trained/sampled): a failed or cancelled count
-    unpersists the fresh handle instead of stranding it (the ADVICE r8
-    leak class); success LRU-puts under cache_key. cache_key=None builds
-    un-memoized (the exactness-pin path). `small` gates the short-plan
-    twin (see _celled_short_plan)."""
-    celled = _IVF_CELLED_CACHE.get(cache_key) if cache_key is not None else None
-    if celled is not None:
-        return _celled_short_plan(celled, small)
-    celled = build().persist()
-    try:
-        celled.count()
-    except BaseException:
-        celled.unpersist()
-        raise
-    if cache_key is not None:
-        _IVF_CELLED_CACHE.put(cache_key, celled)
-        return _celled_short_plan(celled, small)
-    return celled
+    counted cell table IS the IVF index build (PersistedLRU.get_or_build
+    owns the persist/count/unpersist-on-failure lifecycle).
 
-
-def _celled_short_plan(celled: DataFrame, small: bool = True) -> DataFrame:
-    """Short-plan twin of a memoized cell table (r13 optimization round,
-    guide §1.2 step 2 / §7.3 'very large plans'): the celled frame's
-    logical plan embeds the K×dim inline-literal cosine array, and every
-    downstream operation of the audit assembly (7 joins, ~13 selects, two
-    windows) re-analyzes that whole tree — measured 2.18 s of driver-side
-    py4j/analysis per build at sf0.01, dropping to 0.85 s when consumers
-    see a LogicalRDD instead.
+    Consumers get the gated short-plan twin of the memo entry (r13
+    optimization round, guide §1.2 step 2 / §7.3 'very large plans'): the
+    celled frame's logical plan embeds the K×dim inline-literal cosine
+    array, and every downstream operation of the audit assembly (7 joins,
+    ~13 selects, two windows) re-analyzes that whole tree — measured
+    2.18 s of driver-side py4j/analysis per build at sf0.01, dropping to
+    0.85 s when consumers see a LogicalRDD instead.
 
     SIZE-GATED since r14 (VERDICT r13 #2, ADVICE r13): the celled table
     has one row per embedding — corpus-sized at scale — so the twin's
     second non-replicated copy and localCheckpoint's no-recompute failure
-    mode are only taken when the source input is small (catalog.
-    small_for_twin over the embeddings scan's size hint); above the gate
-    (or when the size is unknown) consumers get the persisted original,
-    whose re-analysis cost is fixed and amortized at scale. Mechanics and
-    lifecycle live in memo.short_plan_twin; gate pinned in
-    tests/test_memo.py."""
-    return short_plan_twin(celled, small)
+    mode are only taken when `small` (catalog.small_for_twin over the
+    embeddings scan's size hint); above the gate (or when the size is
+    unknown) consumers get the persisted original, whose re-analysis cost
+    is fixed and amortized at scale. Mechanics and lifecycle live in
+    memo.short_plan_twin; gate pinned in tests/test_memo.py."""
+    return short_plan_twin(_IVF_CELLED_CACHE.get_or_build(cache_key, build), small)
 
 
 def _ivf_probe2_audit(
-    e: DataFrame, cents: list[list[float]], cache_key: tuple | None = None
+    e: DataFrame, cents: list[list[float]], cache_key: tuple
 ) -> DataFrame:
-    """Probe-2 IVF retrieval + exact truth + per-query recall audit against
-    a fitted centroid table — the shared back half of sim_ann_ivf_trained
-    and sim_ann_ivf_sampled (which differ only in the corpus the quantizer
-    was FIT on; retrieval always runs on the full corpus).
+    """Probe-2 IVF retrieval + exact truth + per-query recall audit of
+    sim_ann_ivf_sampled against its fitted centroid table (the quantizer is
+    FIT on the sample; retrieval always runs on the full corpus).
 
-    cache_key ((applicationId, sf_dir, fit-kind) from the callers) memoizes
+    cache_key ((applicationId, sf_dir, fit-kind) from the caller) memoizes
     the materialized cell assignment in a bounded PersistedLRU — ADVICE r8:
     the r8 form localCheckpointed the assignment per CALL and never
     released it, so repeated builds (timed bench sweeps) accumulated
@@ -1140,8 +1029,8 @@ def _ivf_probe2_audit(
     (unlike localCheckpoint) keeps lineage, so a stale evicted handle can
     recompute instead of crashing."""
     # coalesce(cos, -2) totalizes the argmax for zero-norm vectors (same
-    # sentinel as kmeans_fit — matches the oracle's row_number tie-break:
-    # cell 1, then cell 2). One F.expr for all 8 cosines (r13): the
+    # sentinel as _kmeans_fit_local — matches the oracle's row_number
+    # tie-break: cell 1, then cell 2). One F.expr for all 8 cosines (r13): the
     # CAST('repr' AS DOUBLE) literals are bit-identical to the former
     # lit(float64-ndarray) form (shortest-repr round trip, correctly
     # rounded parse) and the whole 8×dim tree costs one JVM parse instead
@@ -1273,53 +1162,6 @@ def _ivf_probe2_audit(
     )
 
 
-def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer and multi-probe search:
-    3 Lloyd iterations fit the centroid table, each query probes its TWO
-    nearest cells (the production lever for IVF recall — probe-1 recall@5
-    is 0.26-0.42 on this corpus, probe-2 is 0.42-0.58), top-5 within the
-    probed cells.
-
-    Oracle strategy (round 6 — VERDICT item 5, replacing the pinned-TRUE
-    booleans that were the registry's weakest oracle): the fitted
-    centroids are data-dependent, but the fit itself is a PURE FUNCTION
-    of the data — every step is exact integer math (floor(x·1e9+0.5)
-    coordinate sums) or a fixed-order IEEE expression (the cosine fold) —
-    so the DuckDB oracle REPLAYS the whole 3-iteration Lloyd fit as
-    unrolled SQL CTEs (_kmeans_iter_sql), then the probe-2 retrieval,
-    the exact brute-force truth, and the audit. Output is per-query
-    exact integers, every column value-bearing and hash-verified:
-      n_cand      candidates in the two probed cells (independent
-                  occupancy census, minus the query itself),
-      n_ret       rows the IVF retrieval returned (contract:
-                  n_ret = min(k, n_cand) — the old ivf_complete boolean,
-                  now checkable per-row by the driver),
-      n_true      exact top-k truth size,
-      n_found     |ivf ∩ exact|,
-      recall_ppm  exact-integer recall@5 (X3d's idiom).
-    Determinism and inertia descent of the fit are pinned in
-    tests/test_properties.py.
-
-    This full-corpus fit is the EXACTNESS reference; the production-shaped
-    fit is sim_ann_ivf_sampled (VERDICT r7 #2) — at 100 TB, 3 Lloyd passes
-    over the whole corpus are 3 full shuffles spent fitting a k×dim model
-    a fixed-size sample estimates just as well.
-
-    DEREGISTERED in r9 (VERDICT r8 #2): with the sampled twin covering the
-    production shape, the full fit's only remaining role is exactness
-    evidence — which tests/test_ivf_trained_pin.py provides by running
-    this function against the SAME unrolled DuckDB oracle
-    (_ivf_trained_sql()) on small fixtures, instead of every registry
-    sweep paying the 3-pass fit (the r8 fullsweep's worst entry, 8.6 s at
-    sf0.01)."""
-    e = spread(load_table(spark, sf_dir, "embeddings"), spark, dense=True)
-    return _ivf_probe2_audit(
-        e,
-        kmeans_fit(e),
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "trained"),
-    )
-
-
 # Fit-sample size for the sampled-fit IVF twin: fixed m, content-addressed
 # (md5 top-m — the ml_fixed_size_sample idiom), so the fit input is the
 # same m vectors every run, on every engine, under any partitioning: the
@@ -1333,35 +1175,54 @@ _IVF_FIT_SAMPLE = 128
 
 @query(
     "sim_ann_ivf_sampled",
-    oracle=_ivf_trained_sql(fit_src="sample"),
+    oracle=_ivf_trained_sql(),
     survey_ref="X3 (IVF quantizer fit on a content-addressed hash-sample)",
 )
 def sim_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_ann_ivf_trained's production twin: the SAME 3-iteration Lloyd
-    fit, run on a fixed-size content-addressed hash-sample (top-128 by
-    md5('ivf:' || vec_id) — deterministic, engine-portable, exactly-m) of
-    the corpus instead of the whole corpus; probe-2 retrieval, exact truth
-    and the recall audit still run on the FULL corpus, so the output
-    columns measure what sampling the fit actually costs in recall.
+    """IVF ANN with a TRAINED coarse quantizer and multi-probe search:
+    3 Lloyd iterations fit the centroid table on a fixed-size
+    content-addressed hash-sample (top-128 by md5('ivf:' || vec_id) —
+    deterministic, engine-portable, exactly-m) of the corpus, and each
+    query probes its TWO nearest cells (the production lever for IVF
+    recall — probe-1 recall@5 is 0.26-0.42 on this corpus, probe-2 is
+    0.42-0.58), top-5 within the probed cells. Probe-2 retrieval, exact
+    truth and the recall audit run on the FULL corpus, so the output
+    columns measure what sampling the fit actually costs in recall:
+      n_cand      candidates in the two probed cells (independent
+                  occupancy census, minus the query itself),
+      n_ret       rows the IVF retrieval returned (contract:
+                  n_ret = min(k, n_cand)),
+      n_true      exact top-k truth size,
+      n_found     |ivf ∩ exact|,
+      recall_ppm  exact-integer recall@5 (X3d's idiom).
 
-    This closes the round-7 scale gap: the full fit posexplodes every
-    embedding 3× (the 12.5 s fullsweep outlier at sf0.01; 3 full-corpus
-    shuffles at 100 TB), while the sampled fit's corpus-sized work is ONE
-    TakeOrderedAndProject — per-partition m-heaps, a P·m-row driver merge,
-    no shuffle — after which each Lloyd pass touches m=128 rows. The
-    oracle replays the identical sample (same md5 ordering) and the
-    identical fit, so the trained-then-retrieved output is hash-verified
-    end to end, same columns as sim_ann_ivf_trained."""
+    Scale: a full-corpus fit posexplodes every embedding 3× (the 12.5 s
+    fullsweep outlier at sf0.01; 3 full-corpus shuffles at 100 TB), while
+    the sampled fit's corpus-sized work is ONE TakeOrderedAndProject —
+    per-partition m-heaps, a P·m-row driver merge, no shuffle — after
+    which each Lloyd pass touches m=128 rows. The oracle replays the
+    identical sample (same md5 ordering) and the identical fit as unrolled
+    SQL CTEs (_ivf_trained_sql), so the trained-then-retrieved output is
+    hash-verified end to end."""
     e = spread(load_table(spark, sf_dir, "embeddings"), spark, dense=True)
+    return _ivf_probe2_audit(
+        e,
+        _kmeans_fit_local(_ivf_fit_sample(e)),
+        cache_key=(spark.sparkContext.applicationId, sf_dir, "sampled"),
+    )
+
+
+def _ivf_fit_sample(e: DataFrame) -> list:
+    """The collected fit sample of sim_ann_ivf_sampled: the embeddings of
+    the top-_IVF_FIT_SAMPLE rows by md5('ivf:' || vec_id), then vec_id.
+
+    Collected to fit DRIVER-LOCALLY (r9): the fit input is m=128 rows by
+    construction at ANY corpus size, and the fit is a pure fixed-order
+    IEEE function (that is what lets DuckDB replay it), so Spark's only
+    jobs are the TakeOrdered sample and the retrieval — 3 distributed
+    Lloyd passes were ~4 s of per-iteration plan/job overhead spent on
+    128 rows (the r9 fullsweep's worst residual entry)."""
     h = F.md5(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string")))
-    # collect the fixed-m sample and fit DRIVER-LOCALLY (r9): the fit
-    # input is m=128 rows by construction at ANY corpus size, and the fit
-    # is a pure fixed-order IEEE function (that is what lets DuckDB replay
-    # it), so Spark's only jobs here are the TakeOrdered sample and the
-    # retrieval — the 3 distributed Lloyd passes were ~4 s of per-iteration
-    # plan/job overhead spent on 128 rows (the r9 fullsweep's worst
-    # residual entry). _kmeans_fit_local is pinned bit-identical to the
-    # distributed kmeans_fit in tests/test_properties.py.
     rows = (
         e.select("vec_id", "embedding", h.alias("h"))
         .orderBy("h", "vec_id")
@@ -1369,12 +1230,7 @@ def sim_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()
     )
-    cents = _kmeans_fit_local([r["embedding"] for r in rows])
-    return _ivf_probe2_audit(
-        e,
-        cents,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "sampled"),
-    )
+    return [r["embedding"] for r in rows]
 
 
 # --- X3b: embedding quantization (int8) -------------------------------------

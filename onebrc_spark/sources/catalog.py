@@ -74,11 +74,6 @@ def ts_units(sf_dir: str, name: str) -> tuple[tuple[str, str], ...]:
     return tuple(out)
 
 
-def events_ts_unit(sf_dir: str) -> str:
-    """The events.ts unit for this directory (see ts_units)."""
-    return dict(ts_units(sf_dir, "events"))["ts"]
-
-
 def _read_schema(sf_dir: str, name: str) -> T.StructType:
     """Raw reader schema at this sf_dir's actual on-disk units.
 

@@ -73,16 +73,6 @@ def stream_tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_sliding_counts(events: DataFrame) -> DataFrame:
-    """ST2 streaming twin of evt_sliding_window."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "n")
-    )
-
-
 def stream_session_windows(events: DataFrame) -> DataFrame:
     """ST3 streaming twin of evt_session_window (native session_window +
     watermark; state store merges open sessions per user)."""

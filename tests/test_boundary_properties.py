@@ -958,7 +958,7 @@ def test_half_away_long_matches_round(spark):
 
 def test_sql_double_array_roundtrips_exactly(spark):
     """similarity.sql_double_array spells a constant vector as Spark-SQL
-    text (kmeans_fit's centroids, _cell_scores): each element must come
+    text (the fitted IVF centroids, _cell_scores): each element must come
     back bit-identical to the Python double and to the ArrayType literal
     F.lit(ndarray) builds."""
     import numpy as np

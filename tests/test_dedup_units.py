@@ -176,27 +176,60 @@ def test_real_bmp_decoder_roundtrip_and_malformed():
         decode_bmp(buf[:20])
 
 
+def _cached_schemas(spark) -> dict[int, str]:
+    """Block-storage RDD id → schema of every materialized cached plan.
+
+    The cache manager keeps its entries in a private field, read here by
+    reflection; each entry's column buffers are the storage RDD that
+    holds its rows."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    out = {}
+    entries = field.get(cm).iterator()
+    while entries.hasNext():
+        rel = entries.next().cachedRepresentation()
+        builder = rel.cacheBuilder()
+        if builder.isCachedColumnBuffersLoaded():
+            out[builder.cachedColumnBuffers().id()] = rel.schema().simpleString()
+    return out
+
+
 def test_minhash_pairs_memoized_without_persist_leak(spark):
     """Round-3 finding: every dedup_minhash_lsh call pinned a fresh shingle
     persist that was never released — a slow executor-memory leak across a
     161-query drive. Now the pair set is memoized per (app, sf_dir) and the
-    shingle cache is unpersisted inside the call: repeat calls must add NO
-    new entries to block-manager storage, and no storage entry may hold the
-    (wide) shingle arrays.
+    shingle cache is unpersisted inside the build: a cold build must leave
+    no cached plan carrying the (wide) array<string> shingle column, and
+    repeat calls must add NO new entries to block-manager storage.
 
-    Compared by RDD id, not by count: localCheckpoint blocks that earlier
-    tests left behind are removed by Spark's ContextCleaner whenever the
-    JVM happens to collect them, which can lower the count mid-test."""
-    from onebrc_spark.operators.dedup import dedup_minhash_lsh
+    Persistent RDDs are read from the SparkContext, which updates them
+    synchronously (the storage-info listing lags behind on the listener
+    bus), and compared by RDD id, not by count: localCheckpoint blocks
+    that earlier tests left behind are removed by Spark's ContextCleaner
+    whenever the JVM happens to collect them, which can lower the count
+    mid-test. A localCheckpoint is not a cached plan, so the schema check
+    covers persists only."""
+    from onebrc_spark.operators.clustering import clear_components_cache
+    from onebrc_spark.operators.dedup import clear_pair_cache, dedup_minhash_lsh
     from tests.conftest import SMOKE_SF_DIR
 
     sc = spark.sparkContext
 
     def stored() -> set[int]:
-        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+        return set(sc._jsc.getPersistentRDDs().keys())
 
+    clear_pair_cache()
+    clear_components_cache()  # labels derive from the pairs
+    before = stored()
     dedup_minhash_lsh(spark, SMOKE_SF_DIR).count()
     after_first = stored()
+    wide = {
+        rdd: schema
+        for rdd, schema in _cached_schemas(spark).items()
+        if rdd in after_first - before and "array<string>" in schema
+    }
+    assert not wide, wide
     dedup_minhash_lsh(spark, SMOKE_SF_DIR).count()
     dedup_minhash_lsh(spark, SMOKE_SF_DIR).count()
     added = stored() - after_first
@@ -234,7 +267,7 @@ def test_incremental_rejections_gates_and_asymmetry(spark):
     be joined). Each batch doc gets its own source, so the per-source
     manifest is a per-doc verdict; doc_ids are picked by their md5 bucket
     (first hex digit of md5(doc_id) < 3 = new batch)."""
-    from onebrc_spark.operators.incremental import _admission_sql, is_new_batch
+    from onebrc_spark.operators.incremental import _admission_sql, _is_new_sqlx
 
     base = " ".join(f"tok{i % 7} word{i % 11}" for i in range(40))
     near = base.replace("tok1", "tokX", 2)  # high-Jaccard variant
@@ -255,7 +288,8 @@ def test_incremental_rejections_gates_and_asymmetry(spark):
         (27, "exact_short", "ab cd"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    batch_ids = {r["doc_id"] for r in docs.filter(is_new_batch("doc_id")).collect()}
+    is_new = F.expr(_is_new_sqlx("doc_id"))
+    batch_ids = {r["doc_id"] for r in docs.filter(is_new).collect()}
     assert batch_ids == {6, 19, 24, 27}
 
     out = {

@@ -408,3 +408,159 @@ def test_temp_view_and_band_key_lint_shapes():
         'def _band_keys_sqlx(sig):\n    return f"element_at({sig}, 1)"\n'
     )
     assert not _band_key_sites("b = 'sig[band*3+1:band*3+3] AS band_sig'\n")
+
+
+# Top-level engine definitions reached only by tests, kept on purpose.
+# Each entry is "<module path under onebrc_spark/>::<name>" → its reason.
+_TEST_ONLY_KEPT = {
+    "sources/pysource.py::write_report": (
+        "the Python Data Source writer behind SURVEY S8's report sink; no "
+        "registry query writes files"
+    ),
+    "sources/pysource.py::read_synth_stream": (
+        "the Python Data Source stream reader README.md declares (batch + "
+        "streaming); a batch query cannot drive a stream reader"
+    ),
+}
+
+_IDENTIFIER = re.compile(r"[A-Za-z_]\w*\Z")
+
+
+def _references(source: str) -> list[tuple[str, int]]:
+    """(identifier, line) for every name, attribute, imported name and
+    identifier-shaped string constant (a getattr or registry lookup by
+    name) in `source`."""
+    refs = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Name):
+            refs.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            refs.append((node.attr, node.lineno))
+        elif isinstance(node, ast.ImportFrom):
+            refs += [(a.name, node.lineno) for a in node.names]
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and _IDENTIFIER.match(node.value)
+        ):
+            refs.append((node.value, node.lineno))
+    return refs
+
+
+def _definitions(source: str) -> list[tuple[str, int, int, bool]]:
+    """(name, first line, last line, registered) of every top-level def and
+    class; registered = decorated with the registry's @query."""
+    out = []
+    for node in ast.parse(source).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            registered = any(
+                isinstance(d, ast.Call) and ast.unparse(d.func) == "query"
+                for d in node.decorator_list
+            )
+            out.append((node.name, node.lineno, node.end_lineno, registered))
+    return out
+
+
+def _unreached(
+    engine: dict[str, str], reachers: dict[str, str], tests: dict[str, str]
+) -> list[str]:
+    """Top-level engine definitions nothing in the product references.
+
+    engine: module path under onebrc_spark/ → source; reachers: the other
+    files whose references count (bench.py, perfbench/,
+    __spark_entry__.py, scripts/); tests: test files. A reference inside
+    the definition itself (recursion) does not count."""
+    where: dict[str, list[tuple[str, int]]] = {}
+    for group, files in (("product", {**engine, **reachers}), ("tests", tests)):
+        for path, source in files.items():
+            for name, line in _references(source):
+                where.setdefault(name, []).append((group, path, line))
+    out = []
+    for path, source in sorted(engine.items()):
+        for name, first, last, registered in _definitions(source):
+            groups = {
+                group
+                for group, ref_path, line in where.get(name, [])
+                if not (ref_path == path and first <= line <= last)
+            }
+            if registered or "product" in groups:
+                continue
+            if "tests" not in groups:
+                out.append(f"{path}::{name}: referenced nowhere")
+            elif not (
+                path.startswith("streaming/") or f"{path}::{name}" in _TEST_ONLY_KEPT
+            ):
+                out.append(f"{path}::{name}: referenced only by tests")
+    return out
+
+
+def _sources(root: Path, *globs: str) -> dict[str, str]:
+    return {
+        p.relative_to(root).as_posix(): p.read_text()
+        for g in globs
+        for p in sorted(root.glob(g))
+    }
+
+
+def test_every_engine_definition_is_reached():
+    """Every top-level def/class under onebrc_spark/ is reached by the
+    product: a registry query (@query), another engine module, bench.py,
+    perfbench/, __spark_entry__.py or scripts/. Code only tests reach is
+    an undeclared twin that exists to be compared in tests; move it into
+    the test that uses it. The Structured Streaming twins under
+    streaming/ are declared in README.md and checked against their batch
+    queries, so tests may be their only caller; anything else kept for
+    tests alone needs a reason in _TEST_ONLY_KEPT."""
+    repo = SRC.parent
+    engine = _sources(SRC, "**/*.py")
+    reachers = _sources(
+        repo, "bench.py", "__spark_entry__.py", "perfbench/**/*.py", "scripts/**/*.py"
+    )
+    tests = _sources(repo, "tests/**/*.py")
+    defined = {
+        f"{path}::{d[0]}" for path, source in engine.items() for d in _definitions(source)
+    }
+    assert set(_TEST_ONLY_KEPT) <= defined, set(_TEST_ONLY_KEPT) - defined
+    violations = _unreached(engine, reachers, tests)
+    assert not violations, (
+        "engine definitions the product never reaches — delete them, or "
+        "move a test-only helper into its test:\n" + "\n".join(violations)
+    )
+
+
+def test_unreached_lint_shapes():
+    """A definition nothing references and one only a test references
+    fail, and so does one that only references itself; one a sibling
+    module references passes, as do a registered query and a streaming
+    twin that only a test drives."""
+    engine = {
+        "operators/a.py": (
+            "def dead():\n    return 1\n\n\n"
+            "def test_only():\n    return 2\n\n\n"
+            "def used_by_sibling():\n    return 3\n\n\n"
+            "def recursive(n):\n    return recursive(n - 1) if n else 0\n\n\n"
+            "@query('q', oracle=None, survey_ref='X')\n"
+            "def registered(spark, sf_dir):\n    return 4\n"
+        ),
+        "operators/b.py": "from onebrc_spark.operators.a import used_by_sibling\n",
+        "streaming/pipelines.py": "def stream_twin(df):\n    return df\n",
+    }
+    tests = {
+        "tests/test_a.py": (
+            "from onebrc_spark.operators.a import test_only\n"
+            "from onebrc_spark.streaming.pipelines import stream_twin\n"
+        )
+    }
+    assert _unreached(engine, {}, tests) == [
+        "operators/a.py::dead: referenced nowhere",
+        "operators/a.py::test_only: referenced only by tests",
+        "operators/a.py::recursive: referenced nowhere",
+    ]
+    # a script reference reaches a definition, and an unreferenced
+    # streaming definition still fails
+    engine["streaming/pipelines.py"] += "\n\ndef stream_orphan(df):\n    return df\n"
+    assert _unreached(engine, {"scripts/s.py": "x = dead()\n"}, tests) == [
+        "operators/a.py::test_only: referenced only by tests",
+        "operators/a.py::recursive: referenced nowhere",
+        "streaming/pipelines.py::stream_orphan: referenced nowhere",
+    ]

@@ -135,7 +135,7 @@ def test_catalog_sniffer_agrees_with_footer() -> None:
     from onebrc_spark.sources import catalog
 
     for sf_dir in (SMOKE_SF_DIR, SF_DIR):
-        assert catalog.events_ts_unit(sf_dir) == (
+        assert dict(catalog.ts_units(sf_dir, "events"))["ts"] == (
             _footer(sf_dir, "events").field("ts").type.unit
         )
         for table in ("orders", "lineitem", "events"):
@@ -161,7 +161,7 @@ def test_nanos_fallback_read_path(spark, tmp_path) -> None:
     d = str(tmp_path / "nsdir")
     os.makedirs(d)
     pq.write_table(tbl, f"{d}/events.parquet", coerce_timestamps=None)
-    assert catalog.events_ts_unit(d) == "ns"
+    assert dict(catalog.ts_units(d, "events"))["ts"] == "ns"
     back = catalog.load_table(spark, d, "events")
     assert [f.dataType for f in back.schema.fields if f.name == "ts"] == [
         __import__("pyspark.sql.types", fromlist=["TimestampType"]).TimestampType()
@@ -198,7 +198,7 @@ def test_corpus_semantic_contracts(spark) -> None:
       IVF/kNN queries)."""
     from pyspark.sql import functions as F
 
-    from onebrc_spark.operators.incremental import is_new_batch
+    from onebrc_spark.operators.incremental import _is_new_sqlx
     from onebrc_spark.sources.catalog import load_table
 
     dirs = dict.fromkeys((SMOKE_SF_DIR, SF_DIR, _SF01_DIR))
@@ -214,7 +214,7 @@ def test_corpus_semantic_contracts(spark) -> None:
         # non-vacuity at sf0.01). Pin the property where it holds so a
         # regeneration that drops sf0.1's exact dups is named here.
         if sf_dir == _SF01_DIR:
-            tagged = docs.select("text", is_new_batch("doc_id").alias("nw"))
+            tagged = docs.select("text", F.expr(_is_new_sqlx("doc_id")).alias("nw"))
             cross = (
                 tagged.filter(F.col("nw"))
                 .select("text")

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark import StorageLevel
 
 from onebrc_spark.operators.memo import PersistedLRU
@@ -49,6 +50,36 @@ def test_lru_recency_order_protects_hot_entry(spark):
     lru.put("c", c)
     assert _persisted(a), "recently-read entry must survive eviction"
     assert not _persisted(b), "least-recently-used entry must be evicted"
+    lru.clear()
+
+
+def test_get_or_build_persists_once_and_releases_a_failed_build(spark):
+    """PersistedLRU.get_or_build owns the memo lifecycle: a miss persists
+    and materializes build() once and stores it, a hit returns the stored
+    frame without calling build, and a build whose materialization fails
+    is unpersisted and never stored."""
+    lru = PersistedLRU(maxsize=2)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(6)
+
+    first = lru.get_or_build("k", build)
+    assert _persisted(first) and len(calls) == 1
+    assert lru.get_or_build("k", build) is first and len(calls) == 1
+
+    failed = []
+
+    def bad_build():
+        df = spark.range(3).selectExpr("raise_error('planted') AS x")
+        failed.append(df)
+        return df
+
+    with pytest.raises(Exception, match="planted"):
+        lru.get_or_build("bad", bad_build)
+    assert "bad" not in lru
+    assert not _persisted(failed[0]), "failed build must be unpersisted"
     lru.clear()
 
 

@@ -189,6 +189,28 @@ def test_banded_lsh_candidates_bounded_as_corpus_grows(spark):
     assert b_big < f_big  # banded strictly cheaper once N >> 2^8
 
 
+def _banded_lsh_pairs(e, n_bands: int, rows_per_band: int):
+    """Distinct candidate pairs (id_a < id_b) that collide in ≥1 band of
+    similarity.banded_lsh_buckets — the candidate set whose size the census
+    bounds."""
+    from onebrc_spark.operators.similarity import banded_lsh_buckets
+
+    b = banded_lsh_buckets(e, n_bands, rows_per_band).select(
+        "vec_id", "band", "bucket"
+    )
+    a, bb = b.alias("a"), b.alias("b")
+    return (
+        a.join(
+            bb,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
+        .distinct()
+    )
+
+
 def test_banded_pairs_bounded_by_census(spark):
     """The headline ANN query's candidate join must agree with (and be
     bounded by) the planning-time census sim_lsh_candidate_stats computes:
@@ -200,14 +222,13 @@ def test_banded_pairs_bounded_by_census(spark):
         _STATS_BANDS,
         _STATS_ROWS,
         banded_lsh_buckets,
-        banded_lsh_pairs,
     )
     from onebrc_spark.sources.catalog import load_table
     from tests.conftest import SF_DIR
 
     e = load_table(spark, SF_DIR, "embeddings")
     n = e.count()
-    pairs = banded_lsh_pairs(e, _STATS_BANDS, _STATS_ROWS).count()
+    pairs = _banded_lsh_pairs(e, _STATS_BANDS, _STATS_ROWS).count()
     occ = (
         banded_lsh_buckets(e, _STATS_BANDS, _STATS_ROWS)
         .groupBy("band", "bucket")
@@ -279,23 +300,26 @@ def test_station_table_partition_layout_invariant(spark):
 
 
 def test_kmeans_deterministic_and_improves_assignment(spark):
-    """IVF coarse-quantizer training: (a) two fits agree bit-for-bit
-    (deterministic init + fixed-order means — task retries can't change the
-    model); (b) the trained centroids explain the corpus better than the
+    """IVF coarse-quantizer training (_kmeans_fit_local, the fit
+    sim_ann_ivf_sampled runs): (a) the fit is a function of the sample's
+    row SET — the collected rows arrive in partition order, and the exact
+    integer coordinate sums make any order give the same centroids bit for
+    bit; (b) the trained centroids explain the corpus better than the
     md5-constant init: mean best-cosine (the spherical-k-means objective)
     strictly increases after training."""
     from onebrc_spark.operators.similarity import (
         _centroids,
+        _kmeans_fit_local,
         cosine,
-        kmeans_fit,
         sql_double_array,
     )
     from onebrc_spark.sources.catalog import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    fit1 = kmeans_fit(e, iters=3)
-    fit2 = kmeans_fit(e, iters=3)
-    assert fit1 == fit2
+    rows = [r["embedding"] for r in e.select("embedding").collect()]
+    fit1 = _kmeans_fit_local(rows, iters=3)
+    assert _kmeans_fit_local(rows[::-1], iters=3) == fit1
+    assert _kmeans_fit_local(rows[1::2] + rows[::2], iters=3) == fit1
 
     def mean_best_cos(cents):
         cs = F.array(*[cosine("embedding", sql_double_array(c)) for c in cents])
@@ -304,34 +328,6 @@ def test_kmeans_deterministic_and_improves_assignment(spark):
     before = mean_best_cos(_centroids())
     after = mean_best_cos(fit1)
     assert after > before, (before, after)
-
-
-def test_kmeans_local_fit_replays_distributed_fit_bit_for_bit(spark):
-    """The driver-local Lloyd loop the sampled IVF query uses on its
-    collected m-row sample (r9 — _kmeans_fit_local) must equal the
-    distributed kmeans_fit EXACTLY: both are the same fixed-order IEEE /
-    exact-integer recipe the DuckDB oracle unrolls, so any bit of drift
-    here is an oracle hash-fail waiting for a fixture. Executed over the
-    real smoke corpus INCLUDING its NULL-vector normalization boundary,
-    plus a degenerate zero-norm/NULL fixture."""
-    from onebrc_spark.operators.similarity import _kmeans_fit_local, kmeans_fit
-    from onebrc_spark.sources.catalog import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    rows = [r["embedding"] for r in e.select("embedding").collect()]
-    assert kmeans_fit(e, iters=3) == _kmeans_fit_local(rows, iters=3)
-
-    degen = spark.createDataFrame(
-        [
-            (0, [0.0] * 64, 1),
-            (1, None, 1),
-            (2, [((i * 13) % 7 - 3) / 3.0 for i in range(64)], 2),
-            (3, [((i * 29) % 11 - 5) / 5.0 for i in range(64)], 3),
-        ],
-        "vec_id LONG, embedding ARRAY<FLOAT>, label INT",
-    )
-    drows = [r["embedding"] for r in degen.select("embedding").collect()]
-    assert kmeans_fit(degen, iters=2) == _kmeans_fit_local(drows, iters=2)
 
 
 def test_minhash_identical_inputs_identical_signatures(spark):
@@ -938,32 +934,36 @@ def test_boilerplate_clean_and_ledger_agree_vs_reference(spark, docs):
 
 
 def test_ivf_argmax_tie_margin_is_diagnosable(spark):
-    """ADVICE r6: sim_ann_ivf_trained's oracle replays the 3-iteration
-    Lloyd fit assuming Spark's F.aggregate cosine fold and DuckDB's SQL
-    fold produce bit-identical doubles — a near-tie argmax flipped by a
-    last-ulp difference would cascade through later iterations and fail
-    the hash with no diagnosable cause. This pin measures the actual
-    margin: at EVERY point in the centroid trajectory (seed c0 through
-    fitted c3), for every vector, the top-2 cosine gap (assignment
-    stability) and the 2nd-vs-3rd gap (probe-2 selection stability) must
-    clear 1e-8 — ~1e8 ulps above fold-order noise (measured corpus minima:
-    1.9e-7). Exact ties are only legal at the -2.0 zero-norm sentinel,
+    """ADVICE r6: sim_ann_ivf_sampled's oracle replays the 3-iteration
+    Lloyd fit assuming the driver's Python cosine fold, Spark's
+    F.aggregate fold and DuckDB's SQL fold produce bit-identical doubles —
+    a near-tie argmax flipped by a last-ulp difference would cascade
+    through later iterations and fail the hash with no diagnosable cause.
+    This pin measures the actual margin: at EVERY point in the centroid
+    trajectory of the fit over the 128-row sample (seed c0 through fitted
+    c3), for every vector of the FULL corpus — the sample is assigned
+    against c0..c2 during the fit, and retrieval assigns every vector
+    against c3 — the top-2 cosine gap (assignment stability) and the
+    2nd-vs-3rd gap (probe-2 selection stability) must clear 1e-8 — ~1e8
+    ulps above fold-order noise. Exact ties are only legal at the -2.0 zero-norm sentinel,
     where both engines break ties to the first cell by construction. A
     fixture regeneration that lands on a near-tie fails HERE, by name,
     instead of as a wholesale hash mismatch."""
     from onebrc_spark.operators.similarity import (
         _IVF_K,
         _centroids,
+        _ivf_fit_sample,
+        _kmeans_fit_local,
         cosine,
-        kmeans_fit,
         sql_double_array,
     )
     from onebrc_spark.sources.catalog import load_table
     from tests.conftest import SF_DIR
 
     e = load_table(spark, SF_DIR, "embeddings")
+    sample = _ivf_fit_sample(e)
     seed = [[float(v) for v in c] for c in _centroids()[:_IVF_K]]
-    trajectory = [seed] + [kmeans_fit(e, iters=i) for i in (1, 2, 3)]
+    trajectory = [seed] + [_kmeans_fit_local(sample, iters=i) for i in (1, 2, 3)]
     for it, cents in enumerate(trajectory):
         cs = F.array(
             *[

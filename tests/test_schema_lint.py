@@ -73,11 +73,11 @@ import re
 
 # (query, key) pairs whose ordering is established OUTSIDE the Spark plan.
 _ORDER_KEY_EXEMPT = {
-    # the oracle's list(... ORDER BY pos) replays kmeans_fit's DRIVER-side
-    # centroid assembly (Python list order by coordinate position); the
-    # plan only sees the fitted centroids as literals. Pinned instead by
-    # test_properties.py::test_ivf_argmax_tie_margin_is_diagnosable and
-    # the full-fit pin in tests/test_ivf_trained_pin.py.
+    # the oracle's list(... ORDER BY pos) replays _kmeans_fit_local's
+    # DRIVER-side centroid assembly (Python list order by coordinate
+    # position); the plan only sees the fitted centroids as literals.
+    # Pinned instead by sim_ann_ivf_sampled's oracle parity and
+    # test_properties.py::test_ivf_argmax_tie_margin_is_diagnosable.
     ("sim_ann_ivf_sampled", "pos"),
 }
 

@@ -144,18 +144,17 @@ def test_stream_incremental_admission_matches_batch_gate(spark):
     documents against the static corpus digest set must admit exactly the
     docs the batch exact-gate admits (incremental.py's gate 1), and the
     plan must keep the digest-only projection on the static side."""
-    from onebrc_spark.operators.incremental import is_new_batch
+    from onebrc_spark.operators.incremental import _is_new_sqlx
     from onebrc_spark.streaming.pipelines import (
         read_documents_stream,
         run_to_completion,
         stream_incremental_admission,
     )
 
+    is_new = F.expr(_is_new_sqlx("doc_id"))
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
-    corpus = docs.filter(~is_new_batch("doc_id"))
-    new_stream = read_documents_stream(spark, SMOKE_SF_DIR).filter(
-        is_new_batch("doc_id")
-    )
+    corpus = docs.filter(~is_new)
+    new_stream = read_documents_stream(spark, SMOKE_SF_DIR).filter(is_new)
     out = run_to_completion(
         stream_incremental_admission(new_stream, corpus),
         "adm_smoke",
@@ -164,7 +163,7 @@ def test_stream_incremental_admission_matches_batch_gate(spark):
     )
     got = {r["doc_id"] for r in out.collect()}
 
-    batch_new = docs.filter(is_new_batch("doc_id"))
+    batch_new = docs.filter(is_new)
     corpus_digests = corpus.select(F.md5("text").alias("digest")).distinct()
     want = {
         r["doc_id"]
