@@ -6,12 +6,13 @@ the verified MinHash near-dup pair set (dedup.py — four consumers), the
 resolved connected-component labels (clustering.py — four consumers) and
 the IVF cell assignments (similarity.py). All three go through
 PersistedLRU.get_or_build, the one owner of get → build → persist →
-count → unpersist-on-failure → put. An unbounded dict is correct for the single-sf_dir sessions the driver
-and tests run, but a session that walks many sf_dirs would accumulate one
-persisted DataFrame per directory for the application lifetime. This LRU
-makes the bound explicit: inserting a key beyond `maxsize` unpersists and
-drops the least-recently-used entry, so executor storage is provably
-O(maxsize) no matter how many directories a session touches.
+count → unpersist-on-failure → put. An unbounded dict is correct for the
+single-sf_dir sessions the driver and tests run, but a session that walks
+many sf_dirs would accumulate one persisted DataFrame per directory for
+the application lifetime. This LRU makes the bound explicit: inserting a
+key beyond `maxsize` unpersists and drops the least-recently-used entry,
+so executor storage is provably O(maxsize) no matter how many
+directories a session touches.
 
 maxsize defaults to 2 because that is the legitimate working set: bench.py
 re-warms every plan at the warmup SF immediately before timing it at the
