@@ -31,15 +31,16 @@ workloads pay the cheap path and pathological ones stay O(log n) instead of
 raising.
 
 Driver-sync discipline: every round issues exactly ONE action — the
-lineage-truncating localCheckpoint is lazy (eager=False) so the convergence
+lineage-truncating checkpoint is lazy (eager=False) so the convergence
 aggregate materializes it in the same job, instead of the
 checkpoint-job + collect-job pair per round that round-3's bench flagged
 (2 driver syncs/round ≈ half the operator's wall-clock at sf0.1).
 
 Scale: the propagated state is (id, label) longs — the text never moves.
-Lineage is truncated every round with localCheckpoint() so the plan does not
+Lineage is truncated every round with memo.checkpoint so the plan does not
 grow with iterations (on a multi-tenant cluster with executor preemption,
-swap for reliable checkpoint() on HDFS/object storage).
+switch memo.checkpoint's storage kind to a reliable checkpoint on
+HDFS/object storage).
 
 Oracle: DuckDB recursive CTE computing min-reachable-id per node over the
 SAME MinHash edge set (dedup.minhash_pairs_sql) — exact transitive closure,
@@ -52,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from onebrc_spark.operators.dedup import minhash_pairs, minhash_pairs_sql
+from onebrc_spark.operators.memo import PersistedLRU, checkpoint
 from onebrc_spark.operators.mlprep import _hash_bucket, hash_bucket_sql
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
@@ -70,7 +72,7 @@ _AUTO_ESCALATE_ROUNDS = 6
 
 def _label_sum(df: DataFrame) -> tuple:
     """One-action convergence probe: (row count, Σlabel). Materializes any
-    pending lazy localCheckpoint in the same job."""
+    pending lazy checkpoint in the same job."""
     row = df.agg(
         F.count(F.lit(1)), F.sum(F.col("label").cast("decimal(38,0)"))
     ).collect()[0]
@@ -85,7 +87,7 @@ def _propagate_labels(
 
     Labels only ever decrease, so (count, Σlabel) is a strictly monotone
     progress measure over a fixed node set: unchanged == fixpoint. The
-    localCheckpoint is LAZY so the probe aggregate both truncates lineage
+    checkpoint is LAZY so the probe aggregate both truncates lineage
     and checks convergence in one job per round.
 
     `prev_sum` is the probe of the caller-supplied state (the fused
@@ -104,13 +106,12 @@ def _propagate_labels(
             .agg(F.min("src_label").alias("nmin"))
             .select(F.col("dst").alias("id"), "nmin")
         )
-        nxt = (
-            cur.join(neighbor_min, "id", "left")
-            .select(
+        nxt = checkpoint(
+            cur.join(neighbor_min, "id", "left").select(
                 "id",
                 F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         cur_sum = _label_sum(nxt)
         cur = nxt
@@ -172,7 +173,7 @@ def _star_fixpoint_labels(e: DataFrame, bidir: DataFrame, max_iters: int) -> Dat
     nodes = bidir.select(F.col("src").alias("id")).distinct()
     prev = None
     for _ in range(max_iters):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = checkpoint(_small_star(_large_star(e)), eager=False)
         row = e.agg(
             F.count(F.lit(1)),
             F.sum(F.col("src").cast("decimal(38,0)")),
@@ -225,9 +226,10 @@ def connected_components(
     # LAZY checkpoint (r14): materializes inside the first round's job
     # instead of paying a separate up-front materialization action; every
     # later round still reads the stored edge blocks, not the lineage
-    bidir = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    bidir = checkpoint(
+        fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        eager=False,
+    )
 
     def _out(labeled: DataFrame) -> DataFrame:
         return labeled.select(F.col("id"), F.col("label").alias("cluster_id"))
@@ -243,11 +245,11 @@ def connected_components(
     # both directions, so min(dst) per src IS the min neighbor, and
     # distinct src IS the node set). Its probe seeds prev_sum so fixpoint
     # detection fires at exactly the same round as before.
-    cur = (
+    cur = checkpoint(
         bidir.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
-        .select(F.col("src").alias("id"), "label")
-        .localCheckpoint(eager=False)
+        .select(F.col("src").alias("id"), "label"),
+        eager=False,
     )
     first_sum = _label_sum(cur)
     if first_sum[0] == 0:
@@ -274,9 +276,8 @@ def connected_components(
 # Same lifecycle discipline as dedup._MINHASH_PAIRS_CACHE; bench.py clears
 # this cache before timing dedup_cluster_components so the resolution cost
 # stays honestly measured. Bounded to 2 live entries (VERDICT r6 #7) —
-# the warmup + measured directories; a third sf_dir evicts-and-unpersists.
-from onebrc_spark.operators.memo import PersistedLRU
-
+# the warmup + measured directories; a third sf_dir evicts and releases
+# the persisted labels with the checkpoints their lineage reads.
 _COMPONENTS_CACHE = PersistedLRU(maxsize=2)
 
 
@@ -444,7 +445,7 @@ def ml_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same edge set, so a grouping bug breaks the hash).
 
     Scale notes (100 TB): reuses the iterative component resolution
-    (localCheckpoint label propagation); assignment adds one narrow map on
+    (checkpointed label propagation); assignment adds one narrow map on
     (doc_id, cluster_id) and the audit joins the dim-sized assignment back
     to the edge set — the corpus text never shuffles."""
     pairs = minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -641,15 +642,16 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidir = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    deg = bidir.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    ).localCheckpoint(eager=False)
+    deg = checkpoint(
+        bidir.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree")),
+        eager=False,
+    )
     # (src, dst, degree-of-sender), checkpointed ONCE: three iterations
     # plus the final join all read the stored 24-byte rows instead of
     # re-deriving edges+degrees per iteration (the lineage otherwise grows
     # a full edge-table subtree per power step — same discipline as CC's
     # per-round truncation and the boilerplate census)
-    ed = bidir.join(deg, "src").localCheckpoint(eager=False)
+    ed = checkpoint(bidir.join(deg, "src"), eager=False)
     r = deg.select(F.col("src").alias("id"), F.lit(10**9).cast("long").alias("r"))
     for _ in range(_PR_ITERS):
         r = (

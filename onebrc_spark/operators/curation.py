@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from onebrc_spark.operators.memo import checkpoint
 from onebrc_spark.operators.mlprep import _HASH_BUCKET_SQL, _hash_bucket
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
@@ -1204,20 +1205,21 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-walking the segmenter forest — ~0.56 s of pure driver-side
     # construction per build at sf0.1, the bulk of this entry.
     segs = spark.sql(_boiler_occurrence_sql("{docs}"), docs=d)
-    # ONE traversal for both consumers: the lazy localCheckpoint truncates
+    # ONE traversal for both consumers: the lazy checkpoint truncates
     # lineage at the exploded narrow stream, so the census (hot-set
     # broadcast job) materializes it and the mark probe reads the stored
     # rows — text is read and segmented exactly once. eager=False keeps
     # query construction job-free (the driver contract builds plans before
-    # acting); the checkpointed RDD is unpersisted by the ContextCleaner
-    # when the result DataFrame is garbage-collected. The census derives
+    # acting). A query transient: its blocks stay stored until the JVM
+    # collects the result DataFrame (memo.checkpoint's accepted failure
+    # mode, pinned in tests/test_memo.py). The census derives
     # from the SAME occurrence stream the mark pass consumes (an A/B test
     # measured 0.76 s vs 2.11 s for an array-column census at sf0.1); the
     # checkpoint upgrades "one shape" to "one execution".
     return spark.sql(
         _boiler_ledger_sql("{docs}", "{segs}"),
         docs=d,
-        segs=segs.localCheckpoint(eager=False),
+        segs=checkpoint(segs, eager=False),
     )
 
 

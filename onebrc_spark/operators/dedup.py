@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.operators.memo import PersistedLRU, checkpoint, persist_for_build
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import (
     load_table,
@@ -476,34 +477,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted-and-materialized DataFrame: four registered queries consume
     these pairs (minhash itself, both cluster queries, the cluster-safe
     split), and round 3 showed each call pinning a fresh `ws` persist — a
-    slow executor-memory leak across a 161-query drive. Now the shingle
-    and membership caches live only for the duration of the build
-    (minhash_pairs unpersists them in a finally) and downstream consumers
-    share one tiny cached pair set. persist+count rather than eager
-    localCheckpoint: the .rdd materialization path cost ~0.8 s extra per
-    build at sf0.1 (64 tasks × 3 stages outside the adaptive plan), while
-    a persisted plan stays in the AQE/codegen path and keeps lineage for
-    eviction safety."""
+    slow executor-memory leak across a 161-query drive. Now the collapsed
+    shingle rows live only for the duration of the build (the memo
+    releases them once the pair set is counted) and downstream consumers
+    share one tiny pair set. persist+count rather than eager
+    localCheckpoint of the build: the .rdd materialization path cost
+    ~0.8 s extra per build at sf0.1 (64 tasks × 3 stages outside the
+    adaptive plan), while a persisted plan stays in the AQE/codegen path;
+    small inputs then take their short-plan twin from that cache."""
     return minhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
-def _pairs_handout(handle: DataFrame) -> DataFrame:
-    """What pair-set consumers receive for a memoized handle: the gated
-    short-plan twin (r14 — the memo's 115 KB build-tree plan was
-    re-analyzed by every consumer operation; see memo.short_plan_twin for
-    the gate's scale rationale). Consumers must not hold a handed-out frame
-    across clear_pair_cache()/eviction — that was already the contract for
-    the persisted handle (its unpersisted blocks recompute, but the
-    transient inputs they recompute FROM are gone), and the twin makes the
-    same mistake fail loudly instead of slowly."""
-    return short_plan_twin(handle, getattr(handle, "_onebrc_twin_small", False))
-
-
 # Bounded (VERDICT r6 #7): a multi-sf_dir session holds at most two
-# persisted pair sets — the warmup and measured directories bench.py
-# legitimately alternates between; a third key evicts-and-unpersists LRU.
-from onebrc_spark.operators.memo import PersistedLRU, short_plan_twin  # noqa: E402
-
+# memoized pair sets — the warmup and measured directories bench.py
+# legitimately alternates between; a third key evicts and releases the LRU.
 _MINHASH_PAIRS_CACHE = PersistedLRU(maxsize=2)
 
 
@@ -516,33 +503,21 @@ def clear_pair_cache() -> None:
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized verified near-dup pair set, UNORDERED — for consumers
     (cluster resolution, survivors, leakage-safe split) that don't need the
-    presentation sort dedup_minhash_lsh's query contract adds."""
-    handles: list[DataFrame] = []
+    presentation sort dedup_minhash_lsh's query contract adds.
 
-    def build() -> DataFrame:
-        pairs = _minhash_pairs_plan(spark, sf_dir)
-        handles.extend(pairs._onebrc_transient_handles)  # set by the plan builder
-        # coalesce before persist: the expansion union leaves 2× spread
-        # width of mostly-empty partitions, and every WARM consumer of the
-        # memo would pay that task count on each read (r9 fullsweep: the
-        # warm presentation read was +60% from partition count alone).
-        # Target = the ADAPTIVE spread width of the source (r13): a
-        # host-constant 64 here made every pair consumer (bidir union =
-        # 2x memo width) pay 128 task launches per stage to read ~2k rows.
-        out = pairs.coalesce(pairs._onebrc_spread_width)
-        out._onebrc_twin_small = pairs._onebrc_twin_small
-        return out
-
-    try:
-        # the count inside get_or_build runs while the transient persists
-        # are hot; they are released whether it succeeds or not
-        memo = _MINHASH_PAIRS_CACHE.get_or_build(
-            (spark.sparkContext.applicationId, sf_dir), build
-        )
-    finally:
-        for h in handles:
-            h.unpersist()
-    return _pairs_handout(memo)
+    Small inputs get the memo's short-plan twin (r14 — the memo's 115 KB
+    build-tree plan was re-analyzed by every consumer operation; see
+    catalog.small_for_twin for the gate's scale rationale). Consumers must
+    not hold a handed-out frame across clear_pair_cache()/eviction: a
+    released twin fails loudly on its next read."""
+    src = load_table(spark, sf_dir, "documents")
+    small = small_for_twin(src_bytes_hint(src))
+    width = spread_width(src, spark)
+    return _MINHASH_PAIRS_CACHE.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: _minhash_pairs_plan(spark, sf_dir, small, width),
+        twin=small,
+    )
 
 
 # Hot-band occupancy cap (documents per band key, counted AFTER the exact-
@@ -821,13 +796,15 @@ def _pairs_sql_from_collapsed(view: str, band_cap: int) -> str:
 
 
 def _minhash_pairs_plan(
-    spark: SparkSession, sf_dir: str, band_cap: int = _BAND_OCCUPANCY_CAP
+    spark: SparkSession, sf_dir: str, small: bool, width: int,
+    band_cap: int = _BAND_OCCUPANCY_CAP,
 ) -> DataFrame:
     """Unordered verified near-dup pairs (doc_a, doc_b, jaccard) plan:
     collapse → route out empty shingle sets → band (capped) → verify →
-    expand. The transient persist (the collapsed rows, above the
-    short-plan size gate) is exposed in `._onebrc_transient_handles` so
-    the caller can release it after materialization.
+    expand, coalesced to `width` partitions. Built inside a memo build
+    (minhash_pairs passes the source's short-plan gate `small` and spread
+    width): the collapsed rows are a checkpoint when `small`, a
+    persist_for_build frame otherwise, and the memo releases either.
 
     Equivalence to the uncollapsed oracle: empty-shingle docs only ever
     produce NULL-jaccard pairs (always dropped), so routing them out
@@ -848,8 +825,6 @@ def _minhash_pairs_plan(
     earlier but was measured to cost MORE than it saves at every SF (the
     probe is a full census job; the empty branches it prunes are
     already-broadcast no-ops)."""
-    src_tbl = load_table(spark, sf_dir, "documents")
-    width = spread_width(src_tbl, spark)
     # Generic width everywhere in the build — the dense budget was ABBA-
     # measured HERE and rejected (r14): interleaved same-JVM pairs put the
     # cold build at 1.53/1.81 s (min/med) at 128 KiB/task vs 1.70/1.88 at
@@ -858,8 +833,7 @@ def _minhash_pairs_plan(
     # returns (the contended profile that suggested otherwise had inflated
     # the compute stage ~8x). Contrast dedup_ngram_jaccard, where the
     # exact pairwise verify IS compute-bound and dense measured 0.41x.
-    small = small_for_twin(src_bytes_hint(src_tbl))
-    d = spread(src_tbl, spark)
+    d = spread(load_table(spark, sf_dir, "documents"), spark)
     slim = _minhash_slim(d)
     # ONE materialization point: the collapsed (doc_id, ws, grp_n, ids)
     # table feeds the signature path, both sides of the verification join
@@ -868,7 +842,7 @@ def _minhash_pairs_plan(
     # the dup branch near-empty) back to spread width — every downstream
     # stage over the cache would otherwise pay 2× the task overhead.
     #
-    # Small inputs take a localCheckpoint(eager) SHORT-PLAN twin instead of
+    # Small inputs take an eager checkpoint SHORT-PLAN twin instead of
     # a persist (r14, VERDICT r13 #1, guide §7.3): the collapsed tree
     # (scan + census joins + the word_3grams forest) is re-analyzed by
     # every one of its FIVE consumers, and with a persist the final pairs
@@ -880,7 +854,7 @@ def _minhash_pairs_plan(
     # is unchanged — at scale lineage-free blocks and a second copy are
     # the wrong trade (see catalog.small_for_twin).
     base = _collapsed_rows(slim, _dup_census(slim)).coalesce(width)
-    collapsed = base.localCheckpoint(eager=True) if small else base
+    collapsed = checkpoint(base, eager=True) if small else base
     # ONE spark.sql for everything past the checkpoint (r14, see
     # _pairs_sql_from_collapsed).
     out = spark.sql(
@@ -890,10 +864,16 @@ def _minhash_pairs_plan(
     # on return, and dropping a view uncaches the cached plan equal to it.
     # `out` still reads the cache — a plan is matched against cached plans
     # when it first executes, not when it is built.
-    out._onebrc_transient_handles = [] if small else [base.persist()]
-    out._onebrc_spread_width = width
-    out._onebrc_twin_small = small
-    return out
+    if not small:
+        persist_for_build(base)
+    # coalesce before the memo persists: the expansion union leaves 2×
+    # spread width of mostly-empty partitions, and every WARM consumer of
+    # the memo would pay that task count on each read (r9 fullsweep: the
+    # warm presentation read was +60% from partition count alone). Target
+    # = the ADAPTIVE spread width of the source (r13): a host-constant 64
+    # here made every pair consumer (bidir union = 2x memo width) pay 128
+    # task launches per stage to read ~2k rows.
+    return out.coalesce(width)
 
 
 # Recall-audit truth floor: within-block pairs with ANY meaningful overlap
@@ -1373,7 +1353,7 @@ def dedup_overlap_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shuffle files — measured FASTER than a persist (the
     # materialization barrier + InMemoryRelation serialization cost more
     # than the shuffle re-read at every SF tried), and nothing is left
-    # pinned in executor memory after the query (a bare .persist() here
+    # pinned in executor memory after the query (a bare persist here
     # would leak until clearCache — there is no memo/unpersist hook on
     # this query's consumption path). Every aggregated row already has
     # size(docs) ≤ cap (census contract), so no post-filter remains.

@@ -1,18 +1,17 @@
-"""Bounded memo for persisted DataFrames (VERDICT r6 hygiene item #7).
+"""The one owner of block storage: every persist and checkpoint of the
+engine goes through this module (tests/test_determinism_lint.py fails on
+a direct call elsewhere).
 
-Three operator families memoize an expensive shared asset as a
-persisted-and-materialized DataFrame keyed by (applicationId, sf_dir):
-the verified MinHash near-dup pair set (dedup.py — four consumers), the
-resolved connected-component labels (clustering.py — four consumers) and
-the IVF cell assignments (similarity.py). All three go through
-PersistedLRU.get_or_build, the one owner of get → build → persist →
-count → unpersist-on-failure → put. An unbounded dict is correct for the
-single-sf_dir sessions the driver and tests run, but a session that walks
-many sf_dirs would accumulate one persisted DataFrame per directory for
-the application lifetime. This LRU makes the bound explicit: inserting a
-key beyond `maxsize` unpersists and drops the least-recently-used entry,
-so executor storage is provably O(maxsize) no matter how many
-directories a session touches.
+Three operator families memoize a shared asset per (applicationId,
+sf_dir) through PersistedLRU.get_or_build: the MinHash near-dup pair set
+(dedup.py), the component labels (clustering.py) and the IVF cell
+assignments (similarity.py). An entry holds exactly what its handed-out
+frame reads. With `twin=True` (small inputs) that is a checkpoint twin
+taken from the counted persist; the persist and all the build stored are
+released before get_or_build returns. Otherwise it is the persist plus
+the checkpoints the build took. Eviction, clear() and a same-key replace
+release all of it without waiting for JVM GC, so executor storage is
+bounded by `maxsize` entries however many directories a session touches.
 
 maxsize defaults to 2 because that is the legitimate working set: bench.py
 re-warms every plan at the warmup SF immediately before timing it at the
@@ -26,103 +25,142 @@ Spark's generated-code cache to hold every headline class.
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from collections.abc import Callable
+from contextvars import ContextVar
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
+# (checkpoints, build persists) of the running build on this thread; set
+# and reset around each build, so a nested build owns its own frames.
+_BUILD: ContextVar[tuple[list, list] | None] = ContextVar("_BUILD", default=None)
 
-def short_plan_twin(handle: DataFrame, small: bool) -> DataFrame:
-    """Gated short-plan twin of a persisted-and-materialized memo handle
-    (r14; generalizes the r13 IVF pattern, guide §7.3 'very large plans').
 
-    The handle's logical plan is the full build tree (scan + expression
-    forest); every consumer operation re-analyzes it eagerly, which for the
-    literal-heavy dedup/similarity builds measured ~0.1-0.15 s per join on
-    the driver. When `small`, hand consumers a localCheckpoint(eager=True)
-    twin instead — its plan is ONE LogicalRDD line, and it materializes
-    from the already-persisted columnar cache (cheap second copy of a tiny
-    table). The twin rides on the handle (`_onebrc_trunc`) so the LRU's
-    eviction drops both together: the persisted original stays the source
-    of truth for storage accounting, and the twin's blocks are reclaimed by
-    the ContextCleaner once the handle is dropped. Rows are identical by
-    construction (the checkpoint IS the computed result).
+def checkpoint(df: DataFrame, *, eager: bool) -> DataFrame:
+    """A lineage-truncating checkpoint of `df`; the one place that picks
+    the storage kind (local: blocks live on the executor that computed
+    them and cannot be recomputed after executor loss).
 
-    When NOT `small` (large or unknown input — see catalog.small_for_twin)
-    the handle itself is returned: at scale a second non-replicated copy
-    and localCheckpoint's no-recompute-on-executor-loss failure mode are
-    the wrong trade for a fixed driver-side analysis cost (VERDICT r13 #2,
-    ADVICE r13)."""
-    if not small:
-        return handle
-    twin = getattr(handle, "_onebrc_trunc", None)
-    if twin is None:
-        twin = handle.localCheckpoint(eager=True)
-        handle._onebrc_trunc = twin
-    return twin
+    Inside a get_or_build build the memo entry owns the checkpoint. Outside
+    one it is a query transient, released by Spark's ContextCleaner when
+    the JVM collects the frame — the accepted failure mode, pinned by
+    tests/test_memo.py::test_query_transient_checkpoint_stays_until_gc."""
+    out = df.localCheckpoint(eager=eager)
+    build = _BUILD.get()
+    if build is not None:
+        build[0].append(out)
+    return out
+
+
+def persist_for_build(df: DataFrame) -> DataFrame:
+    """Persist `df` for the running build only: get_or_build releases it
+    once the memo entry's count is done, whether the count succeeds or not."""
+    build = _BUILD.get()
+    if build is None:
+        raise RuntimeError("persist_for_build outside a memo build")
+    build[1].append(df.persist())
+    return df
+
+
+def release(df: DataFrame) -> None:
+    """Release the blocks of a frame `checkpoint` returned or of a persisted
+    frame, without blocking. A later read of a released checkpoint fails
+    with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of returning rows."""
+    try:
+        plan = df._jdf.logicalPlan()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()
+    except Py4JError:
+        pass  # session already stopped
 
 
 class PersistedLRU:
-    """LRU of persisted DataFrames; eviction unpersists."""
+    """LRU of memo entries; eviction releases what the entry holds."""
 
     def __init__(self, maxsize: int = 2) -> None:
         if maxsize < 1:
             raise ValueError("maxsize must be >= 1")
         self._maxsize = maxsize
-        self._data: OrderedDict[object, DataFrame] = OrderedDict()
+        # key -> [handed-out frame, *frames its lineage reads]
+        self._data: OrderedDict[object, list[DataFrame]] = OrderedDict()
+        self._lock = threading.RLock()
 
     def get(self, key: object) -> DataFrame | None:
-        df = self._data.get(key)
-        if df is not None:
+        with self._lock:
+            entry = self._data.get(key)
+            if entry is None:
+                return None
             self._data.move_to_end(key)
-        return df
+            return entry[0]
 
-    def get_or_build(self, key: object, build: Callable[[], DataFrame]) -> DataFrame:
+    def get_or_build(
+        self, key: object, build: Callable[[], DataFrame], *, twin: bool = False
+    ) -> DataFrame:
         """The memo entry for `key`, or build(): persisted, materialized with
-        one count() and stored under `key`. A failed or cancelled count
-        unpersists the fresh frame instead of leaving it persisted where no
-        clear hook can reach it."""
-        df = self.get(key)
-        if df is not None:
-            return df
-        df = build().persist()
+        one count() and stored under `key` (see the module docstring for
+        what the entry holds). A failed or cancelled build releases all it
+        stored. When two threads build one key, the first to store wins and
+        the other releases its own build and returns the winner's frame."""
+        hit = self.get(key)
+        if hit is not None:
+            return hit
+        checkpoints: list[DataFrame] = []
+        scratch: list[DataFrame] = []
+        token = _BUILD.set((checkpoints, scratch))
+        held = checkpoints
         try:
+            df = build().persist()
+            held = [df, *checkpoints]
             df.count()
+            if twin:
+                out = checkpoint(df, eager=True)
+                for f in held:
+                    release(f)
+                held = [out]
         except BaseException:
-            df.unpersist()
+            for f in held:
+                release(f)
             raise
-        self.put(key, df)
-        return df
+        finally:
+            _BUILD.reset(token)
+            for f in scratch:
+                release(f)
+        with self._lock:
+            winner = self.get(key)
+            if winner is None:
+                self.put(key, *held)
+                return held[0]
+        for f in held:
+            release(f)
+        return winner
 
-    def put(self, key: object, df: DataFrame) -> None:
-        if key in self._data:
-            # same-key replace must release the displaced DataFrame, or it
-            # stays persisted outside any cache forever — the exact leak
-            # class this memo exists to prevent
-            old = self._data[key]
-            if old is not df:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass  # session already stopped
-            self._data.move_to_end(key)
-            self._data[key] = df
-            return
-        while len(self._data) >= self._maxsize:
-            _, old = self._data.popitem(last=False)
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # session already stopped
-        self._data[key] = df
+    def put(self, key: object, df: DataFrame, *held: DataFrame) -> None:
+        """Store `df` under `key`, holding `held` with it until the entry
+        goes. A same-key replace releases what the displaced entry held."""
+        entry = [df, *held]
+        with self._lock:
+            old = self._data.pop(key, None)
+            if old is not None:
+                # a displaced frame must be released, or it stays stored
+                # outside any cache forever
+                for f in old:
+                    if not any(f is g for g in entry):
+                        release(f)
+            while len(self._data) >= self._maxsize:
+                for f in self._data.popitem(last=False)[1]:
+                    release(f)
+            self._data[key] = entry
 
     def clear(self) -> None:
-        for df in self._data.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
-        self._data.clear()
+        with self._lock:
+            for entry in self._data.values():
+                for f in entry:
+                    release(f)
+            self._data.clear()
 
     def __len__(self) -> int:
         return len(self._data)

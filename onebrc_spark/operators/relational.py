@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from onebrc_spark.operators.aggregates import half_away_long
+from onebrc_spark.operators.memo import checkpoint
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -599,11 +600,8 @@ def global_row_number(
     # paid a separate materialization action per call. Both the counts job
     # and the rank query read the SAME pinned blocks, so the one-placement
     # determinism contract is unchanged (see sort_global_dense_ids).
-    t = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("_gid_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
+    ranged = df.repartitionByRange(num_partitions, *order)
+    t = checkpoint(ranged.withColumn("_gid_pid", F.spark_partition_id()), eager=False)
     counts = sorted(
         t.groupBy("_gid_pid").count().collect(), key=lambda r: r["_gid_pid"]
     )

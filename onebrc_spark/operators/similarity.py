@@ -978,7 +978,7 @@ def _ivf_trained_sql() -> str:
 # more fixture dir in a pytest session; at 4, a sweep touching both kinds
 # at two dirs already filled every slot and any extra dir evicted a
 # still-useful cell table.
-from onebrc_spark.operators.memo import PersistedLRU, short_plan_twin  # noqa: E402
+from onebrc_spark.operators.memo import PersistedLRU  # noqa: E402
 
 _IVF_CELLED_CACHE = PersistedLRU(maxsize=6)
 
@@ -992,7 +992,7 @@ def clear_ivf_cache() -> None:
 def _memoized_celled(cache_key: tuple, build, small: bool) -> DataFrame:
     """Materialize-and-memoize a cell-assignment frame: the persisted,
     counted cell table IS the IVF index build (PersistedLRU.get_or_build
-    owns the persist/count/unpersist-on-failure lifecycle).
+    owns its storage and releases it on eviction).
 
     Consumers get the gated short-plan twin of the memo entry (r13
     optimization round, guide §1.2 step 2 / §7.3 'very large plans'): the
@@ -1008,9 +1008,8 @@ def _memoized_celled(cache_key: tuple, build, small: bool) -> DataFrame:
     mode are only taken when `small` (catalog.small_for_twin over the
     embeddings scan's size hint); above the gate (or when the size is
     unknown) consumers get the persisted original, whose re-analysis cost
-    is fixed and amortized at scale. Mechanics and lifecycle live in
-    memo.short_plan_twin; gate pinned in tests/test_memo.py."""
-    return short_plan_twin(_IVF_CELLED_CACHE.get_or_build(cache_key, build), small)
+    is fixed and amortized at scale. Gate pinned in tests/test_memo.py."""
+    return _IVF_CELLED_CACHE.get_or_build(cache_key, build, twin=small)
 
 
 def _ivf_probe2_audit(
@@ -1025,9 +1024,9 @@ def _ivf_probe2_audit(
     the r8 form localCheckpointed the assignment per CALL and never
     released it, so repeated builds (timed bench sweeps) accumulated
     checkpointed RDDs until driver GC. The memo bounds live copies AND
-    makes rebuilds a cache hit; eviction unpersists safely because persist
-    (unlike localCheckpoint) keeps lineage, so a stale evicted handle can
-    recompute instead of crashing."""
+    makes rebuilds a cache hit. Eviction releases the entry: a small
+    input's twin held across it fails loudly on its next read (a
+    checkpoint cannot recompute), a persisted original recomputes."""
     # coalesce(cos, -2) totalizes the argmax for zero-norm vectors (same
     # sentinel as _kmeans_fit_local — matches the oracle's row_number
     # tie-break: cell 1, then cell 2). One F.expr for all 8 cosines (r13): the

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onebrc_spark.operators.eventtime import _sum_value_exact
+from onebrc_spark.operators.memo import checkpoint, release
 from onebrc_spark.sources import catalog
 
 
@@ -204,8 +205,9 @@ def stream_foreach_batch_upsert(events: DataFrame, target_dir: str) -> None:
             merged = batch_df
         # Materialize BEFORE overwriting the path we just read from —
         # otherwise the lazy plan would scan a target it is deleting.
-        merged = merged.localCheckpoint(eager=True)
+        merged = checkpoint(merged, eager=True)
         merged.write.mode("overwrite").parquet(target_dir)
+        release(merged)
 
     q = (
         totals.writeStream.outputMode("update")
@@ -302,8 +304,9 @@ def stream_cms_fold(docs: DataFrame, target_dir: str) -> None:
                 raise
             merged = delta
         # Materialize BEFORE overwriting the path we just read from.
-        merged = merged.localCheckpoint(eager=True)
+        merged = checkpoint(merged, eager=True)
         merged.write.mode("overwrite").parquet(target_dir)
+        release(merged)
 
     q = (
         docs.writeStream.foreachBatch(fold_batch)
@@ -512,8 +515,9 @@ def scd2_merge_batch(batch_df: DataFrame, target_dir: str) -> None:
         result = closed.unionByName(renumbered).unionByName(open_rest)
 
     # Materialize BEFORE overwriting the path we just read from.
-    result = result.localCheckpoint(eager=True)
+    result = checkpoint(result, eager=True)
     result.write.mode("overwrite").parquet(target_dir)
+    release(result)
 
 
 def stream_scd2_maintain(changes: DataFrame, target_dir: str) -> None:

@@ -6,14 +6,28 @@ arguments. Each call registers a uniquely named view and drops it afterwards,
 so builds running at the same time on one session cannot read each other's
 input, and no view outlives its build. The UDTF chunker calls its table
 function through a lateral join instead of registering it under a name.
+Two threads cold-building one memo key store one entry between them.
 """
 
 from __future__ import annotations
 
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from onebrc_spark import registry
-from onebrc_spark.operators.dedup import _minhash_pairs_plan
+from onebrc_spark.operators.dedup import (
+    _MINHASH_PAIRS_CACHE,
+    _minhash_pairs_plan,
+    clear_pair_cache,
+    minhash_pairs,
+)
+from onebrc_spark.operators.memo import PersistedLRU
+from onebrc_spark.sources.catalog import (
+    load_table,
+    small_for_twin,
+    spread_width,
+    src_bytes_hint,
+)
 from tests.conftest import SF_DIR, SMOKE_SF_DIR
 
 ALL = registry.load_all()
@@ -31,16 +45,25 @@ def _rows(df) -> list[tuple]:
 
 
 def _build(spark, name, sf_dir):
-    """Collected rows of one build; the cold pair build (the memo's
-    producer) releases its transient handles as dedup_minhash_lsh does."""
+    """Collected rows of one build. The pair build is the memo's cold build
+    into a private memo, so no other build can hit or release it."""
     if name != "minhash_pairs":
         return _rows(ALL[name].fn(spark, sf_dir))
-    out = _minhash_pairs_plan(spark, sf_dir)
+    src = load_table(spark, sf_dir, "documents")
+    small = small_for_twin(src_bytes_hint(src))
+    memo = PersistedLRU()
     try:
-        return _rows(out)
+        return _rows(
+            memo.get_or_build(
+                sf_dir,
+                lambda: _minhash_pairs_plan(
+                    spark, sf_dir, small, spread_width(src, spark)
+                ),
+                twin=small,
+            )
+        )
     finally:
-        for h in out._onebrc_transient_handles:
-            h.unpersist()
+        memo.clear()
 
 
 def test_concurrent_builds_match_serial_and_leave_no_views(spark):
@@ -68,3 +91,41 @@ def test_concurrent_builds_match_serial_and_leave_no_views(spark):
     assert not left, left
     functions = {f.name for f in session.catalog.listFunctions()} - builtins
     assert not functions, functions
+
+
+def test_same_key_cold_builds_store_one_entry(spark, monkeypatch):
+    """Two threads cold-build the memoized pair set of one sf_dir at once
+    (a barrier holds each build until both have missed the memo). Both
+    get the serial rows; the first build to store its entry wins and the
+    other releases its own build, so exactly one entry's RDD (the small
+    input's twin) stays stored."""
+    from onebrc_spark.operators import dedup
+
+    sc = spark.sparkContext
+
+    def stored() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    clear_pair_cache()
+    serial = _rows(minhash_pairs(spark, SMOKE_SF_DIR))
+    clear_pair_cache()
+    both_missed = threading.Barrier(2, timeout=60)
+
+    def plan(*args):
+        both_missed.wait()
+        return _minhash_pairs_plan(*args)
+
+    monkeypatch.setattr(dedup, "_minhash_pairs_plan", plan)
+    before = stored()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(lambda: _rows(minhash_pairs(spark, SMOKE_SF_DIR)))
+            for _ in range(2)
+        ]
+        results = [f.result(timeout=600) for f in futures]
+    assert results == [serial, serial]
+    assert len(_MINHASH_PAIRS_CACHE) == 1
+    added = stored() - before
+    assert len(added) == 1, added
+    clear_pair_cache()
+    assert not stored() - before

@@ -237,26 +237,41 @@ def test_minhash_pairs_memoized_without_persist_leak(spark):
 
 
 def test_large_input_pair_build_reads_its_collapsed_persist(spark, monkeypatch):
-    """Above the short-plan size gate the pair build persists the collapsed
-    rows and hands them to spark.sql as an argument. spark.sql drops that
-    argument's temp view after the call, and dropping a view uncaches a
-    cached plan equal to it; the persist must survive the call, and the
-    pair plan must read it instead of recomputing the collapse."""
+    """Above the short-plan size gate (`small` False) the pair build
+    persists the collapsed rows and hands them to spark.sql as an
+    argument. spark.sql drops that argument's temp view after the call,
+    and dropping a view uncaches a cached plan equal to it; the persist
+    must survive the call, and the pair plan must read it instead of
+    recomputing the collapse."""
     from pyspark import StorageLevel
 
     from onebrc_spark.operators import dedup
     from onebrc_spark.plans import explain_str
     from tests.conftest import SMOKE_SF_DIR
 
-    monkeypatch.setattr(dedup, "small_for_twin", lambda _: False)
-    out = dedup._minhash_pairs_plan(spark, SMOKE_SF_DIR)
-    (collapsed,) = out._onebrc_transient_handles
-    try:
+    from onebrc_spark.operators.memo import PersistedLRU, persist_for_build
+
+    held = []
+
+    def spy(df):
+        held.append(df)
+        return persist_for_build(df)
+
+    def build():
+        out = dedup._minhash_pairs_plan(spark, SMOKE_SF_DIR, False, 4)
+        (collapsed,) = held
         assert collapsed.storageLevel != StorageLevel.NONE
         assert "InMemoryTableScan" in explain_str(out)
-        assert out.count() > 0
+        return out
+
+    monkeypatch.setattr(dedup, "persist_for_build", spy)
+    memo = PersistedLRU()
+    try:
+        assert memo.get_or_build("large", build).count() > 0
+        # the memo releases the build's persist once the entry is counted
+        assert held[0].storageLevel == StorageLevel.NONE
     finally:
-        collapsed.unpersist()
+        memo.clear()
 
 
 def test_incremental_rejections_gates_and_asymmetry(spark):

@@ -392,6 +392,36 @@ def test_no_registered_functions_in_operators():
     )
 
 
+_STORAGE_CALL = re.compile(r"\.(?:persist|cache|localCheckpoint|checkpoint|unpersist)\(")
+
+
+def _storage_call_sites(source: str) -> list[int]:
+    """Line numbers of every direct persist/cache/checkpoint/unpersist call."""
+    return [
+        source.count("\n", 0, m.start()) + 1 for m in _STORAGE_CALL.finditer(source)
+    ]
+
+
+def test_storage_calls_only_in_memo():
+    """operators/memo.py is the one owner of block storage: memo entries
+    release what their builds store, and `memo.checkpoint` is the one
+    place that picks the storage kind. A direct call elsewhere stores
+    blocks that only JVM GC would release."""
+    memo = SRC / "operators" / "memo.py"
+    assert _storage_call_sites(memo.read_text())
+    violations = [
+        f"{path.relative_to(SRC.parent)}:{line}"
+        for path in sorted(SRC.rglob("*.py"))
+        if path != memo
+        for line in _storage_call_sites(path.read_text())
+    ]
+    assert not violations, (
+        "persist/cache/checkpoint/unpersist outside operators/memo.py — use "
+        "memo.checkpoint, memo.persist_for_build or a PersistedLRU:\n"
+        + "\n".join(violations)
+    )
+
+
 def test_temp_view_and_band_key_lint_shapes():
     """The scanners flag their regrowth shapes and pass the allowed ones."""
     assert _temp_view_sites('docs.createOrReplaceTempView("_v")\n') == [1]
@@ -400,6 +430,11 @@ def test_temp_view_and_band_key_lint_shapes():
     for kind in ("udf", "udtf"):
         assert _function_registration_sites(f"x = 1\nspark.{kind}.register(n, f)\n") == [2]
     assert not _function_registration_sites("d.lateralJoin(C(F.col('x').outer()))\n")
+    for call in ("persist()", "cache()", "localCheckpoint(eager=False)",
+                 "checkpoint()", "unpersist(False)"):
+        assert _storage_call_sites(f"x = 1\ny = df.{call}\n") == [2]
+    assert not _storage_call_sites("t = checkpoint(df, eager=False)\n")
+    assert not _storage_call_sites("persist_for_build(df)\nrelease(df)\n")
     assert _band_key_sites('k = f"xxhash64(0, element_at(sig, 1))"\n') == [1]
     assert _band_key_sites('k = F.element_at(F.col("sig"), 2)\n') == [1]
     assert _band_key_sites('b = F.slice(F.col("sig"), 1, 3)\n') == [1]

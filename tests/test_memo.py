@@ -1,7 +1,11 @@
 """PersistedLRU: the bounded memo behind the pair-set / component-label
 caches (VERDICT r6 #7). Pins the one property that matters: a session that
-walks more sf_dirs than `maxsize` unpersists the evicted DataFrames, so
-executor storage is O(maxsize), never O(#directories)."""
+walks more sf_dirs than `maxsize` releases what the evicted entries hold,
+so executor storage is O(maxsize), never O(#directories).
+
+Stored RDDs are read from SparkContext.getPersistentRDDs, which changes
+synchronously with persist, checkpoint and release; no test here waits for
+or triggers GC."""
 
 from __future__ import annotations
 
@@ -10,11 +14,22 @@ import os
 import pytest
 from pyspark import StorageLevel
 
-from onebrc_spark.operators.memo import PersistedLRU
+from onebrc_spark.operators.memo import PersistedLRU, checkpoint, persist_for_build
+from tests.conftest import SMOKE_SF_DIR
 
 
 def _persisted(df) -> bool:
     return df.storageLevel != StorageLevel.NONE
+
+
+def _stored(spark) -> set[int]:
+    """Ids of every RDD in block storage (persists and checkpoints)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _rdd_id(df) -> int:
+    """The block-storage RDD id behind a frame `checkpoint` returned."""
+    return df._jdf.logicalPlan().rdd().id()
 
 
 def test_lru_evicts_and_unpersists_on_capacity(spark):
@@ -81,6 +96,134 @@ def test_get_or_build_persists_once_and_releases_a_failed_build(spark):
     assert "bad" not in lru
     assert not _persisted(failed[0]), "failed build must be unpersisted"
     lru.clear()
+
+
+def test_entry_owns_build_checkpoints_and_drops_build_persists(spark):
+    """A build's checkpoints stay with its entry (the persisted result's
+    lineage reads them) until the entry goes; a persist_for_build frame is
+    released once the count is done; a nested build owns its own frames,
+    and its twin entry holds the twin alone."""
+    lru, inner_lru = PersistedLRU(maxsize=2), PersistedLRU(maxsize=2)
+    made = {}
+
+    def inner():
+        made["inner_ckpt"] = checkpoint(spark.range(5), eager=False)
+        return made["inner_ckpt"].selectExpr("id + 100 AS id")
+
+    def build():
+        made["ckpt"] = checkpoint(spark.range(7), eager=False)
+        made["scratch"] = persist_for_build(spark.range(9))
+        made["nested"] = inner_lru.get_or_build("n", inner, twin=True)
+        return made["ckpt"].union(made["nested"])
+
+    out = lru.get_or_build("k", build)
+    assert out.count() == 12
+    stored = _stored(spark)
+    assert _persisted(out) and _rdd_id(made["ckpt"]) in stored
+    assert not _persisted(made["scratch"])
+    assert _rdd_id(made["inner_ckpt"]) not in stored
+    assert _rdd_id(made["nested"]) in stored
+    lru.clear()
+    stored = _stored(spark)
+    assert not _persisted(out) and _rdd_id(made["ckpt"]) not in stored
+    assert _rdd_id(made["nested"]) in stored, "owned by the inner memo"
+    inner_lru.clear()
+    assert _rdd_id(made["nested"]) not in _stored(spark)
+    with pytest.raises(RuntimeError):
+        persist_for_build(spark.range(1))
+
+
+def test_get_or_build_under_contention_releases_every_build(spark):
+    """More threads than cores cold-build the same six keys at once (each
+    thread starts at a different key; even keys take the twin path), with
+    a short switch interval. The lock around check-and-put must keep every
+    build either stored or released: each key ends with one entry, every
+    handed-out frame reads its rows, and after clear() no RDD the builds
+    stored remains. The memo is sized to hold every key: evicting a frame
+    another thread is still reading is outside the memo's contract."""
+    import itertools
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    lru = PersistedLRU(maxsize=6)
+    before = _stored(spark)
+    # a distinct literal per build keeps the builds' plans apart: Spark's
+    # cache holds one entry per plan, shared by equal plans
+    build_ids = itertools.count()
+
+    def worker(w: int) -> int:
+        n = 0
+        for i in range(6):
+            k = (w + i) % 6
+            n += lru.get_or_build(
+                k,
+                lambda: spark.range(k + 1).selectExpr(f"id + {next(build_ids)}"),
+                twin=k % 2 == 0,
+            ).count()
+        return n
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(worker, w) for w in range(8)]
+            counts = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert counts == [21] * 8
+    assert len(lru) == 6
+    lru.clear()
+    left = _stored(spark) - before
+    assert not left, left
+
+
+def test_memo_builds_leave_only_their_entries_stored(spark):
+    """Cold builds of the three memo users (MinHash pairs, component labels,
+    sampled IVF cells), twice, with the clear hooks between: the small pair
+    entry is one stored RDD (its twin), and after the clears no RDD the
+    builds stored remains. The releases do not depend on GC timing, so
+    the test neither triggers GC nor waits."""
+    from onebrc_spark.operators import similarity as sim
+    from onebrc_spark.operators.clustering import (
+        clear_components_cache,
+        cluster_labels,
+    )
+    from onebrc_spark.operators.dedup import clear_pair_cache, minhash_pairs
+
+    def clear():
+        clear_pair_cache()
+        clear_components_cache()
+        sim.clear_ivf_cache()
+
+    clear()
+    for _ in range(2):
+        before = _stored(spark)
+        minhash_pairs(spark, SMOKE_SF_DIR).count()
+        added = _stored(spark) - before
+        assert len(added) == 1, added
+        cluster_labels(spark, SMOKE_SF_DIR).count()
+        sim.sim_ann_ivf_sampled(spark, SMOKE_SF_DIR).count()
+        assert len(_stored(spark) - before) > 1
+        clear()
+        left = _stored(spark) - before
+        assert not left, left
+
+
+def test_query_transient_checkpoint_stays_until_gc(spark):
+    """The accepted failure mode of memo.checkpoint: outside a memo build
+    a checkpoint is a query transient that no entry owns, released only
+    by Spark's ContextCleaner after the JVM collects the query's frame.
+    Building text_boilerplate_segments stores exactly one RDD (its lazy
+    checkpoint of the segment stream registers when it is built), and it
+    is still stored after the query has run."""
+    from onebrc_spark.operators.curation import text_boilerplate_segments
+
+    before = _stored(spark)
+    df = text_boilerplate_segments(spark, SMOKE_SF_DIR)
+    added = _stored(spark) - before
+    assert len(added) == 1, added
+    df.collect()
+    assert added <= _stored(spark)
 
 
 def test_operator_caches_are_bounded():
@@ -164,7 +307,7 @@ def test_register_views_memo_is_weak_per_session_object(spark):
     catalog._VIEWS_REGISTERED.clear()
 
 
-def test_ivf_celled_memo_returns_short_plan_twin(spark):
+def test_ivf_celled_memo_returns_twin(spark):
     """r13 optimization: _memoized_celled hands consumers a localCheckpoint
     twin (LogicalRDD plan) of the persisted cell table, so the audit
     assembly stops re-analyzing the K x dim inline-literal cosine tree on
@@ -204,13 +347,14 @@ def test_ivf_celled_memo_returns_short_plan_twin(spark):
     plan = first._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan[:500]
     assert sorted(map(tuple, first.collect())) == sorted(map(tuple, plain))
-    # the persisted original (storage-accounted LRU value) carries the twin
-    persisted = sim._IVF_CELLED_CACHE.get(key)
-    assert persisted._onebrc_trunc is first
-    sim._IVF_CELLED_CACHE.put(key, persisted)  # leave cache consistent
+    # the entry is the twin alone: the persisted original it was taken
+    # from is already released
+    assert sim._IVF_CELLED_CACHE.get(key) is first
+    assert len(sim._IVF_CELLED_CACHE._data[key]) == 1
+    assert _rdd_id(first) in _stored(spark)
 
 
-def test_short_plan_twin_is_size_gated(spark):
+def test_twin_is_size_gated(spark):
     """r14 (VERDICT r13 #2, ADVICE r13): the localCheckpoint twin
     materializes a second non-replicated copy and truncates lineage, which
     is only scale-safe for small inputs. Pins: (a) small=False hands back
@@ -219,7 +363,6 @@ def test_short_plan_twin_is_size_gated(spark):
     IVF path twins at the test SFs (hint present, far under the gate) —
     so the r13 speedup is preserved where it was measured."""
     from onebrc_spark.operators import similarity as sim
-    from onebrc_spark.operators.memo import short_plan_twin
     from onebrc_spark.sources import catalog
 
     sf_dir = "/root/testdata/sf0.001"
@@ -241,12 +384,11 @@ def test_short_plan_twin_is_size_gated(spark):
     big = sim._memoized_celled(key, build, small=False)
     persisted = sim._IVF_CELLED_CACHE.get(key)
     assert big is persisted, "small=False must hand out the persisted original"
+    assert _persisted(big)
     plan = big._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan[:500]
-    assert getattr(persisted, "_onebrc_trunc", None) is None
-    # generic helper agrees
-    assert short_plan_twin(big, False) is big
-    sim._IVF_CELLED_CACHE.put(key, persisted)  # leave cache consistent
+    # the build took no checkpoint, so the entry holds the persist alone
+    assert len(sim._IVF_CELLED_CACHE._data[key]) == 1
 
 
 def test_load_table_handle_memo(spark, tmp_path):

@@ -179,7 +179,9 @@ def test_stream_incremental_admission_matches_batch_gate(spark):
 def test_stream_cms_fold_converges_to_batch_sketch(spark, tmp_path):
     """Folding per-micro-batch count-min sketches (cell-wise sum) over a
     3-file stream must converge to the whole-corpus batch sketch — the
-    mergeability claim executed under the streaming engine."""
+    mergeability claim executed under the streaming engine. Each batch
+    releases its checkpoint of the merged state after writing it, so no
+    RDD the batches stored remains (read without GC or waiting)."""
     from onebrc_spark.operators.aggregates import cms_cells
     from onebrc_spark.streaming.pipelines import stream_cms_fold
 
@@ -193,7 +195,11 @@ def test_stream_cms_fold_converges_to_batch_sketch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
     stream_cms_fold(stream, target)
+    left = set(sc._jsc.getPersistentRDDs().keys()) - before
+    assert not left, left
 
     got = {
         (r["d"], r["bucket"]): r["cell"]
