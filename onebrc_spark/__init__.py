@@ -13,7 +13,6 @@ Package layout (SURVEY §7.0):
     operators/ — aggregates, joins, windows, setops, eventtime, dedup,
                  similarity, textops, multimodal
     functions/ — scalar/array/JSON expression helpers
-    plans/     — plan inspection utilities (explain, shuffle counting)
     streaming/ — Structured Streaming wrappers over the batch operators
     registry   — the (query, oracle_sql) catalog consumed by __spark_entry__
 """

@@ -79,7 +79,16 @@ def release(df: DataFrame) -> None:
 
 
 class PersistedLRU:
-    """LRU of memo entries; eviction releases what the entry holds."""
+    """LRU of memo entries; eviction releases what the entry holds.
+
+    Accepted failure mode: releasing an entry (eviction, clear() or a
+    same-key replace) while a query over its frame is already planned. A
+    persisted entry's query still runs, and Spark's CachedRDDBuilder
+    stores the released buffers again as an RDD no entry owns, freed only
+    by the ContextCleaner; a twin entry's query fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Size a memo to hold every key
+    readers use at once. Pinned by
+    tests/test_memo.py::test_release_under_a_planned_reader."""
 
     def __init__(self, maxsize: int = 2) -> None:
         if maxsize < 1:

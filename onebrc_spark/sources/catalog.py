@@ -222,10 +222,6 @@ def finite_vector_or_null(c: Column) -> Column:
     return F.when(bad, F.lit(None).cast("array<float>")).otherwise(c)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 # Per-task byte budget for the compute fan-out (r13 optimization round,
 # guide §2.2/§2.5): sizes the spread width from the INPUT, not from the
 # host. Estimated source bytes per spread partition.

@@ -246,8 +246,8 @@ def test_large_input_pair_build_reads_its_collapsed_persist(spark, monkeypatch):
     from pyspark import StorageLevel
 
     from onebrc_spark.operators import dedup
-    from onebrc_spark.plans import explain_str
     from tests.conftest import SMOKE_SF_DIR
+    from tests.plan_text import explain_str
 
     from onebrc_spark.operators.memo import PersistedLRU, persist_for_build
 

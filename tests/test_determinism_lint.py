@@ -461,16 +461,19 @@ _TEST_ONLY_KEPT = {
 _IDENTIFIER = re.compile(r"[A-Za-z_]\w*\Z")
 
 
-def _references(source: str) -> list[tuple[str, int]]:
+def _references(source: str, *, package_init: bool = False) -> list[tuple[str, int]]:
     """(identifier, line) for every name, attribute, imported name and
     identifier-shaped string constant (a getattr or registry lookup by
-    name) in `source`."""
+    name) in `source`. In a package __init__.py the imported names and
+    strings (`__all__`) are re-exports: they reach nothing."""
     refs = []
     for node in ast.walk(ast.parse(source)):
         if isinstance(node, ast.Name):
             refs.append((node.id, node.lineno))
         elif isinstance(node, ast.Attribute):
             refs.append((node.attr, node.lineno))
+        elif package_init:
+            continue
         elif isinstance(node, ast.ImportFrom):
             refs += [(a.name, node.lineno) for a in node.names]
         elif (
@@ -508,7 +511,8 @@ def _unreached(
     where: dict[str, list[tuple[str, int]]] = {}
     for group, files in (("product", {**engine, **reachers}), ("tests", tests)):
         for path, source in files.items():
-            for name, line in _references(source):
+            init = path.endswith("__init__.py")
+            for name, line in _references(source, package_init=init):
                 where.setdefault(name, []).append((group, path, line))
     out = []
     for path, source in sorted(engine.items()):
@@ -565,9 +569,9 @@ def test_every_engine_definition_is_reached():
 
 def test_unreached_lint_shapes():
     """A definition nothing references and one only a test references
-    fail, and so does one that only references itself; one a sibling
-    module references passes, as do a registered query and a streaming
-    twin that only a test drives."""
+    fail, and so do one that only references itself and one a package
+    __init__ only re-exports; one a sibling module references passes, as
+    do a registered query and a streaming twin that only a test drives."""
     engine = {
         "operators/a.py": (
             "def dead():\n    return 1\n\n\n"
@@ -599,3 +603,20 @@ def test_unreached_lint_shapes():
         "operators/a.py::recursive: referenced nowhere",
         "streaming/pipelines.py::stream_orphan: referenced nowhere",
     ]
+    # a package re-export reaches nothing; a call in a package __init__ does
+    engine["operators/c.py"] = "def reexported():\n    return 5\n"
+    engine["operators/__init__.py"] = (
+        "from onebrc_spark.operators.c import reexported\n\n"
+        '__all__ = ["reexported"]\n'
+    )
+    assert _unreached(engine, {}, tests) == [
+        "operators/a.py::dead: referenced nowhere",
+        "operators/a.py::test_only: referenced only by tests",
+        "operators/a.py::recursive: referenced nowhere",
+        "operators/c.py::reexported: referenced nowhere",
+        "streaming/pipelines.py::stream_orphan: referenced nowhere",
+    ]
+    engine["operators/__init__.py"] += "DEFAULT = reexported()\n"
+    assert "operators/c.py::reexported: referenced nowhere" not in _unreached(
+        engine, {}, tests
+    )

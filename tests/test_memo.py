@@ -226,6 +226,33 @@ def test_query_transient_checkpoint_stays_until_gc(spark):
     assert added <= _stored(spark)
 
 
+@pytest.mark.parametrize("twin", [False, True])
+def test_release_under_a_planned_reader(spark, twin):
+    """The accepted failure mode of PersistedLRU (its docstring): releasing
+    an entry while a query over its frame is already planned. A persisted
+    entry's query still runs, and Spark stores the released cache buffers
+    again as an RDD no entry owns; a twin entry's query fails instead."""
+    lru = PersistedLRU(maxsize=2)
+    frame = lru.get_or_build(
+        "k", lambda: spark.range(40).selectExpr("id % 4 AS g", "id"), twin=twin
+    )
+    query = frame.groupBy("g").count()
+    query._jdf.queryExecution().executedPlan()  # planned over the entry
+    lru.clear()
+    before = _stored(spark)
+    if twin:
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            query.collect()
+        assert _stored(spark) == before
+        return
+    assert sorted(query.collect()) == [(g, 10) for g in range(4)]
+    unowned = _stored(spark) - before
+    assert len(unowned) == 1, unowned
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in unowned:
+        rdds.get(rdd_id).unpersist(False)
+
+
 def test_operator_caches_are_bounded():
     """The two production memos carry the documented 2-entry bound (the
     bench warmup + measured directories — see memo.py's module docstring)."""

@@ -4,20 +4,56 @@ relies on must hold, not just be intended.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from onebrc_spark.operators.aggregates import onebrc_flagship
 from onebrc_spark.operators.joins import join_broadcast_dims
 from onebrc_spark.operators.relational import project_prune, topk_limit
-from onebrc_spark.plans import (
-    explain_str,
-    has_broadcast_join,
-    num_exchanges,
-    pushed_filters,
-    read_schema_columns,
-)
 from onebrc_spark.sources.catalog import load_table
 from tests.conftest import SMOKE_SF_DIR
+from tests.plan_text import explain_str, num_exchanges
+
+
+def pushed_filters(df) -> list[str]:
+    """PushedFilters lists from every parquet scan node in the plan."""
+    return re.findall(r"PushedFilters: \[([^\]]*)\]", explain_str(df))
+
+
+def read_schema_columns(df) -> list[list[str]]:
+    """Column names in each scan's ReadSchema (column-pruning witness)."""
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", explain_str(df))
+    return [
+        [c.split(":")[0].strip() for c in s.split(",") if c.strip()] for s in schemas
+    ]
+
+
+def has_broadcast_join(df) -> bool:
+    txt = explain_str(df)
+    return "BroadcastHashJoin" in txt or "BroadcastNestedLoopJoin" in txt
+
+
+def test_explain_str_is_thread_safe(spark):
+    """Threads reading plan text at once each get their own frame's plan,
+    and sys.stdout is left as it was: the text comes from the JVM, not
+    from a redirected process-wide stdout."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    frames = [spark.range(3).selectExpr(f"id + {i} AS col_{i}") for i in range(6)]
+    stdout = sys.stdout
+
+    def read(i: int) -> list[str]:
+        return [explain_str(frames[i]) for _ in range(5)]
+
+    with ThreadPoolExecutor(max_workers=6) as pool:
+        texts = list(pool.map(read, range(6), timeout=300))
+    assert sys.stdout is stdout
+    for i, plans in enumerate(texts):
+        for txt in plans:
+            cols = set(re.findall(r"\bcol_(\d)\b", txt))
+            assert cols == {str(i)}, (i, txt)
 
 
 def test_flagship_is_partial_final_hashagg_one_exchange(spark):
